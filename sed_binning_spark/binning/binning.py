@@ -20,9 +20,11 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
 import uuid
 import warnings
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 import numpy as np
@@ -51,11 +53,11 @@ _DENSE_DEDUP_LIMIT = 32
 # faster than a spill round-trip (one extra Spark write job + filesystem).
 _SPILL_MIN_CELLS = 4_000_000
 
-# Below this many INPUT rows the dense-driver path skips the spill entirely:
-# the raw indices are a few MB, so one direct Arrow collect plus a sparse
-# unique-scatter into the cube beats a write job + a dense accumulator pass
-# over prod(bins) cells that only ~rows of them occupy (the sf-scale 4-D
-# regime: 1e5 rows x 1e8 cells).
+# Below this many INPUT rows the dense-driver path skips the spill and the
+# executor sort: the raw indices are a few MB, so one direct Arrow collect,
+# sorted on the driver, beats a sort + spill write job, and the kernel's
+# sparse run-length scatter touches only the ~rows occupied cells of the
+# prod(bins) cube (the sf-scale 4-D regime: 1e5 rows x 1e8 cells).
 _DENSE_SMALL_ROWS = 4_000_000
 
 # Phase timings (seconds) of the most recent bin_dataframe call, for
@@ -183,10 +185,13 @@ def bin_dataframe(
             ``"shuffle"`` — groupBy(flat index).count() + Arrow collect of
             occupied cells (the 100 TB plan: driver traffic bounded by
             prod(bins) regardless of row count);
-            ``"driver"`` — no shuffle, no aggregation: executors spill the
-            raw flat indices (parallel writers), the driver histograms them
-            with one vectorized np.bincount — the reference's dense kernel +
-            tree-sum shape (sed/binning/binning.py:374-407,
+            ``"driver"`` — no shuffle, no aggregation: executors hand the
+            raw flat indices to the driver as per-partition slices (sorted
+            + parallel parquet spill; one Arrow collect for small inputs or
+            without shared scratch), where one threaded cell-range kernel
+            histograms the sorted slices — bincounting dense ranges,
+            scattering run-lengths into sparse ones. The reference's dense
+            kernel + tree-sum shape (sed/binning/binning.py:374-407,
             sed/binning/numba_bin.py:16-71), and the right plan in the dense
             regime (occupied ~ rows), where a shuffle dedups almost nothing;
             ``"auto"`` — pick by a cheap row-count estimate (default).
@@ -278,15 +283,13 @@ def bin_dataframe(
     # without a shuffle, summed on the driver (the reference's own physical
     # shape). Only for the plain cube — the per-partition-stacked cube (A8)
     # keeps the groupBy, whose output is tiny by construction.
-    import time as _time
-
     LAST_RUN_INFO.clear()
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     if return_partitions:
         strategy, est_rows = "shuffle", None
     else:
         strategy, est_rows = _choose_combine(df, combine, n_flat)
-    LAST_RUN_INFO.update(strategy=strategy, route_s=round(_time.perf_counter() - t0, 3))
+    LAST_RUN_INFO.update(strategy=strategy, route_s=round(time.perf_counter() - t0, 3))
     if strategy == "driver":
         full = _dense_driver_histogram(df, flat, n_flat, est_rows=est_rows)
         return Cube(full.reshape(tuple(shape)), coords, dims)
@@ -316,14 +319,14 @@ def bin_dataframe(
         .count()
         .where(F.col("__flat").isNotNull() | (F.col("count") < 0))
     )
-    t1 = _time.perf_counter()
+    t1 = time.perf_counter()
     # occupied cells <= min(prod(bins), input rows): when the routing probe
     # proved the input small, the single-socket collect is cheaper than a
     # spill round-trip no matter how large the POTENTIAL cell space is
     use_spill = n_flat >= _SPILL_MIN_CELLS and (
         est_rows is None or est_rows >= _SPILL_MIN_CELLS)
     tbl = _spill_collect_arrow(agg_df) if use_spill else agg_df.toArrow()
-    LAST_RUN_INFO["agg_collect_s"] = round(_time.perf_counter() - t1, 3)
+    LAST_RUN_INFO["agg_collect_s"] = round(time.perf_counter() - t1, 3)
 
     flat_idx = tbl.column("__flat").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     counts = tbl.column("count").to_numpy(zero_copy_only=False).astype(np.float32)
@@ -533,87 +536,71 @@ def _spill_collect_arrow(df: DataFrame):
 
 def _dense_driver_histogram(df: DataFrame, flat, n_cells: int,
                             est_rows: int | None = None) -> np.ndarray:
-    """Dense-regime histogram: parallel raw-index spill + driver bincount.
+    """Dense-regime histogram: executor-sorted raw indices + one driver kernel.
 
     In the dense regime a groupBy dedups almost nothing, so the cheapest
     correct plan is to skip shuffle AND aggregation: executors compute the
-    flat bin index (pure codegen) and write it straight out with the
-    parallel parquet writers; the driver reads the column back and
-    histograms it — the flat-index accumulation of the reference kernel
-    (sed/binning/numba_bin.py:16-71) with the driver as the tree root
-    (sed/binning/binning.py:374-407). Measured at 1e8 rows x 1e8 cells:
-    ~12 s total vs ~33 s for groupBy+collect and ~30 s for mapInArrow
+    flat bin index (pure codegen), and the driver histograms its
+    partition-sorted slices with
+    :func:`_sorted_slices_histogram` — the flat-index accumulation of the
+    reference kernel (sed/binning/numba_bin.py:16-71) with the driver as the
+    tree root (sed/binning/binning.py:374-407). Measured at 1e8 rows x 1e8
+    cells: ~12 s total vs ~33 s for groupBy+collect and ~30 s for mapInArrow
     partial histograms (every plan that streams 1e8 rows through the Python
-    workers pays a ~10 s Arrow-socket floor; this one never crosses it).
+    workers pays a ~10 s Arrow-socket floor; the spill never crosses it).
     _choose_combine bounds rows (<= 2.5e8 -> <= 1 GB of int32 indices)
     before selecting this path.
 
+    The slices come from one of two sources. With a shared scratch
+    directory and more than ``_DENSE_SMALL_ROWS`` rows (or no estimate),
+    executors sort within partitions, their parallel writers spill, and
+    the driver reads one slice per file (:func:`_read_sorted_spill`).
+    Otherwise they are the chunks of one ``toArrow()`` collect — sorted by
+    the executors when there is no shared scratch (which warns), and by
+    the kernel for small inputs.
+
     NULL (out-of-range/NaN) indices are mapped to a sentinel cell
-    ``n_cells`` via one coalesce node and sliced off after the histogram: a
+    ``n_cells`` via one coalesce node, which the kernel never counts: a
     pre-agg FILTER would inline the whole flat-index expression tree into
     its condition, and a stage carrying the tree twice blows the
     whole-stage-codegen method limit (interpreted fallback: measured 92 s
     vs 6 s on the 6-step workflow chain). Sentinel instead of nullable also
-    keeps the parquet column mask-free, so the driver-side read is one
-    straight buffer concat.
+    keeps the column mask-free, so every Arrow chunk and parquet column
+    converts to numpy as a straight buffer view.
     """
-    import time as _time
-
     cell_type = "int" if n_cells + 1 <= np.iinfo(np.int32).max else "bigint"
     cell = F.coalesce(flat, F.lit(n_cells)).cast(cell_type).alias("cell")
+    spill = est_rows is None or est_rows > _DENSE_SMALL_ROWS
     sel = df.select(cell)
+    if spill:
+        # executor sort: the zstd spill shrinks ~10x on sorted indices and
+        # the driver skips sorting up to 2.5e8 values; a small input's
+        # chunks sort faster in the kernel than in one more Spark sort
+        # stage (measured 4e6 rows: 0.73 vs 0.29-0.45 s collect)
+        sel = sel.sortWithinPartitions("cell")
+    scratch = _resolve_scratch_dir(df.sparkSession) if spill else None
+    if spill and scratch is None:
+        _warn_socket_fallback()
 
-    if est_rows is not None and est_rows <= _DENSE_SMALL_ROWS:
-        # SMALL-rows dense route (rows << prod(bins), the sf-scale 4-D
-        # regime): the raw indices are at most a few MB, so one direct
-        # Arrow collect + a sparse unique-scatter into the cube skips the
-        # spill write job AND the dense accumulator pass over n_cells
-        # mostly-empty cells (measured sf0.1 workflow_4d 1.9 -> <1 s).
-        t0 = _time.perf_counter()
-        tbl = sel.toArrow()
-        t1 = _time.perf_counter()
-        col = tbl.column("cell")
-        hist = _madv_hugepage(np.zeros(n_cells, dtype=np.float32))
-        if len(col):
-            uniq, cnt = np.unique(
-                col.to_numpy(zero_copy_only=False), return_counts=True)
-            keep = uniq < n_cells  # drop the NULL/out-of-range sentinel
-            hist[uniq[keep]] = cnt[keep]
-        LAST_RUN_INFO.update(
-            small_collect_s=round(t1 - t0, 3),
-            scatter_s=round(_time.perf_counter() - t1, 3),
-        )
+    # per-call ownership of the retained buffers: take the slots out on
+    # entry, so a concurrent caller finds them empty and allocates its own
+    ws = {k: v for k in ("vals", "gather")
+          if (v := _BINCOUNT_WORKSPACE.pop(k, None)) is not None}
+    try:
+        t0 = time.perf_counter()
+        if scratch is not None:
+            dtype = np.int32 if cell_type == "int" else np.int64
+            slices = _read_sorted_spill(sel, scratch, dtype, ws)
+        else:
+            col = sel.toArrow().column("cell")
+            slices = [c.to_numpy(zero_copy_only=False) for c in col.chunks]
+            LAST_RUN_INFO["small_collect_s"] = round(time.perf_counter() - t0, 3)
+        t1 = time.perf_counter()
+        hist = _sorted_slices_histogram(slices, n_cells, ws.setdefault("gather", []))
+        LAST_RUN_INFO["bincount_s"] = round(time.perf_counter() - t1, 3)
         return hist
-
-    scratch = _resolve_scratch_dir(df.sparkSession)
-    if scratch is not None:
-        return _sorted_spill_histogram(sel, scratch, n_cells, cell_type)
-
-    # no shared scratch: single-socket Arrow collect + threaded bincount
-    _warn_socket_fallback()
-    t0 = _time.perf_counter()
-    tbl = sel.toArrow()
-    t1 = _time.perf_counter()
-    col = tbl.column("cell")
-    if len(col) == 0:
-        return np.zeros(n_cells, dtype=np.float32)
-    # sentinel keeps the chunks mask-free, so each to_numpy is a zero-copy
-    # view of the arrow buffer (a full-column concat is a fresh 400 MB
-    # allocation whose page faults cost 2-14 s beside the JVM)
-    arrays = [c.to_numpy(zero_copy_only=False) for c in col.chunks]
-    if n_cells + 1 < _VALUE_CHUNK_MAX_CELLS and len(col) >= 4_000_000:
-        hist = _value_chunked_bincount(arrays, n_cells + 1)[:n_cells].astype(np.float32)
-    else:
-        # reuse_workspace: the slice is copied by the astype immediately,
-        # so the next call overwriting the shared accumulator is safe
-        hist = _range_partitioned_bincount(
-            arrays, n_cells + 1, reuse_workspace=True,
-        )[:n_cells].astype(np.float32)
-    LAST_RUN_INFO.update(
-        spill_collect_s=round(t1 - t0, 3),
-        bincount_s=round(_time.perf_counter() - t1, 3),
-    )
-    return hist
+    finally:
+        _BINCOUNT_WORKSPACE.update(ws)
 
 
 # MADV_HUGEPAGE on big driver-side buffers: the first write to a fresh page
@@ -669,315 +656,204 @@ def _jemalloc_retain() -> None:
         pass
 
 
-def _sorted_spill_histogram(sel: DataFrame, scratch: str, n_cells: int,
-                            cell_type: str) -> np.ndarray:
-    """Parallel-spill dense histogram (the r15 form of the driver combine).
+def _read_sorted_spill(sel: DataFrame, scratch: str, dtype, ws: dict) -> list[np.ndarray]:
+    """Spill source of the dense-driver kernel: one sorted slice per file.
 
-    Executors SORT the cell indices within each partition and write them as
-    ZSTD parquet: sorted indices in the dense regime are runs of tiny
-    deltas, so the spill shrinks ~10x (measured 382 -> 36 MB at 1e8 rows x
-    1e8 cells) — and on a host whose hypervisor backs fresh guest pages
-    slowly (see ``_madv_hugepage``), tmpfs file pages are exactly the
-    allocation that cannot be madvise'd or recycled from userspace, so
-    fewer spill bytes is the only lever. The per-file driver threads then
-    read each (pre-sorted) file into one persistent MADV_HUGEPAGE'd values
-    workspace, and the histogram gives each thread a contiguous CELL range
-    whose values are located in every sorted slice by binary search — each
-    value is gathered once into a retained per-thread scratch, bincounted,
-    and the counts written straight into the final float32 cube in
-    parallel (no n_cells-sized int64 accumulator, no serial astype pass).
-    The executor sort replaces the r14 driver-side sort; its contract is
-    verified with one warm sequential pass per slice (falling back to a
-    driver sort, never to a wrong histogram). The result is order-
-    independent (a histogram) — pinned against np.bincount by tests."""
-    import time as _time
-
+    Executors write their within-partition-sorted cell indices as ZSTD
+    parquet: sorted indices in the dense regime are runs of tiny deltas, so
+    the spill shrinks ~10x (measured 382 -> 36 MB at 1e8 rows x 1e8 cells)
+    — and on a host whose hypervisor backs fresh guest pages slowly (see
+    ``_madv_hugepage``), tmpfs file pages are exactly the allocation that
+    cannot be madvise'd or recycled from userspace, so fewer spill bytes is
+    the only lever. Driver threads then read each file into the persistent
+    MADV_HUGEPAGE'd values buffer ``ws["vals"]``; the returned slices are
+    views of it, valid until the buffer's next use."""
     import pyarrow.parquet as pq
 
     _jemalloc_retain()
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     path = os.path.join(scratch, f"sed-binning-spill-{uuid.uuid4().hex}")
     try:
         (
-            sel.sortWithinPartitions("cell")
-            .write.mode("overwrite")
+            sel.write.mode("overwrite")
             .option("compression", "zstd")
             .option("parquet.enable.dictionary", "false")
             .parquet(path)
         )
-        t1 = _time.perf_counter()
+        t1 = time.perf_counter()
         files = sorted(
             os.path.join(path, f) for f in os.listdir(path)
             if f.endswith(".parquet")
         )
         metas = [pq.ParquetFile(f) for f in files]
-        counts = [m.metadata.num_rows for m in metas]
-        total = int(sum(counts))
-        if total == 0:
-            return np.zeros(n_cells, dtype=np.float32)
         offs = np.zeros(len(files) + 1, dtype=np.int64)
-        np.cumsum(counts, out=offs[1:])
-        dtype = np.int32 if cell_type == "int" else np.int64
-        buf = _BINCOUNT_WORKSPACE.get("vals")
+        np.cumsum([m.metadata.num_rows for m in metas], out=offs[1:])
+        total = int(offs[-1])
+        buf = ws.get("vals")
         if buf is None or buf.dtype != dtype or buf.size < total:
-            buf = _madv_hugepage(np.empty(total, dtype=dtype))
-            _BINCOUNT_WORKSPACE["vals"] = buf
-        buf = buf[:total]
+            buf = ws["vals"] = _madv_hugepage(np.empty(total, dtype=dtype))
 
         def _load(i: int) -> None:
-            col = metas[i].read(use_threads=False).column("cell")
             o = int(offs[i])
-            for ch in col.chunks:
+            for ch in metas[i].read(use_threads=False).column("cell").chunks:
                 a = ch.to_numpy(zero_copy_only=False)
                 buf[o:o + a.size] = a
                 o += a.size
-            s = buf[offs[i]:offs[i + 1]]
-            # executor-sort contract check: one warm sequential pass; a
-            # violation falls back to the driver radix sort, never to a
-            # wrong histogram (the range phase binary-searches the slices)
-            if s.size > 1 and not bool(np.all(s[:-1] <= s[1:])):
-                s.sort(kind="stable")
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        from sed_binning_spark.session import default_parallelism
-
-        n_threads = min(16, max(2, default_parallelism() // 2))
-        n_hist = n_cells + 1  # sentinel cell for NULL/out-of-range rows
-        hist = _madv_hugepage(np.empty(n_cells, dtype=np.float32))
-        with ThreadPoolExecutor(n_threads) as ex:
+        with ThreadPoolExecutor(_driver_threads()) as ex:
             list(ex.map(_load, range(len(files))))
-            t2 = _time.perf_counter()
-            slices = [buf[offs[i]:offs[i + 1]] for i in range(len(files))]
-            # ranges sized so the per-range bincount result stays under
-            # glibc's dynamic mmap threshold (~32 MB) and recycles from the
-            # arena free lists; the gathered values live in retained
-            # per-thread scratches, so steady-state fresh allocations per
-            # run are only the returned cube itself
-            n_ranges = max(n_threads, int(np.ceil(n_hist / 3_000_000)),
-                           int(np.ceil(total / 2_500_000)))
-            bounds = np.linspace(0, n_hist, n_ranges + 1).astype(np.int64)
-            scratches = _BINCOUNT_WORKSPACE.setdefault("gather", [])
-            while len(scratches) < n_threads:
-                scratches.append(np.empty(0, dtype=np.int64))
-            # per-thread gather scratch is capped; a range whose value
-            # count exceeds the cap (extreme skew) accumulates in pieces
-            scratch_cap = 16_000_000
-
-            def _one_range(i: int, sc: np.ndarray) -> np.ndarray:
-                lo, hi = int(bounds[i]), int(bounds[i + 1])
-                top = min(hi, n_cells)
-                spans = []
-                m = 0
-                for s in slices:
-                    a = int(np.searchsorted(s, lo, side="left"))
-                    b = int(np.searchsorted(s, hi, side="left"))
-                    if b > a:
-                        spans.append((s, a, b))
-                        m += b - a
-                if m == 0:
-                    if top > lo:
-                        hist[lo:top] = 0.0
-                    return sc
-                if sc.size < min(m, scratch_cap):
-                    sc = _madv_hugepage(
-                        np.empty(min(max(m, 4_000_000), scratch_cap),
-                                 dtype=np.int64))
-                if m <= sc.size:
-                    w = 0
-                    for s, a, b in spans:
-                        sc[w:w + (b - a)] = s[a:b]  # gather + widen, one pass
-                        w += b - a
-                    g = sc[:m]
-                    np.subtract(g, lo, out=g)
-                    cnt = np.bincount(g, minlength=hi - lo)
-                else:  # extreme skew: piece-wise accumulate
-                    cnt = np.zeros(hi - lo, dtype=np.int64)
-                    for s, a, b in spans:
-                        pos = a
-                        while pos < b:
-                            take = min(b - pos, sc.size)
-                            g = sc[:take]
-                            g[:] = s[pos:pos + take]
-                            np.subtract(g, lo, out=g)
-                            cnt += np.bincount(g, minlength=hi - lo)
-                            pos += take
-                if top > lo:
-                    hist[lo:top] = cnt[:top - lo]  # parallel cast-write
-                return sc
-
-            def _worker(j: int) -> None:
-                sc = scratches[j]
-                for i in range(j, n_ranges, n_threads):
-                    sc = _one_range(i, sc)
-                scratches[j] = sc
-
-            list(ex.map(_worker, range(n_threads)))
         LAST_RUN_INFO.update(
-            spill_collect_s=round(t2 - t0, 3),
             spill_write_s=round(t1 - t0, 3),
-            bincount_s=round(_time.perf_counter() - t2, 3),
+            spill_collect_s=round(time.perf_counter() - t0, 3),
         )
-        return hist
+        return [buf[offs[i]:offs[i + 1]] for i in range(len(files))]
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
 
-# Reused buffers for the large-cell bincount (single slot, driver-side
-# single-caller). An 800 MB np.empty is ~free to ALLOCATE but the kernel
-# then zero-faults every page on first write, and freeing returns the
-# mmap'd block so the next run faults it all over again; under memory
-# pressure (the Spark JVM + page cache share the host) those faults
-# serialize on mmap_lock and were measured turning a 0.9 s bincount into
-# 5-37 s (sys-time dominated). Retained footprint: the "vals" spill buffer
-# (rows * itemsize, <= _DENSE_ROWS_BUDGET int32 -> ~1 GB worst case), the
-# "gather" per-thread scratches (<= 16 threads x 128 MB, typically
-# 16 x 32 MB), and — only if the no-scratch fallback ran — the "out"
-# accumulator (n_cells * 8 B, <= max_dense_cells -> ~1.6 GB worst case).
-# All bounded by the dense-path routing guards and releasable via
-# release_bincount_workspace() on long-lived drivers.
+def _driver_threads() -> int:
+    """Driver-side thread count of the dense kernel, sized from the
+    configured parallelism (SPARK_GRAFT_CPUS), not the raw host CPU count,
+    so a reduced-core run scales its driver-side threading honestly too."""
+    from sed_binning_spark.session import default_parallelism
+
+    return min(16, max(2, default_parallelism() // 2))
+
+
+# Per-thread gather scratch cap (int64 values, 128 MB): a cell range whose
+# value count exceeds it (extreme skew) is gathered and counted in pieces.
+_GATHER_CAP = 16_000_000
+
+
+def _sorted_slices_histogram(slices: Sequence[np.ndarray], n_cells: int,
+                             scratches: list) -> np.ndarray:
+    """Float32 histogram over cells ``[0, n_cells)`` of sorted index slices:
+    the one dense-driver kernel.
+
+    Each slice holds cell indices, normally sorted ascending by the
+    executors; values at the ``n_cells`` sentinel (NULL/out-of-range rows)
+    sort last and are never counted. Sortedness is verified with one
+    sequential pass per slice, and a slice that is not sorted is sorted
+    here — never counted wrong, since the ranges below binary-search it.
+
+    The cell space splits into contiguous ranges, taken round-robin by
+    driver threads (numpy releases the GIL). One vectorized search per
+    slice locates every range's span, so each range reads only its own
+    values and writes only its own cells of the zeroed cube:
+
+    - a range holding fewer values than cells (the sparse regime, e.g. 1e5
+      rows x 1e8 cells) scatters the run-lengths of each sorted span, so
+      it touches only occupied cells instead of bincounting empty ones;
+    - a denser range gathers its spans (widened to int64 in the same pass)
+      into the thread's retained scratch, bincounts them and writes the
+      counts straight into the cube — no n_cells-sized int64 accumulator,
+      no serial astype pass.
+
+    ``scratches`` is the caller's list of per-thread int64 gather buffers,
+    grown in place and reused by the next call that gets the same list.
+    The result is order-independent (a histogram) — pinned against
+    np.bincount by tests."""
+    hist = _madv_hugepage(np.zeros(n_cells, dtype=np.float32))
+    slices = [s for s in slices if s.size]
+    if not slices:
+        return hist
+    n_threads = _driver_threads()
+    # ranges sized so a dense range's bincount result stays under glibc's
+    # dynamic mmap threshold (~32 MB) and recycles from the arena free
+    # lists, and so the gathered values of a range fit the usual scratch
+    total = sum(s.size for s in slices)
+    n_ranges = max(n_threads, int(np.ceil(n_cells / 3_000_000)),
+                   int(np.ceil(total / 2_500_000)))
+    bounds = np.linspace(0, n_cells, n_ranges + 1).astype(np.int64)
+    while len(scratches) < n_threads:
+        scratches.append(np.empty(0, dtype=np.int64))
+
+    def _locate(s: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        if s.size > 1 and not bool(np.all(s[:-1] <= s[1:])):
+            s = np.sort(s)
+        # bounds cast to the slice dtype: mixed dtypes would make
+        # searchsorted convert (copy) the whole slice
+        return s, np.searchsorted(s, bounds.astype(s.dtype))
+
+    def _one_range(i: int, sc: np.ndarray) -> np.ndarray:
+        lo, hi = int(bounds[i]), int(bounds[i + 1])
+        spans = [(s, int(c[i]), int(c[i + 1])) for s, c in located if c[i + 1] > c[i]]
+        m = sum(b - a for _, a, b in spans)
+        if m == 0:
+            return sc
+        if m < hi - lo:
+            for s, a, b in spans:
+                v = s[a:b]
+                head = np.flatnonzero(np.concatenate(([True], v[1:] != v[:-1])))
+                hist[v[head]] += np.diff(head, append=v.size)
+            return sc
+        if sc.size < min(m, _GATHER_CAP):
+            sc = _madv_hugepage(
+                np.empty(min(max(m, 4_000_000), _GATHER_CAP), dtype=np.int64))
+        cnt = None
+        for g in _gather(spans, sc):
+            np.subtract(g, lo, out=g)
+            part = np.bincount(g, minlength=hi - lo)
+            cnt = part if cnt is None else cnt + part
+        hist[lo:hi] = cnt  # parallel cast-write
+        return sc
+
+    def _worker(j: int) -> None:
+        sc = scratches[j]
+        for i in range(j, n_ranges, n_threads):
+            sc = _one_range(i, sc)
+        scratches[j] = sc
+
+    with ThreadPoolExecutor(n_threads) as ex:
+        located = list(ex.map(_locate, slices))
+        list(ex.map(_worker, range(n_threads)))
+    return hist
+
+
+def _gather(spans, sc: np.ndarray):
+    """Yield the values of ``spans`` (``(slice, start, stop)`` triples)
+    copied into ``sc``, one filled scratch at a time."""
+    w = 0
+    for s, a, b in spans:
+        while a < b:
+            take = min(b - a, sc.size - w)
+            sc[w:w + take] = s[a:a + take]  # gather + widen, one pass
+            w += take
+            a += take
+            if w == sc.size:
+                yield sc
+                w = 0
+    if w:
+        yield sc[:w]
+
+
+# Retained dense-kernel buffers, reused across calls. An 800 MB np.empty is
+# ~free to ALLOCATE but the kernel then zero-faults every page on first
+# write, and freeing returns the mmap'd block so the next run faults it all
+# over again; under memory pressure (the Spark JVM + page cache share the
+# host) those faults serialize on mmap_lock and were measured turning a
+# 0.9 s bincount into 5-37 s (sys-time dominated). A dense call takes the
+# slots out on entry and puts its own back on exit, so concurrent calls
+# never share a buffer: a second caller allocates its own set, and the
+# last one back is the set retained. Retained footprint:
+# - "vals": the spill read buffer, rows * itemsize; <= _DENSE_ROWS_BUDGET
+#   int32 -> ~1 GB worst case;
+# - "gather": one int64 scratch per driver thread (<= 16), 4e6 values
+#   (32 MB) typically, and up to _GATHER_CAP values (128 MB) once a skewed
+#   range has grown it -> ~0.5 GB typical, ~2 GB worst case.
+# So up to ~3 GB between calls (each concurrent call holds its own set
+# while it runs). Bounded by the dense-path routing guards and releasable
+# via release_bincount_workspace() on long-lived drivers.
 _BINCOUNT_WORKSPACE: dict = {}
 
 
 def release_bincount_workspace() -> None:
-    """Free the retained dense-path bincount buffers (see
-    ``_BINCOUNT_WORKSPACE``): worst case ~2.6 GB held between dense binning
-    calls. Call from a long-lived driver after a binning burst."""
+    """Free the retained dense-kernel buffers (see ``_BINCOUNT_WORKSPACE``):
+    up to ~3 GB held between dense binning calls — the ~1 GB values buffer
+    plus up to 16 x 128 MB of gather scratch after a skewed range. Call from
+    a long-lived driver after a binning burst; a dense call still running
+    keeps its own buffers and puts them back when it returns."""
     _BINCOUNT_WORKSPACE.clear()
-
-
-def _range_partitioned_bincount(
-    vals, n_cells: int, reuse_workspace: bool = False,
-) -> np.ndarray:
-    """Histogram of int values — np.bincount, threaded over cell ranges.
-
-    ``vals`` is one array or a sequence of arrays (e.g. zero-copy views of
-    parquet row-group chunks — passing chunks directly avoids a full-column
-    concat, a fresh 400 MB allocation at ref scale whose page faults cost
-    more than the histogram). A single np.bincount over 1e8 random values
-    into 1e8 cells is ~18 s of TLB/cache misses; giving each thread a
-    contiguous slice of the CELL range (each scans all values, keeps its
-    own) is ~2.7 s on 32 cores — numpy releases the GIL, the per-thread
-    accumulator region is ~100 MB, and the extra full scans are sequential
-    reads the memory system is good at. Small inputs take the plain single
-    call.
-
-    Each thread masks the values in bounded pieces (not one full-size
-    boolean mask each): 16 threads x 2 x len(vals) bool temporaries were
-    ~4 GB of per-run mmap/munmap churn whose page-fault kernel time
-    dominated wall clock under memory pressure; bounded pieces keep the
-    live temporaries to a few MB per thread, which glibc serves from the
-    arena free lists without touching the kernel.
-
-    ``reuse_workspace=True`` (the dense-driver path) additionally reuses
-    the module-level output accumulator across calls — the RETURNED ARRAY
-    IS INVALIDATED BY THE NEXT CALL; callers must copy (the caller casts
-    to float32 immediately). Default off so tests/external callers keep
-    value semantics.
-    """
-    arrays = [vals] if isinstance(vals, np.ndarray) else [a for a in vals if a.size]
-    total = sum(a.size for a in arrays)
-    if total < 4_000_000:
-        if not arrays:
-            return np.zeros(n_cells, dtype=np.int64)
-        joined = arrays[0] if len(arrays) == 1 else np.concatenate(arrays)
-        return np.bincount(joined, minlength=n_cells)
-    if n_cells < _VALUE_CHUNK_MAX_CELLS:
-        return _value_chunked_bincount(arrays, n_cells)
-    from concurrent.futures import ThreadPoolExecutor
-
-    # the threaded scan wants ONE contiguous array (per-chunk numpy ops on
-    # hundreds of row-group views cost more than they save); when reusing,
-    # concatenate into the retained values buffer so the 400 MB copy hits
-    # already-mapped pages instead of fresh kernel-zeroed ones
-    if len(arrays) == 1:
-        flat = arrays[0]
-    elif reuse_workspace:
-        buf = _BINCOUNT_WORKSPACE.get("vals")
-        if buf is None or buf.size < total or buf.dtype != arrays[0].dtype:
-            buf = np.empty(total, dtype=arrays[0].dtype)
-            _BINCOUNT_WORKSPACE["vals"] = buf
-        flat = np.concatenate(arrays, out=buf[:total])
-    else:
-        flat = np.concatenate(arrays)
-
-    # measured on 1e8 values x 1e8 cells: 3.8 s @ 8 threads, 3.1 s @ 16,
-    # flat beyond; more threads also ride out neighbor-CPU contention
-    from sed_binning_spark.session import default_parallelism
-
-    # sized from the configured parallelism (SPARK_GRAFT_CPUS), not the
-    # raw host CPU count, so a reduced-core run scales its driver-side
-    # threading honestly too
-    n_threads = min(16, max(2, default_parallelism() // 2))
-    bounds = np.linspace(0, n_cells, n_threads + 1).astype(np.int64)
-    if reuse_workspace:
-        out = _BINCOUNT_WORKSPACE.get("out")
-        if out is None or out.size < n_cells:
-            out = np.empty(max(n_cells, 1), dtype=np.int64)
-            _BINCOUNT_WORKSPACE["out"] = out
-        out = out[:n_cells]
-    else:
-        out = np.empty(n_cells, dtype=np.int64)
-    piece = 8_000_000
-
-    def _work(i: int) -> None:
-        lo, hi = int(bounds[i]), int(bounds[i + 1])
-        picks = []
-        for s in range(0, flat.size, piece):
-            v = flat[s:s + piece]
-            m = (v >= lo) & (v < hi)
-            sel = v[m]
-            np.subtract(sel, lo, out=sel)
-            picks.append(sel)
-        joined = picks[0] if len(picks) == 1 else np.concatenate(picks)
-        # full-slice assignment (bincount pads to exactly hi-lo), so the
-        # reused accumulator never needs zeroing
-        out[lo:hi] = np.bincount(joined, minlength=hi - lo)
-
-    with ThreadPoolExecutor(n_threads) as ex:
-        list(ex.map(_work, range(n_threads)))
-    return out
-
-
-# strategy crossover measured at 1e8 values: value-chunked 0.2/1.1/0.6/8.4 s
-# vs range-partitioned 3.8(single)/3.1/0.8/0.8 s at 160k/1M/4M/16M cells —
-# private per-thread accumulators win while they stay cache-resident, full
-# rescans win once the accumulator itself is the working set
-_VALUE_CHUNK_MAX_CELLS = 8_000_000
-
-
-def _value_chunked_bincount(arrays: Sequence[np.ndarray], n_cells: int) -> np.ndarray:
-    """Histogram for the SMALL-cell regime (accumulator fits in cache).
-
-    The dual of :func:`_range_partitioned_bincount`: when ``n_cells`` is
-    small each thread owns a private cache-resident accumulator and
-    bincounts its own slice of the VALUES, and the partials sum at the end
-    (the classic map-side-combine shape, driver edition). Measured at 1e8
-    values x 160k cells: 3.8 s single np.bincount -> 0.2 s at 16 threads.
-    Range-partitioning would be wrong here — 16 threads re-scanning 400 MB
-    each to fill 10k-cell slices is all scan and no win.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    work: list[np.ndarray] = []
-    for a in arrays:
-        if a.size > 8_000_000:
-            work.extend(np.array_split(a, a.size // 4_000_000))
-        elif a.size:
-            work.append(a)
-    if not work:
-        return np.zeros(n_cells, dtype=np.int64)
-    if len(work) == 1:
-        return np.bincount(work[0], minlength=n_cells)
-    from sed_binning_spark.session import default_parallelism
-
-    # sized from the configured parallelism (SPARK_GRAFT_CPUS), not the
-    # raw host CPU count, so a reduced-core run scales its driver-side
-    # threading honestly too
-    n_threads = min(16, max(2, default_parallelism() // 2))
-    with ThreadPoolExecutor(n_threads) as ex:
-        parts = list(ex.map(lambda ch: np.bincount(ch, minlength=n_cells), work))
-    return np.sum(parts, axis=0)
 
 
 def bin_dataframe_sparse(

@@ -32,12 +32,6 @@ from pyspark.sql import functions as F
 
 from sed_binning_spark.pipeline.text import whitespace_tokens
 
-# measurement toggle for tools/ab_kept_rolling.py ONLY: True re-inlines the
-# substring-rebuild survivor expression (the pre-r14 shape) instead of
-# binding it as the __kept temp column. Production value: False.
-_INLINE_KEPT = False
-
-
 # Universal-hash family parameters: p Mersenne prime; (a_i, b_i) drawn once
 # from a fixed-seed PRNG so Spark and the SQL oracle share the same plan-time
 # constants.
@@ -1391,13 +1385,10 @@ def _substring_rebuild(
     # n_removed_tokens) and an inline reference would run the whole
     # gap-slice + flatten tree twice per row (interpreted HOFs sit
     # outside codegen subexpression elimination)
-    if _INLINE_KEPT:  # measurement toggle (see tools/ab_kept_rolling.py)
-        kept = F.flatten(F.transform(F.sequence(F.lit(0), m), _gap))
-    else:
-        out = out.withColumn(
-            "__kept", F.flatten(F.transform(F.sequence(F.lit(0), m), _gap)),
-        )
-        kept = F.col("__kept")
+    out = out.withColumn(
+        "__kept", F.flatten(F.transform(F.sequence(F.lit(0), m), _gap)),
+    )
+    kept = F.col("__kept")
     return out.select(_with_output_columns(out_cols, {
         "text_dedup": chain.when(scored, F.concat_ws(" ", kept)),
         "n_tokens": F.when(scored, F.size(tk2)).otherwise(F.lit(0))

@@ -500,3 +500,77 @@ def test_driver_combine_matches_shuffle_combine(spark):
     driver = bin_dataframe(df, combine="driver", **kw)
     np.testing.assert_array_equal(shuffle.data, driver.data)
     assert float(driver.data.sum()) > 0
+
+
+def test_driver_combine_without_scratch_matches_shuffle(spark, monkeypatch):
+    """On a non-local master with no SPARK_GRAFT_SCRATCH_DIR the driver
+    combine takes its single-socket Arrow source: it must say so, naming
+    the env var, and still give the shuffle plan's cube, including NULL /
+    out-of-range rejects."""
+    import pandas as pd
+
+    rng = np.random.default_rng(29)
+    pdf = pd.DataFrame({
+        "a": np.concatenate([rng.uniform(-5, 25, 30_000), [np.nan, -100.0, 1e9]]),
+        "b": np.concatenate([rng.uniform(0, 7, 30_000), [1.0, np.nan, 3.0]]),
+    })
+    df = spark.createDataFrame(pdf).repartition(5)
+    kw = dict(bins=[40, 13], axes=["a", "b"],
+              ranges=[(0.0, 20.0), (0.0, 6.0)])
+    shuffle = bin_dataframe(df, combine="shuffle", **kw)
+
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://fake-cluster:7077")
+    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_SCRATCH_DIR"):
+        driver = bin_dataframe(df, combine="driver", **kw)
+    np.testing.assert_array_equal(shuffle.data, driver.data)
+    assert float(driver.data.sum()) > 0
+
+
+def test_concurrent_driver_combines_match_serial(spark, monkeypatch):
+    """Two threads binning their own frames on the driver route at the same
+    time must each get the cube a serial call gives: the dense path's
+    retained buffers belong to one call at a time. A barrier at the first
+    spill-file open of each call holds both until their spill writes are
+    done, so the read-back and histogram phases overlap."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    kw = dict(bins=[90, 70], axes=["a", "b"],
+              ranges=[(0.0, 20.0), (0.0, 6.0)], combine="driver")
+    frames = [
+        spark.range(n, numPartitions=6)
+        .select((F.rand(seed) * 24 - 2).alias("a"),
+                (F.rand(seed + 1) * 7).alias("b"))
+        .cache()
+        for n, seed in ((500_000, 41), (400_000, 43))
+    ]
+    try:
+        for f in frames:
+            f.count()
+        serial = [bin_dataframe(f, **kw).data for f in frames]
+        assert not np.array_equal(serial[0], serial[1])
+
+        orig = pq.ParquetFile
+        held = threading.local()
+
+        def opening(*args, **kwargs):
+            if not getattr(held, "done", False):
+                held.done = True
+                barrier.wait()
+            return orig(*args, **kwargs)
+
+        monkeypatch.setattr(pq, "ParquetFile", opening)
+        for _ in range(2):
+            barrier = threading.Barrier(2, timeout=120)
+            with ThreadPoolExecutor(2) as ex:
+                futs = [ex.submit(bin_dataframe, f, **kw) for f in frames]
+                cubes = [fut.result().data for fut in futs]
+            for got, want in zip(cubes, serial):
+                np.testing.assert_array_equal(got, want)
+    finally:
+        for f in frames:
+            f.unpersist()

@@ -108,6 +108,11 @@ def test_nan_and_null_always_rejected_property(spark, nbins, lo, width):
     assert float(cube.data.sum()) == 1.0  # only the real value lands
 
 
+def _sorted_chunks(vals: np.ndarray, n_chunks: int) -> list[np.ndarray]:
+    """Executor-shaped kernel input: ``vals`` split into sorted slices."""
+    return [np.sort(c) for c in np.array_split(vals, n_chunks)]
+
+
 @given(
     n_vals=st.integers(0, 50_000),
     n_cells=st.integers(1, 300_000),
@@ -116,82 +121,100 @@ def test_nan_and_null_always_rejected_property(spark, nbins, lo, width):
 )
 @settings(max_examples=20, deadline=None)
 def test_driver_bincount_strategies_agree(n_vals, n_cells, seed, n_chunks):
-    """Both driver histogram strategies must equal plain np.bincount for
-    any value distribution, chunking, and cell count (the size thresholds
-    only pick WHICH runs, never change the result)."""
-    from sed_binning_spark.binning.binning import (
-        _range_partitioned_bincount,
-        _value_chunked_bincount,
-    )
+    """Every counting strategy of the dense-driver kernel must equal plain
+    np.bincount for any value distribution, chunking and cell count: the
+    run-length scatter (a range holding fewer values than cells), the
+    whole-range gather + bincount (a denser range), and the same gather
+    counted in pieces (a tiny gather cap). Sizes only pick WHICH strategy
+    runs, never change the result; values at the NULL sentinel ``n_cells``
+    are never counted."""
+    from sed_binning_spark.binning import binning as binning_mod
 
     rng = np.random.default_rng(seed)
-    vals = rng.integers(0, n_cells, n_vals, dtype=np.int64)
-    want = np.bincount(vals, minlength=n_cells)
-    arrays = np.array_split(vals, n_chunks)
-    np.testing.assert_array_equal(_value_chunked_bincount(arrays, n_cells), want)
-    np.testing.assert_array_equal(_range_partitioned_bincount(vals, n_cells), want)
-    # chunked input (arrow row-group views) and the reused-workspace
-    # accumulator must be invisible to the result
-    np.testing.assert_array_equal(
-        _range_partitioned_bincount(arrays, n_cells, reuse_workspace=True), want,
-    )
+    vals = rng.integers(0, n_cells + 1, n_vals).astype(np.int32)
+    want = np.bincount(vals, minlength=n_cells + 1)[:n_cells]
+    slices = _sorted_chunks(vals, n_chunks)
+    old_cap = binning_mod._GATHER_CAP
+    try:
+        for cap in (old_cap, 7):
+            binning_mod._GATHER_CAP = cap
+            got = binning_mod._sorted_slices_histogram(slices, n_cells, [])
+            np.testing.assert_array_equal(got, want)
+    finally:
+        binning_mod._GATHER_CAP = old_cap
 
 
-def test_driver_bincount_threaded_paths_agree():
-    """Sizes chosen to actually REACH both threaded implementations (the
-    hypothesis variant above stays below the size thresholds): a 9M-value
-    array splits inside _value_chunked_bincount, and 9M cells puts
-    _range_partitioned_bincount on its bounds/slice ThreadPool branch —
-    pinning the thread-boundary arithmetic against plain np.bincount."""
-    from sed_binning_spark.binning.binning import (
-        _VALUE_CHUNK_MAX_CELLS,
-        _range_partitioned_bincount,
-        _value_chunked_bincount,
-    )
+def test_driver_bincount_threaded_paths_agree(monkeypatch):
+    """Two driver threads and sizes that split the cell space into more
+    ranges than threads, so each thread takes several ranges round-robin:
+    9e6 values over 1e5 cells (4 dense ranges: gather + bincount) and 5e6
+    values over 9e6 cells (3 sparse ranges: run-length scatter) — pinning
+    the range bounds and per-range span arithmetic against np.bincount."""
+    from sed_binning_spark.binning import binning as binning_mod
 
+    monkeypatch.setattr(binning_mod, "_driver_threads", lambda: 2)
     rng = np.random.default_rng(11)
-    n_cells_small = 100_000
-    vals = rng.integers(0, n_cells_small, 9_000_000, dtype=np.int64)
-    assert n_cells_small < _VALUE_CHUNK_MAX_CELLS  # value-chunked regime
-    want = np.bincount(vals, minlength=n_cells_small)
-    np.testing.assert_array_equal(
-        _value_chunked_bincount([vals], n_cells_small), want,
-    )
-
-    n_cells_big = 9_000_000
-    vals_big = rng.integers(0, n_cells_big, 5_000_000, dtype=np.int64)
-    assert n_cells_big >= _VALUE_CHUNK_MAX_CELLS  # range-partitioned regime
-    want_big = np.bincount(vals_big, minlength=n_cells_big)
-    np.testing.assert_array_equal(
-        _range_partitioned_bincount(vals_big, n_cells_big), want_big,
-    )
-
-
-def test_threaded_bincount_workspace_reuse_is_invisible():
-    """The production dense-driver call shape — CHUNKED arrays (arrow
-    row-group views) + reuse_workspace=True on the THREADED branch — must
-    be value-identical to np.bincount across consecutive calls that
-    shrink n_cells, change dtype, and change totals: the retained 'out'
-    and 'vals' buffers are larger than the live region on later calls, so
-    any missed slice-assignment or stale-byte reuse shows up as a count
-    from a previous run."""
-    from sed_binning_spark.binning.binning import (
-        _VALUE_CHUNK_MAX_CELLS,
-        _range_partitioned_bincount,
-        release_bincount_workspace,
-    )
-
-    release_bincount_workspace()
-    rng = np.random.default_rng(5)
-    cases = [
-        (9_500_000, 12_000_000, np.int64),   # seeds the workspace
-        (5_000_000, 9_000_000, np.int32),    # smaller + dtype switch
-        (4_000_001, 8_000_001, np.int32),    # shrink again, odd sizes
-    ]
-    for n_vals, n_cells, dtype in cases:
-        assert n_cells >= _VALUE_CHUNK_MAX_CELLS
-        vals = rng.integers(0, n_cells, n_vals).astype(dtype)
-        chunks = np.array_split(vals, 37)
-        got = _range_partitioned_bincount(chunks, n_cells, reuse_workspace=True)
+    for n_vals, n_cells in ((9_000_000, 100_000), (5_000_000, 9_000_000)):
+        vals = rng.integers(0, n_cells, n_vals).astype(np.int32)
+        got = binning_mod._sorted_slices_histogram(_sorted_chunks(vals, 7), n_cells, [])
         np.testing.assert_array_equal(got, np.bincount(vals, minlength=n_cells))
-    release_bincount_workspace()
+
+
+@st.composite
+def _kernel_call(draw):
+    """One call of the dense-driver kernel: a cell count (small -> dense
+    ranges, >= 3e6 -> several ranges, mostly sparse), 0..12 slices of
+    random length (empty ones included) and a seed for their values."""
+    n_cells = draw(st.one_of(st.integers(1, 2_000),
+                             st.integers(3_000_000, 12_000_000)))
+    lens = draw(st.lists(st.integers(0, 20_000), max_size=12))
+    return n_cells, lens, draw(st.integers(0, 2**32 - 1))
+
+
+@given(
+    calls=st.lists(_kernel_call(), min_size=2, max_size=3),
+    first_dtype=st.sampled_from([np.int32, np.int64]),
+    small_gather_cap=st.booleans(),
+)
+@settings(max_examples=25, deadline=None)
+def test_threaded_bincount_workspace_reuse_is_invisible(calls, first_dtype, small_gather_cap):
+    """Consecutive kernel calls sharing one list of gather scratches (as
+    dense calls share the retained ``_BINCOUNT_WORKSPACE["gather"]`` slot)
+    must each equal np.bincount(...)[:n_cells] while n_cells shrinks and
+    the dtype switches, so a stale byte of a retained buffer would show up
+    as a count from an earlier call. Each call also covers any slicing,
+    including empty slices, one slice the executors failed to sort, int32
+    and int64 indices, and values at the NULL sentinel ``n_cells`` (never
+    counted). Half the values crowd a 64-cell window, so dense (bincount)
+    ranges sit beside sparse (run-length scatter) ones; a small gather cap
+    forces dense ranges to count in pieces."""
+    from sed_binning_spark.binning import binning as binning_mod
+
+    calls = sorted(calls, key=lambda c: -c[0])
+    dtypes = [first_dtype, np.int64 if first_dtype is np.int32 else np.int32]
+    scratches: list = []
+    old_cap = binning_mod._GATHER_CAP
+    if small_gather_cap:
+        binning_mod._GATHER_CAP = 997
+    try:
+        for k, (n_cells, lens, seed) in enumerate(calls):
+            rng = np.random.default_rng(seed)
+            hot = int(rng.integers(0, n_cells + 1))
+            slices = []
+            for n in lens:
+                v = np.where(
+                    rng.random(n) < 0.5,
+                    rng.integers(0, n_cells + 1, n),
+                    np.minimum(hot + rng.integers(0, 64, n), n_cells),
+                )
+                slices.append(np.sort(v).astype(dtypes[k % 2]))
+            if slices:
+                i = int(rng.integers(0, len(slices)))
+                slices[i] = rng.permutation(slices[i])
+            vals = np.concatenate([np.zeros(0, np.int64), *slices]).astype(np.int64)
+            want = np.bincount(vals, minlength=n_cells + 1)[:n_cells]
+            got = binning_mod._sorted_slices_histogram(slices, n_cells, scratches)
+            assert got.dtype == np.float32
+            np.testing.assert_array_equal(got, want)
+    finally:
+        binning_mod._GATHER_CAP = old_cap
