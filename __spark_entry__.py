@@ -150,9 +150,11 @@ FROM events
 # handle, a new session in the same application rebuilds (so per-session
 # confs like nanosAsLong are re-applied by the build), and a rewritten
 # dataset under the same path invalidates the frozen file-listing
-# snapshot. Entries from other applications are pruned on every miss, so
-# a driver that cycles contexts (pytest, repeated in-process benches)
-# never accumulates dead py4j handles.
+# snapshot. Every miss prunes the entries of other applications and the
+# other sessions' or stale entries of the same scan, so a driver that
+# cycles contexts (pytest, repeated in-process benches) or sessions
+# (spark.newSession()) keeps one entry per scan and never accumulates dead
+# py4j handles or the sessions they pin.
 _SCAN_MEMO: dict = {}
 
 
@@ -166,8 +168,7 @@ def _scan_memo(spark: SparkSession, key: tuple, path: str, build):
     full = (app, id(spark), *key, fresh)
     df = _SCAN_MEMO.get(full)
     if df is None:
-        for k in [k for k in _SCAN_MEMO
-                  if k[0] != app or (k[:-1] == full[:-1] and k != full)]:
+        for k in [k for k in _SCAN_MEMO if k[0] != app or k[2:-1] == key]:
             del _SCAN_MEMO[k]
         df = build()
         _SCAN_MEMO[full] = df

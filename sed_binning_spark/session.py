@@ -51,9 +51,9 @@ _DEFAULT_CONF = {
 # In local mode the single JVM is driver AND all executors; Spark's 1g heap
 # default buckles under cached event tables and wide aggregations. Only
 # applied when THIS factory launches the JVM (a cluster manager or spark-
-# submit would set these itself).
+# submit would set these itself). spark.driver.memory comes from
+# _local_driver_memory().
 _LOCAL_MEMORY_CONF = {
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
     "spark.driver.maxResultSize": "4g",
     # madvise-mode THP for the whole local JVM (heap + code cache):
     # first-touch of a fresh guest page costs a hypervisor round-trip on a
@@ -70,6 +70,36 @@ _LOCAL_MEMORY_CONF = {
     # query's first run. THP-backed arenas fault 2 MB at a time.
     "spark.executorEnv.GLIBC_TUNABLES": "glibc.malloc.hugetlb=1",
 }
+
+# A caller's value for this key gets the local default's flags appended
+# instead of replacing them
+_JAVA_OPTS = "spark.driver.extraJavaOptions"
+
+
+def _host_ram_bytes() -> int | None:
+    """MemTotal from /proc/meminfo; None where there is no procfs."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def _local_driver_memory() -> str:
+    """Heap of a local JVM: SPARK_GRAFT_DRIVER_MEM if set, else half of host
+    RAM, at most 32g (32g where RAM is unknown). A heap sized past physical
+    memory lets G1 keep growing in a long-lived driver until the kernel
+    OOM-kills the JVM."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = _host_ram_bytes()
+    if ram is None:
+        return "32g"
+    return f"{max(1024, min(32 * 1024, ram // 2 // 2**20))}m"
 
 
 def default_parallelism() -> int:
@@ -94,7 +124,9 @@ def get_spark(
             ``local[*]``) when not already running under a cluster manager.
         shuffle_partitions: default shuffle partition count; defaults to
             2x parallelism (AQE coalesces down, skew splits up).
-        extra_conf: extra Spark conf entries (override defaults).
+        extra_conf: extra Spark conf entries (override defaults; in local
+            mode the THP flag is appended to a given
+            ``spark.driver.extraJavaOptions`` instead of dropped).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
@@ -105,13 +137,19 @@ def get_spark(
     builder = builder.master(master)
 
     conf = dict(_DEFAULT_CONF)
-    if master.startswith("local"):
+    local = master.startswith("local")
+    if local:
         conf.update(_LOCAL_MEMORY_CONF)
+        conf["spark.driver.memory"] = _local_driver_memory()
     if shuffle_partitions is None:
         shuffle_partitions = 2 * default_parallelism()
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+        if local and _JAVA_OPTS in extra_conf:
+            flag = _LOCAL_MEMORY_CONF[_JAVA_OPTS]
+            if flag not in extra_conf[_JAVA_OPTS].split():
+                conf[_JAVA_OPTS] = f"{extra_conf[_JAVA_OPTS]} {flag}".strip()
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

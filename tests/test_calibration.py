@@ -541,3 +541,156 @@ def test_generate_inverse_dfield_sparse_relaxation_pin():
     sentinel = -1.2345e300
     assert np.array_equal(np.where(np.isnan(want), sentinel, want),
                           np.where(np.isnan(got), sentinel, got))
+
+
+def _whole_raster_inverse(fr, fc, bin_ranges, detector_ranges):
+    """Serial whole-raster twin of generate_inverse_dfield: per-point
+    sampler over full meshgrid rasters, one deposit, then the historical
+    roll-based hole fill."""
+    from sed_binning_spark.calibration.momentum import _bilinear_or_nan, _dilate4, _erode4
+
+    h, w = fr.shape
+    out_h = int(detector_ranges[0][1])
+    out_w = int(detector_ranges[1][1])
+    det_r0 = float(detector_ranges[0][0])
+    det_c0 = float(detector_ranges[1][0])
+    bin_step_r = (bin_ranges[0][1] - bin_ranges[0][0]) / h
+    bin_step_c = (bin_ranges[1][1] - bin_ranges[1][0]) / w
+    rr, cc = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
+    if (out_h, out_w) != (h, w) or det_r0 or det_c0:
+        gi = det_r0 + np.arange(out_h) * (h - det_r0) / out_h
+        gj = det_c0 + np.arange(out_w) * (w - det_c0) / out_w
+        rr, cc = np.meshgrid(gi, gj, indexing="ij")
+        fr = _bilinear_or_nan(fr, rr.ravel(), cc.ravel()).reshape(out_h, out_w)
+        fc = _bilinear_or_nan(fc, rr.ravel(), cc.ravel()).reshape(out_h, out_w)
+    key_r = fr + bin_ranges[0][0] / bin_step_r
+    key_c = fc + bin_ranges[1][0] / bin_step_c
+    finite = np.isfinite(fr) & np.isfinite(fc)
+    with np.errstate(invalid="ignore"):
+        tr = np.where(finite, np.rint((key_r - det_r0) * out_h / (h - det_r0)), -1).astype(np.int64)
+        tc = np.where(finite, np.rint((key_c - det_c0) * out_w / (w - det_c0)), -1).astype(np.int64)
+    dest_r = bin_step_r * rr + bin_ranges[0][0]
+    dest_c = bin_step_c * cc + bin_ranges[1][0]
+    ok = (tr >= 0) & (tr < out_h) & (tc >= 0) & (tc < out_w) & finite
+    flat = tr[ok] * out_w + tc[ok]
+    n_cells = out_h * out_w
+    sums_r = np.bincount(flat, weights=dest_r[ok], minlength=n_cells).reshape(out_h, out_w)
+    sums_c = np.bincount(flat, weights=dest_c[ok], minlength=n_cells).reshape(out_h, out_w)
+    counts = np.bincount(flat, minlength=n_cells).reshape(out_h, out_w)
+    filled = counts > 0
+    inv = np.full((2, out_h, out_w), np.nan)
+    inv[0][filled] = sums_r[filled] / counts[filled]
+    inv[1][filled] = sums_c[filled] / counts[filled]
+    closed = filled
+    for _ in range(2):
+        closed = _dilate4(closed)
+    for _ in range(2):
+        closed = _erode4(closed)
+    fillable = closed & ~filled
+    for g in inv:
+        for _ in range(8):
+            holes = np.isnan(g) & fillable
+            if not holes.any():
+                break
+            acc = np.zeros_like(g)
+            cnt = np.zeros_like(g)
+            for ax, shift in ((0, 1), (0, -1), (1, 1), (1, -1)):
+                nb = np.roll(g, shift, axis=ax)
+                edge = 0 if shift == 1 else -1
+                if ax == 0:
+                    nb[edge, :] = np.nan
+                else:
+                    nb[:, edge] = np.nan
+                good = ~np.isnan(nb)
+                acc[good] += nb[good]
+                cnt[good] += 1
+            can_fill = holes & (cnt > 0)
+            g[can_fill] = acc[can_fill] / cnt[can_fill]
+    return inv
+
+
+def _compressed_field(h, w, nan_rows, seed):
+    """A noisy forward field that squeezes rows and columns together, so
+    most target cells collect several deposits from different source rows
+    (and so from different bands), with whole NaN source rows."""
+    rng = np.random.default_rng(seed)
+    fr = np.add.outer(0.7 * np.arange(h) + 2.0, np.zeros(w)) + rng.normal(0, 0.8, (h, w))
+    fc = np.add.outer(np.zeros(h), 0.8 * np.arange(w) + 1.0) + rng.normal(0, 0.8, (h, w))
+    fr[list(nan_rows), :] = np.nan
+    return fr, fc
+
+
+# (field shape, NaN field rows, bin_ranges, detector_ranges). Upsampled:
+# 40 x 30 output rows from a 23 x 17 field with detector offsets; field row
+# r feeds output rows near 2 * (r - 3), so NaN rows 9 and 13 straddle the
+# 3-band edge 13 and the 2-band edge 20. Identity: output raster == field,
+# NaN row 7 ends the first of 3 bands and row 12 starts the second of 2.
+_INV_CASES = {
+    "upsampled": ((23, 17), (9, 13), ((10, 50), (5, 60)), ((3, 40), (2, 30))),
+    "identity": ((24, 18), (7, 12), ((4, 44), (-3, 33)), ((0, 24), (0, 18))),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_INV_CASES))
+@pytest.mark.parametrize("cpus, band_cells, n_bands", [
+    (1, 1 << 40, 1),       # one band
+    (1, None, 2),          # two bands
+    (1, None, 3),          # an odd band count
+    (3, None, 5),          # more threads, odd count
+    (2, 1, None),          # more bands asked for than there are rows
+])
+def test_generate_inverse_dfield_bands_match_whole_raster(monkeypatch, case, cpus,
+                                                          band_cells, n_bands):
+    """The row-banded, threaded deposit must give exactly the field of one
+    serial whole-raster pass for any band split: band outputs concatenate
+    in row order, so every weighted sum accumulates in the same order."""
+    from sed_binning_spark.calibration import momentum
+
+    (h, w), nan_rows, bin_ranges, detector_ranges = _INV_CASES[case]
+    out_h, out_w = detector_ranges[0][1], detector_ranges[1][1]
+    if band_cells is None:  # the budget that splits the raster n_bands ways
+        band_cells = -(-out_h * out_w * cpus // n_bands)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(cpus))
+    monkeypatch.setattr(momentum, "_INV_BAND_CELLS", band_cells)
+    bounds = momentum._row_bands(out_h, out_w, cpus)
+    assert len(bounds) - 1 == (n_bands or out_h)
+    assert bounds[0] == 0 and bounds[-1] == out_h and np.all(np.diff(bounds) > 0)
+
+    fr, fc = _compressed_field(h, w, nan_rows, seed=h)
+    want = _whole_raster_inverse(fr, fc, bin_ranges, detector_ranges)
+    got = generate_inverse_dfield(fr, fc, bin_ranges=bin_ranges,
+                                  detector_ranges=detector_ranges)
+    assert np.isnan(got).any() and np.isfinite(got).sum() > got.size // 2
+    assert np.array_equal(got, want, equal_nan=True)
+
+
+def test_dfield_lookup_udf_reads_module_grid_cache(tmp_path, monkeypatch):
+    """apply_dfield's UDF body, shipped the way Spark ships it (cloudpickle),
+    must load the grid through the worker module's own bounded cache, not
+    through a by-value copy of the cache that every task unpickles empty."""
+    import pandas as pd
+    from pyspark import SparkFiles, cloudpickle
+
+    from sed_binning_spark.calibration import momentum
+
+    monkeypatch.setattr(momentum, "_DFIELD_GRID_CACHE", {})
+    monkeypatch.setattr(SparkFiles, "get", staticmethod(lambda name: str(tmp_path / name)))
+    grid = np.stack([np.add.outer(np.arange(4.0), np.zeros(5)),
+                     np.add.outer(np.zeros(4), np.arange(5.0))])
+    names = [f"sed_dfield_cache_{i}.npy" for i in range(momentum._DFIELD_GRID_CACHE_MAX + 1)]
+    for name in names:
+        np.save(tmp_path / name, grid)
+
+    shipped = cloudpickle.loads(cloudpickle.dumps(momentum._dfield_lookup_fn(names[0], 2.0, 3.0)))
+    out = shipped(pd.Series([1.0, 2.5]), pd.Series([3.0, 0.5]))
+    np.testing.assert_array_equal(out["x"], [2.0, 5.0])
+    np.testing.assert_array_equal(out["y"], [9.0, 1.5])
+    assert list(momentum._DFIELD_GRID_CACHE) == names[:1]
+    cached = momentum._DFIELD_GRID_CACHE[names[0]]
+    shipped(pd.Series([0.0]), pd.Series([0.0]))
+    assert momentum._DFIELD_GRID_CACHE[names[0]] is cached
+
+    # bounded: one more field than the cap evicts the oldest
+    for name in names[1:]:
+        momentum._dfield_grid(name)
+    assert list(momentum._DFIELD_GRID_CACHE) == names[1:]
