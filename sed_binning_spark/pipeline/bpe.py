@@ -62,7 +62,13 @@ def bpe_train(
     """Learn ``num_merges`` BPE merges from a seeded bounded sample of the
     corpus; returns the ordered merge list (rank = position). Training
     stops early when no pair occurs twice — merging hapax pairs would
-    just memorize the sample."""
+    just memorize the sample.
+
+    A corpus of more than ``sample_size`` non-null texts is sampled by a
+    threshold on a hash of the text itself, so duplicate texts are sampled
+    all-in or all-out, and the sample size is binomial around
+    ``sample_size``, not exact. The threshold needs the exact non-null
+    text count, which costs one column-pruned count job."""
     if num_merges < 1:
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
     if text_column not in df.columns:

@@ -5,6 +5,19 @@ hash aggregations + a few window ops): AQE on (runtime shuffle re-planning,
 skew-join splitting), Arrow for every Python<->JVM crossing, and a shuffle
 partition count that AQE can coalesce downward. On a real cluster the same
 session settings hold; only master/memory come from the environment.
+
+Every Python stage (HDF5 extraction, the ``apply_dfield`` grid UDF, the
+searchsorted bin index, dedup and media ``mapInPandas``) pays a per-task
+set-up cost before its function sees a row. Spark reuses each Python worker
+between tasks, but every task's ``setup_spark_files`` calls
+``importlib.invalidate_caches()``, and through CPython 3.12 each of the ~15
+zip importers over ``pyspark.zip``, the py4j zip and the spark-core jar then
+re-parses its archive's central directory: 0.12-0.27 s per task on a 4-core
+host, while the JVM task thread waits on the worker's socket. A local session
+therefore starts its workers from ``sed_binning_spark._worker_daemon``, which
+re-parses an archive only when the file changed (~0.2 ms per task), and puts
+the directory holding this package on the workers' ``PYTHONPATH`` so that
+daemon, and the library's own Python stages, import from any driver cwd.
 """
 
 from __future__ import annotations
@@ -53,7 +66,7 @@ _DEFAULT_CONF = {
 # applied when THIS factory launches the JVM (a cluster manager or spark-
 # submit would set these itself). spark.driver.memory comes from
 # _local_driver_memory().
-_LOCAL_MEMORY_CONF = {
+_LOCAL_CONF = {
     "spark.driver.maxResultSize": "4g",
     # madvise-mode THP for the whole local JVM (heap + code cache):
     # first-touch of a fresh guest page costs a hypervisor round-trip on a
@@ -63,17 +76,15 @@ _LOCAL_MEMORY_CONF = {
     # THP policy is madvise-only, so this is a no-op for page-for-page
     # behaviour on healthy hosts.
     "spark.driver.extraJavaOptions": "-XX:+UseTransparentHugePages",
-    # ... and the same for the Python workers via glibc's malloc tunable
-    # (glibc 2.35+): worker startup faults ~100 MB per process (numpy +
-    # pandas + Arrow buffers) x one worker per core, which under the same
-    # hypervisor episodes was the dominant cost of every mapInPandas-heavy
-    # query's first run. THP-backed arenas fault 2 MB at a time.
-    "spark.executorEnv.GLIBC_TUNABLES": "glibc.malloc.hugetlb=1",
+    # Python workers fork from the library's daemon (see the module
+    # docstring), found through the directory that holds this package
+    "spark.python.daemon.module": "sed_binning_spark._worker_daemon",
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 }
 
-# A caller's value for this key gets the local default's flags appended
-# instead of replacing them
-_JAVA_OPTS = "spark.driver.extraJavaOptions"
+# A caller's value for one of these keys gets the local default appended,
+# joined by the given separator, instead of replacing it
+_MERGED_KEYS = {"spark.driver.extraJavaOptions": " ", "spark.executorEnv.PYTHONPATH": os.pathsep}
 
 
 def _host_ram_bytes() -> int | None:
@@ -126,7 +137,8 @@ def get_spark(
             2x parallelism (AQE coalesces down, skew splits up).
         extra_conf: extra Spark conf entries (override defaults; in local
             mode the THP flag is appended to a given
-            ``spark.driver.extraJavaOptions`` instead of dropped).
+            ``spark.driver.extraJavaOptions`` and the package directory to
+            a given ``spark.executorEnv.PYTHONPATH`` instead of dropped).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
@@ -138,18 +150,20 @@ def get_spark(
 
     conf = dict(_DEFAULT_CONF)
     local = master.startswith("local")
+    local_conf = _LOCAL_CONF if local else {}
+    conf.update(local_conf)
     if local:
-        conf.update(_LOCAL_MEMORY_CONF)
         conf["spark.driver.memory"] = _local_driver_memory()
     if shuffle_partitions is None:
         shuffle_partitions = 2 * default_parallelism()
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
-        if local and _JAVA_OPTS in extra_conf:
-            flag = _LOCAL_MEMORY_CONF[_JAVA_OPTS]
-            if flag not in extra_conf[_JAVA_OPTS].split():
-                conf[_JAVA_OPTS] = f"{extra_conf[_JAVA_OPTS]} {flag}".strip()
+        for key, sep in _MERGED_KEYS.items():
+            if key in local_conf and key in extra_conf:
+                ours, theirs = local_conf[key], extra_conf[key].strip()
+                if ours not in theirs.split(sep):
+                    conf[key] = sep.join(filter(None, (theirs, ours)))
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

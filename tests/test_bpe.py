@@ -116,3 +116,18 @@ def test_bpe_validation(spark):
         bpe_train(df, text_column="nope")
     with pytest.raises(ValueError, match="text column"):
         bpe_encode(df, [], text_column="nope")
+
+
+
+def test_bpe_train_counts_rows_under_a_loose_limit(spark):
+    """A ``limit`` above the row count over a non-nullable text column must
+    not stand in for the row count: a corpus smaller than ``sample_size``
+    trains on every row, as the same corpus does without the limit."""
+    words = ["low", "lower", "newest", "widest", "wider", "lowest", "new"]
+    rows = [(i, " ".join(words[(i + k) % len(words)] for k in range(i % 5 + 2)))
+            for i in range(150)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    full = bpe_train(docs, num_merges=40, sample_size=200, seed=3)
+    limited = docs.select(F.coalesce("text", F.lit("")).alias("text")).limit(500)
+    assert not limited.schema["text"].nullable
+    assert bpe_train(limited, num_merges=40, sample_size=200, seed=3) == full
