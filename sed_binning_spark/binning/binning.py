@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import threading
 import time
 import uuid
 import warnings
@@ -403,16 +404,25 @@ _ROUTE_PROBE_MIN_BYTES = 256 << 20
 # entry when the same path is re-read after new part-files land (a fresh
 # read re-lists the directory, so sizeInBytes grows while the semantic
 # hash stays equal — a stale small count must not route a grown input onto
-# the driver-memory-bounded dense path) and de-risks 32-bit hash collisions
+# the driver-memory-bounded dense path) and de-risks 32-bit hash collisions.
+# Bounded to the newest _ROUTE_COUNT_MAX entries (oldest out); every read and
+# write holds the lock, since driver threads route concurrently.
 _ROUTE_COUNT_CACHE: dict[tuple[int, int], int] = {}
+_ROUTE_COUNT_LOCK = threading.Lock()
+_ROUTE_COUNT_MAX = 256
 
 
 def _cheap_row_estimate(df: DataFrame, n_cells: int = 0) -> int | None:
     """Row count for routing, but only when it is cheap to obtain.
 
-    Catalyst statistics answer instantly for materialized caches; a count()
-    over columnar sources / expression pipelines prunes every column and
-    costs one metadata-ish scan. But a plan containing Python stages
+    Catalyst statistics answer without a job only when the plan's top
+    node carries a rowCount, e.g. a materialized cache read as it is (its
+    ``InMemoryRelation``). Spark's size-only statistics visitor drops
+    rowCount at any Project or Filter, so a projected or filtered cache
+    pays the memoized count job below when it passes the size/cells gate,
+    and returns None under it. A count() over columnar sources /
+    expression pipelines prunes every column and costs one metadata-ish
+    scan. But a plan containing Python stages
     (mapInPandas loaders, pandas_udf transforms) cannot be pruned — a count
     would re-run the whole extraction, doubling ingest cost — so routing
     returns None there and the caller takes the always-safe shuffle plan
@@ -458,13 +468,16 @@ def _cheap_row_estimate(df: DataFrame, n_cells: int = 0) -> int | None:
         key = (df.semanticHash(), size)
     except Exception:
         key = None
-    if key is not None and key in _ROUTE_COUNT_CACHE:
-        return _ROUTE_COUNT_CACHE[key]
-    rows = df.count()
-    if key is not None:
-        if len(_ROUTE_COUNT_CACHE) > 256:
-            _ROUTE_COUNT_CACHE.clear()
-        _ROUTE_COUNT_CACHE[key] = rows
+    if key is None:
+        return df.count()
+    with _ROUTE_COUNT_LOCK:
+        rows = _ROUTE_COUNT_CACHE.get(key)
+    if rows is None:
+        rows = df.count()
+        with _ROUTE_COUNT_LOCK:
+            _ROUTE_COUNT_CACHE[key] = rows
+            if len(_ROUTE_COUNT_CACHE) > _ROUTE_COUNT_MAX:
+                del _ROUTE_COUNT_CACHE[next(iter(_ROUTE_COUNT_CACHE))]
     return rows
 
 
@@ -518,8 +531,6 @@ def _spill_collect_arrow(df: DataFrame):
         _warn_socket_fallback()
         return df.toArrow()
     import pyarrow.parquet as pq
-
-    _jemalloc_retain()
 
     path = os.path.join(scratch, f"sed-binning-spill-{uuid.uuid4().hex}")
     try:
@@ -582,35 +593,29 @@ def _dense_driver_histogram(df: DataFrame, flat, n_cells: int,
     if spill and scratch is None:
         _warn_socket_fallback()
 
-    # per-call ownership of the retained buffers: take the slots out on
-    # entry, so a concurrent caller finds them empty and allocates its own
-    ws = {k: v for k in ("vals", "gather")
-          if (v := _BINCOUNT_WORKSPACE.pop(k, None)) is not None}
-    try:
-        t0 = time.perf_counter()
-        if scratch is not None:
-            dtype = np.int32 if cell_type == "int" else np.int64
-            slices = _read_sorted_spill(sel, scratch, dtype, ws)
-        else:
-            col = sel.toArrow().column("cell")
-            slices = [c.to_numpy(zero_copy_only=False) for c in col.chunks]
-            LAST_RUN_INFO["small_collect_s"] = round(time.perf_counter() - t0, 3)
-        t1 = time.perf_counter()
-        hist = _sorted_slices_histogram(slices, n_cells, ws.setdefault("gather", []))
-        LAST_RUN_INFO["bincount_s"] = round(time.perf_counter() - t1, 3)
-        return hist
-    finally:
-        _BINCOUNT_WORKSPACE.update(ws)
+    t0 = time.perf_counter()
+    if scratch is not None:
+        dtype = np.int32 if cell_type == "int" else np.int64
+        slices = _read_sorted_spill(sel, scratch, dtype)
+    else:
+        col = sel.toArrow().column("cell")
+        slices = [c.to_numpy(zero_copy_only=False) for c in col.chunks]
+        LAST_RUN_INFO["small_collect_s"] = round(time.perf_counter() - t0, 3)
+    t1 = time.perf_counter()
+    hist = _sorted_slices_histogram(slices, n_cells)
+    LAST_RUN_INFO["bincount_s"] = round(time.perf_counter() - t1, 3)
+    return hist
 
 
-# MADV_HUGEPAGE on big driver-side buffers: the first write to a fresh page
-# costs a hypervisor round-trip to back the guest-physical page, and on a
-# memory-overcommitted host that service rate was measured as low as
-# 7 MB/s in episodes (800 MB sparse first-touch: 119 s). THP is madvise-only
-# in this guest, and madvise'd regions fault 2 MB at a time — 512x fewer
-# round-trips (measured in one such episode: 400 MB first-touch 74.0 s plain
-# vs 2.3 s madvise'd; identical when the host is quiet). Purely advisory —
-# any failure is ignored.
+# MADV_HUGEPAGE on big driver-side buffers: THP is madvise-only in this
+# guest, and the first write to a madvise'd region faults 2 MB at a time
+# instead of 4 KB. Measured on perfbench sed_workflow's bin_4d shape (4-core
+# host; 4.2e6 sorted indices scattered into the 400 MB float32 cube of
+# 100^4 cells): the kernel alone took 0.11-0.22 s with it and 0.42-0.61 s
+# without (18 of 18 calls in 6 processes a side; minor faults ~1.1e3 vs
+# ~1.95e5); one traced pair (seed 1203) read binning.combine_s 0.22 ->
+# 0.58 s and driver.sys_s 0.86 -> 1.31 s without it. Purely advisory — any
+# failure is ignored.
 _MADV_HUGEPAGE = 14
 _MADV_MIN_BYTES = 64 << 20
 
@@ -633,44 +638,16 @@ def _madv_hugepage(arr: np.ndarray) -> np.ndarray:
     return arr
 
 
-_JEMALLOC_RETAIN_SET = False
-
-
-def _jemalloc_retain() -> None:
-    """Disable dirty-page decay on pyarrow's jemalloc pool (once per
-    process): freed Arrow read buffers then stay resident and are recycled
-    by the next spill read instead of being munmap'd and re-faulted — the
-    same first-touch cost the workspace buffers below avoid. Retention is
-    bounded by the pool's peak live size (the spill reads, <= ~rows * 4 B);
-    buffers, never results, so repeated runs still recompute everything."""
-    global _JEMALLOC_RETAIN_SET
-    if _JEMALLOC_RETAIN_SET:
-        return
-    _JEMALLOC_RETAIN_SET = True
-    try:
-        import pyarrow as pa
-
-        if pa.default_memory_pool().backend_name == "jemalloc":
-            pa.jemalloc_set_decay_ms(-1)
-    except Exception:
-        pass
-
-
-def _read_sorted_spill(sel: DataFrame, scratch: str, dtype, ws: dict) -> list[np.ndarray]:
+def _read_sorted_spill(sel: DataFrame, scratch: str, dtype) -> list[np.ndarray]:
     """Spill source of the dense-driver kernel: one sorted slice per file.
 
     Executors write their within-partition-sorted cell indices as ZSTD
     parquet: sorted indices in the dense regime are runs of tiny deltas, so
-    the spill shrinks ~10x (measured 382 -> 36 MB at 1e8 rows x 1e8 cells)
-    — and on a host whose hypervisor backs fresh guest pages slowly (see
-    ``_madv_hugepage``), tmpfs file pages are exactly the allocation that
-    cannot be madvise'd or recycled from userspace, so fewer spill bytes is
-    the only lever. Driver threads then read each file into the persistent
-    MADV_HUGEPAGE'd values buffer ``ws["vals"]``; the returned slices are
-    views of it, valid until the buffer's next use."""
+    the spill shrinks ~10x (measured 382 -> 36 MB at 1e8 rows x 1e8 cells).
+    Driver threads then read each file into one values buffer of this
+    call; the returned slices are views of it."""
     import pyarrow.parquet as pq
 
-    _jemalloc_retain()
     t0 = time.perf_counter()
     path = os.path.join(scratch, f"sed-binning-spill-{uuid.uuid4().hex}")
     try:
@@ -689,9 +666,7 @@ def _read_sorted_spill(sel: DataFrame, scratch: str, dtype, ws: dict) -> list[np
         offs = np.zeros(len(files) + 1, dtype=np.int64)
         np.cumsum([m.metadata.num_rows for m in metas], out=offs[1:])
         total = int(offs[-1])
-        buf = ws.get("vals")
-        if buf is None or buf.dtype != dtype or buf.size < total:
-            buf = ws["vals"] = _madv_hugepage(np.empty(total, dtype=dtype))
+        buf = _madv_hugepage(np.empty(total, dtype=dtype))
 
         def _load(i: int) -> None:
             o = int(offs[i])
@@ -725,8 +700,7 @@ def _driver_threads() -> int:
 _GATHER_CAP = 16_000_000
 
 
-def _sorted_slices_histogram(slices: Sequence[np.ndarray], n_cells: int,
-                             scratches: list) -> np.ndarray:
+def _sorted_slices_histogram(slices: Sequence[np.ndarray], n_cells: int) -> np.ndarray:
     """Float32 histogram over cells ``[0, n_cells)`` of sorted index slices:
     the one dense-driver kernel.
 
@@ -745,12 +719,11 @@ def _sorted_slices_histogram(slices: Sequence[np.ndarray], n_cells: int,
       rows x 1e8 cells) scatters the run-lengths of each sorted span, so
       it touches only occupied cells instead of bincounting empty ones;
     - a denser range gathers its spans (widened to int64 in the same pass)
-      into the thread's retained scratch, bincounts them and writes the
-      counts straight into the cube — no n_cells-sized int64 accumulator,
-      no serial astype pass.
+      into its thread's int64 scratch (allocated on the thread's first
+      dense range, reused by its later ones), bincounts them and writes
+      the counts straight into the cube — no n_cells-sized int64
+      accumulator, no serial astype pass.
 
-    ``scratches`` is the caller's list of per-thread int64 gather buffers,
-    grown in place and reused by the next call that gets the same list.
     The result is order-independent (a histogram) — pinned against
     np.bincount by tests."""
     hist = _madv_hugepage(np.zeros(n_cells, dtype=np.float32))
@@ -765,8 +738,6 @@ def _sorted_slices_histogram(slices: Sequence[np.ndarray], n_cells: int,
     n_ranges = max(n_threads, int(np.ceil(n_cells / 3_000_000)),
                    int(np.ceil(total / 2_500_000)))
     bounds = np.linspace(0, n_cells, n_ranges + 1).astype(np.int64)
-    while len(scratches) < n_threads:
-        scratches.append(np.empty(0, dtype=np.int64))
 
     def _locate(s: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         if s.size > 1 and not bool(np.all(s[:-1] <= s[1:])):
@@ -799,10 +770,9 @@ def _sorted_slices_histogram(slices: Sequence[np.ndarray], n_cells: int,
         return sc
 
     def _worker(j: int) -> None:
-        sc = scratches[j]
+        sc = np.empty(0, dtype=np.int64)
         for i in range(j, n_ranges, n_threads):
             sc = _one_range(i, sc)
-        scratches[j] = sc
 
     with ThreadPoolExecutor(n_threads) as ex:
         located = list(ex.map(_locate, slices))
@@ -825,35 +795,6 @@ def _gather(spans, sc: np.ndarray):
                 w = 0
     if w:
         yield sc[:w]
-
-
-# Retained dense-kernel buffers, reused across calls. An 800 MB np.empty is
-# ~free to ALLOCATE but the kernel then zero-faults every page on first
-# write, and freeing returns the mmap'd block so the next run faults it all
-# over again; under memory pressure (the Spark JVM + page cache share the
-# host) those faults serialize on mmap_lock and were measured turning a
-# 0.9 s bincount into 5-37 s (sys-time dominated). A dense call takes the
-# slots out on entry and puts its own back on exit, so concurrent calls
-# never share a buffer: a second caller allocates its own set, and the
-# last one back is the set retained. Retained footprint:
-# - "vals": the spill read buffer, rows * itemsize; <= _DENSE_ROWS_BUDGET
-#   int32 -> ~1 GB worst case;
-# - "gather": one int64 scratch per driver thread (<= 16), 4e6 values
-#   (32 MB) typically, and up to _GATHER_CAP values (128 MB) once a skewed
-#   range has grown it -> ~0.5 GB typical, ~2 GB worst case.
-# So up to ~3 GB between calls (each concurrent call holds its own set
-# while it runs). Bounded by the dense-path routing guards and releasable
-# via release_bincount_workspace() on long-lived drivers.
-_BINCOUNT_WORKSPACE: dict = {}
-
-
-def release_bincount_workspace() -> None:
-    """Free the retained dense-kernel buffers (see ``_BINCOUNT_WORKSPACE``):
-    up to ~3 GB held between dense binning calls — the ~1 GB values buffer
-    plus up to 16 x 128 MB of gather scratch after a skewed range. Call from
-    a long-lived driver after a binning burst; a dense call still running
-    keeps its own buffers and puts them back when it returns."""
-    _BINCOUNT_WORKSPACE.clear()
 
 
 def bin_dataframe_sparse(

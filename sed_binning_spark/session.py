@@ -68,13 +68,13 @@ _DEFAULT_CONF = {
 # _local_driver_memory().
 _LOCAL_CONF = {
     "spark.driver.maxResultSize": "4g",
-    # madvise-mode THP for the whole local JVM (heap + code cache):
-    # first-touch of a fresh guest page costs a hypervisor round-trip on a
-    # memory-overcommitted host (measured as low as 7 MB/s in episodes);
-    # THP faults back 2 MB at a time — 512x fewer round-trips (400 MB
-    # first-touch 74 s -> 2.3 s measured in one such episode). The guest
-    # THP policy is madvise-only, so this is a no-op for page-for-page
-    # behaviour on healthy hosts.
+    # madvise-mode THP for the whole local JVM (heap + code cache): the
+    # guest THP policy is madvise-only, so without this flag the heap
+    # faults 4 KB at a time. Measured on perfbench (4-core host, 10
+    # alternating pairs each): without it sed_workflow setup_s, which
+    # caches 4.2e6 events into the heap, rose 2.22 -> 2.86 s (median,
+    # worse in 9 of 10) and ingest_curation pass_s 1.42 -> 1.59 s (worse
+    # in 7 of 10).
     "spark.driver.extraJavaOptions": "-XX:+UseTransparentHugePages",
     # Python workers fork from the library's daemon (see the module
     # docstring), found through the directory that holds this package

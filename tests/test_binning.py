@@ -428,6 +428,50 @@ def test_routing_probe_memoizes_counts(spark, tmp_path):
     assert len(calls) == 1
 
 
+def test_routing_memo_survives_a_concurrent_clear(spark, tmp_path, monkeypatch):
+    """A memo hit is one locked read: another caller's eviction landing
+    between a membership test and the read must not raise KeyError out of
+    routing. The cache below empties itself inside ``__contains__``, the
+    window a concurrent insert's wholesale clear used to hit."""
+    from sed_binning_spark.binning import binning as binning_mod
+
+    p = str(tmp_path / "race.parquet")
+    spark.range(300).selectExpr("CAST(id AS DOUBLE) AS v").write.parquet(p)
+    df = spark.read.parquet(p)
+    monkeypatch.setattr(binning_mod, "_ROUTE_PROBE_MIN_BYTES", 0)
+    monkeypatch.setattr(binning_mod, "_ROUTE_COUNT_CACHE", {})
+    assert binning_mod._cheap_row_estimate(df) == 300
+
+    class ClearedOnLookup(dict):
+        def __contains__(self, key):
+            found = super().__contains__(key)
+            self.clear()
+            return found
+
+    monkeypatch.setattr(binning_mod, "_ROUTE_COUNT_CACHE",
+                        ClearedOnLookup(binning_mod._ROUTE_COUNT_CACHE))
+    assert binning_mod._cheap_row_estimate(df) == 300
+
+
+def test_routing_memo_evicts_oldest_entry(spark, tmp_path, monkeypatch):
+    """The insert past the bound evicts only the oldest entry: the newest
+    256 memoized counts, the new one included, stay."""
+    from sed_binning_spark.binning import binning as binning_mod
+
+    p = str(tmp_path / "evict.parquet")
+    spark.range(70).selectExpr("CAST(id AS DOUBLE) AS v").write.parquet(p)
+    df = spark.read.parquet(p)
+    old = {(-i, 0): i for i in range(256)}
+    monkeypatch.setattr(binning_mod, "_ROUTE_PROBE_MIN_BYTES", 0)
+    monkeypatch.setattr(binning_mod, "_ROUTE_COUNT_CACHE", dict(old))
+    assert binning_mod._cheap_row_estimate(df) == 70
+    cache = binning_mod._ROUTE_COUNT_CACHE
+    assert len(cache) == 256
+    assert (0, 0) not in cache
+    assert all(cache[k] == v for k, v in list(old.items())[1:])
+    assert list(cache.values())[-1] == 70
+
+
 def test_spill_fallback_warns_on_cluster_without_scratch(spark, monkeypatch):
     """On a non-local master with no SPARK_GRAFT_SCRATCH_DIR the spill
     collect silently degrades to the single-socket Arrow collect — it must

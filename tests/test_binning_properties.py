@@ -138,7 +138,7 @@ def test_driver_bincount_strategies_agree(n_vals, n_cells, seed, n_chunks):
     try:
         for cap in (old_cap, 7):
             binning_mod._GATHER_CAP = cap
-            got = binning_mod._sorted_slices_histogram(slices, n_cells, [])
+            got = binning_mod._sorted_slices_histogram(slices, n_cells)
             np.testing.assert_array_equal(got, want)
     finally:
         binning_mod._GATHER_CAP = old_cap
@@ -156,7 +156,7 @@ def test_driver_bincount_threaded_paths_agree(monkeypatch):
     rng = np.random.default_rng(11)
     for n_vals, n_cells in ((9_000_000, 100_000), (5_000_000, 9_000_000)):
         vals = rng.integers(0, n_cells, n_vals).astype(np.int32)
-        got = binning_mod._sorted_slices_histogram(_sorted_chunks(vals, 7), n_cells, [])
+        got = binning_mod._sorted_slices_histogram(_sorted_chunks(vals, 7), n_cells)
         np.testing.assert_array_equal(got, np.bincount(vals, minlength=n_cells))
 
 
@@ -177,22 +177,21 @@ def _kernel_call(draw):
     small_gather_cap=st.booleans(),
 )
 @settings(max_examples=25, deadline=None)
-def test_threaded_bincount_workspace_reuse_is_invisible(calls, first_dtype, small_gather_cap):
-    """Consecutive kernel calls sharing one list of gather scratches (as
-    dense calls share the retained ``_BINCOUNT_WORKSPACE["gather"]`` slot)
-    must each equal np.bincount(...)[:n_cells] while n_cells shrinks and
-    the dtype switches, so a stale byte of a retained buffer would show up
-    as a count from an earlier call. Each call also covers any slicing,
-    including empty slices, one slice the executors failed to sort, int32
-    and int64 indices, and values at the NULL sentinel ``n_cells`` (never
-    counted). Half the values crowd a 64-cell window, so dense (bincount)
-    ranges sit beside sparse (run-length scatter) ones; a small gather cap
-    forces dense ranges to count in pieces."""
+def test_threaded_bincount_scratch_reuse_is_invisible(calls, first_dtype, small_gather_cap):
+    """Consecutive kernel calls must each equal np.bincount(...)[:n_cells]
+    while n_cells shrinks and the dtype switches. Within a call each driver
+    thread reuses one gather scratch across its ranges, so a stale value of
+    an earlier range or call would show up as a wrong count. Each call also
+    covers any slicing, including empty slices, one slice the executors
+    failed to sort, int32 and int64 indices, and values at the NULL
+    sentinel ``n_cells`` (never counted). Half the values crowd a 64-cell
+    window, so dense (bincount) ranges sit beside sparse (run-length
+    scatter) ones; a small gather cap forces dense ranges to count in
+    pieces."""
     from sed_binning_spark.binning import binning as binning_mod
 
     calls = sorted(calls, key=lambda c: -c[0])
     dtypes = [first_dtype, np.int64 if first_dtype is np.int32 else np.int32]
-    scratches: list = []
     old_cap = binning_mod._GATHER_CAP
     if small_gather_cap:
         binning_mod._GATHER_CAP = 997
@@ -213,7 +212,7 @@ def test_threaded_bincount_workspace_reuse_is_invisible(calls, first_dtype, smal
                 slices[i] = rng.permutation(slices[i])
             vals = np.concatenate([np.zeros(0, np.int64), *slices]).astype(np.int64)
             want = np.bincount(vals, minlength=n_cells + 1)[:n_cells]
-            got = binning_mod._sorted_slices_histogram(slices, n_cells, scratches)
+            got = binning_mod._sorted_slices_histogram(slices, n_cells)
             assert got.dtype == np.float32
             np.testing.assert_array_equal(got, want)
     finally:
