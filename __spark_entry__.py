@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 from collections.abc import Callable
 
 import numpy as np
@@ -154,8 +155,11 @@ FROM events
 # other sessions' or stale entries of the same scan, so a driver that
 # cycles contexts (pytest, repeated in-process benches) or sessions
 # (spark.newSession()) keeps one entry per scan and never accumulates dead
-# py4j handles or the sessions they pin.
+# py4j handles or the sessions they pin. One lock covers the lookup, the
+# prune, the build and the insert: two unlocked misses on one scan would
+# both list the same stale key and the second delete would raise KeyError.
 _SCAN_MEMO: dict = {}
+_SCAN_MEMO_LOCK = threading.Lock()
 
 
 def _scan_memo(spark: SparkSession, key: tuple, path: str, build):
@@ -166,12 +170,13 @@ def _scan_memo(spark: SparkSession, key: tuple, path: str, build):
     except OSError:
         fresh = None
     full = (app, id(spark), *key, fresh)
-    df = _SCAN_MEMO.get(full)
-    if df is None:
-        for k in [k for k in _SCAN_MEMO if k[0] != app or k[2:-1] == key]:
-            del _SCAN_MEMO[k]
-        df = build()
-        _SCAN_MEMO[full] = df
+    with _SCAN_MEMO_LOCK:
+        df = _SCAN_MEMO.get(full)
+        if df is None:
+            for k in [k for k in _SCAN_MEMO if k[0] != app or k[2:-1] == key]:
+                del _SCAN_MEMO[k]
+            df = build()
+            _SCAN_MEMO[full] = df
     return df
 
 
@@ -1279,23 +1284,26 @@ def _q_mpes_timestamps(spark, sf):
     # clear first: stale Scan* debris (pid reuse, older layouts) would
     # silently flip runs_ok and fail the gate as a phantom regression
     shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(os.path.join(d, "sub"))
-    for name in (
-        "Scan0030_2.h5", "Scan0030_10.h5",      # natural vs lexical order
-        os.path.join("sub", "Scan0030_5.h5"),   # recursion
-        "Scan0031_1.h5", "Scan0030_1.txt",      # decoys: other run / ext
-    ):
-        with open(os.path.join(d, name), "w"):
-            pass
-    got = [os.path.relpath(p, d) for p in get_files_from_run_id(30, d)]
-    ok = got == [
-        "Scan0030_2.h5", "Scan0030_10.h5", os.path.join("sub", "Scan0030_5.h5"),
-    ]
     try:
-        get_files_from_run_id(99, d)
-        ok = False
-    except FileNotFoundError:
-        pass
+        os.makedirs(os.path.join(d, "sub"))
+        for name in (
+            "Scan0030_2.h5", "Scan0030_10.h5",      # natural vs lexical order
+            os.path.join("sub", "Scan0030_5.h5"),   # recursion
+            "Scan0031_1.h5", "Scan0030_1.txt",      # decoys: other run / ext
+        ):
+            with open(os.path.join(d, name), "w"):
+                pass
+        got = [os.path.relpath(p, d) for p in get_files_from_run_id(30, d)]
+        ok = got == [
+            "Scan0030_2.h5", "Scan0030_10.h5", os.path.join("sub", "Scan0030_5.h5"),
+        ]
+        try:
+            get_files_from_run_id(99, d)
+            ok = False
+        except FileNotFoundError:
+            pass
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
     ev = append_event_timestamps(_events(spark, sf), _MS_MARKERS, _MPES_START)
     return ev.select("event_id", "timeStamps", F.lit(bool(ok)).alias("runs_ok"))

@@ -10,7 +10,8 @@ expression that scales to multi-TB inputs unchanged:
 - loading      -> spark.read over Parquet/CSV/JSON (+ HDF5 conversion layer)
 - transforms   -> withColumn expression pipelines (calibration, corrections,
                   offsets, jitter); Python crosses the JVM boundary only for
-                  grid interpolation (Arrow-batched pandas_udf)
+                  grid interpolation and ``add_time_stamped_data``'s
+                  ``np.interp`` (Arrow-batched pandas_udfs)
 - binning      -> groupBy(bin-index exprs).count() -> dense hypercube (Cube)
 - export       -> driver-side writers on the (small) collected cube
 

@@ -124,8 +124,8 @@ def bin_index_columns(
             # old np.allclose default) must take the exact path
             if np.allclose(widths, widths[0], rtol=1e-12, atol=0.0):
                 # uniform centers -> O(1) arithmetic index instead of the
-                # O(n_edges)-per-row array scan; same inclusive-last-edge /
-                # NaN-reject semantics
+                # O(log n_edges)-per-row binary search; same
+                # inclusive-last-edge / NaN-reject semantics
                 expr = bin_index_expr(
                     ax, edges.size - 1, float(edges[0]), float(edges[-1]),
                     half_bin_shift=False,

@@ -6,10 +6,10 @@ skew-join splitting), Arrow for every Python<->JVM crossing, and a shuffle
 partition count that AQE can coalesce downward. On a real cluster the same
 session settings hold; only master/memory come from the environment.
 
-Every Python stage (HDF5 extraction, the ``apply_dfield`` grid UDF, the
-searchsorted bin index, dedup and media ``mapInPandas``) pays a per-task
-set-up cost before its function sees a row. Spark reuses each Python worker
-between tasks, but every task's ``setup_spark_files`` calls
+Every Python stage (HDF5 extraction, the ``apply_dfield`` grid UDF, the mpes
+timestamp and ``np.interp`` UDFs, dedup and media ``mapInPandas``) pays a
+per-task set-up cost before its function sees a row. Spark reuses each Python
+worker between tasks, but every task's ``setup_spark_files`` calls
 ``importlib.invalidate_caches()``, and through CPython 3.12 each of the ~15
 zip importers over ``pyspark.zip``, the py4j zip and the spark-core jar then
 re-parses its archive's central directory: 0.12-0.27 s per task on a 4-core
@@ -36,7 +36,7 @@ _DEFAULT_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow batching for pandas_udf / toPandas — mandatory for the few
-    # operators that cross into Python (grid interpolation, searchsorted).
+    # operators that cross into Python (grid interpolation, np.interp).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
     # Small dimension tables (sector delays, calibration lookup tables)

@@ -618,3 +618,64 @@ def test_concurrent_driver_combines_match_serial(spark, monkeypatch):
     finally:
         for f in frames:
             f.unpersist()
+
+
+@pytest.mark.parametrize("kind", ["uniform", "log", "duplicated", "two", "1e4"])
+def test_count_le_matches_searchsorted(spark, kind):
+    """The explicit-edge count equals np.searchsorted(side="right") on
+    every value, one ulp either side of it, signed zeros, non-finite and
+    out-of-range probes."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from sed_binning_spark.binning.expressions import _count_le
+
+    rng = np.random.default_rng(9)
+    v = {
+        "uniform": np.linspace(-3.0, 7.0, 51),
+        "log": np.geomspace(1e-3, 1e3, 200),
+        "duplicated": np.sort(np.r_[np.linspace(0.0, 1.0, 30), [0.5] * 7, [0.0] * 3, [1.0] * 2]),
+        "two": np.array([1.0, 2.0]),
+        "1e4": np.sort(rng.normal(size=10_000)),
+    }[kind]
+    probes = [v[0] - 1.0, v[-1] + 1.0, -1e300, 1e300, 0.0, -0.0, 5e-324,
+              math.inf, -math.inf, math.nan]
+    for e in v.tolist():
+        probes += [e, math.nextafter(e, math.inf), math.nextafter(e, -math.inf)]
+    probes = np.asarray(probes, dtype=float)
+    # from Python rows: a pandas NaN would arrive as NULL
+    df = spark.createDataFrame(list(enumerate(probes.tolist())), "i long, x double")
+    got = (
+        df.select("i", _count_le(F.col("x"), v).alias("c"))
+        .toPandas().sort_values("i")["c"].to_numpy()
+    )
+    np.testing.assert_array_equal(got, np.searchsorted(v, probes, side="right"))
+
+
+def test_explicit_edge_index_plans_no_python_stage(spark):
+    """The explicit-edge index is one JVM expression at every edge count:
+    no Python stage in a 201-edge normalization histogram or in binning
+    over 200 non-uniform centers."""
+    from pyspark.sql import functions as F
+
+    from sed_binning_spark.binning.binning import (
+        bin_index_columns,
+        normalization_histogram_sparse_from_timed_dataframe,
+    )
+
+    df = spark.range(20_000).select((F.rand(5) * 120.0 - 10.0).alias("v"))
+    centers = np.geomspace(1.0, 100.0, 200)
+    norm = normalization_histogram_sparse_from_timed_dataframe(
+        df, "v", np.linspace(0.0, 100.0, 201), 0.5,
+    )
+    _, _, _, exprs = bin_index_columns(df, [centers], ["v"])
+    for q in (norm, df.select(*exprs), bin_dataframe_sparse(df, bins=[centers], axes=["v"])):
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "PythonUDF" not in plan, plan
+
+    x = df.toPandas().v.to_numpy()
+    want, _ = np.histogram(x, bins=bin_centers_to_bin_edges(centers))
+    np.testing.assert_array_equal(
+        bin_dataframe(df, bins=[centers], axes=["v"]).data, want.astype(np.float32),
+    )

@@ -63,16 +63,16 @@ def test_uniform_binning_classification_property(spark, case):
 @given(
     centers=st.lists(
         st.floats(-1e4, 1e4, allow_nan=False, allow_infinity=False),
-        min_size=2, max_size=30, unique=True,
+        min_size=2, max_size=200, unique=True,
     ),
     placements=st.lists(
-        st.tuples(st.integers(-2, 40), st.floats(-0.4, 0.4, allow_nan=False)),
+        st.tuples(st.integers(-2, 202), st.floats(-0.4, 0.4, allow_nan=False)),
         min_size=1, max_size=60,
     ),
 )
 def test_explicit_edges_classification_property(spark, centers, placements):
-    """Explicit (possibly non-uniform) bin centers: same off-edge
-    classification contract through the searchsorted/HOF path."""
+    """Explicit (possibly non-uniform) bin centers, up to 200 of them: same
+    off-edge classification contract through the explicit-edge index."""
     from hypothesis import assume
 
     from sed_binning_spark.binning.utils import bin_centers_to_bin_edges

@@ -122,7 +122,7 @@ def test_uniform_twin_bit_exact(spark, case):
 
 @st.composite
 def _edges_case(draw):
-    n_edges = draw(st.integers(2, 12))
+    n_edges = draw(st.integers(2, 200))
     start = draw(st.floats(-1e5, 1e5, allow_nan=False, allow_infinity=False))
     steps = draw(
         st.lists(st.floats(1e-3, 1e3, allow_nan=False), min_size=n_edges - 1,

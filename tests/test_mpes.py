@@ -13,7 +13,6 @@ from sed_binning_spark.loaders.mpes import (
     append_event_timestamps,
     count_rate_from_markers,
     elapsed_time_from_markers,
-    event_timestamp_expr,
     event_timestamps_np,
     get_files_from_run_id,
     streams_to_dataframe,
@@ -64,18 +63,12 @@ def test_streams_length_mismatch(spark):
         streams_to_dataframe(spark, {"a": np.zeros(3), "b": np.zeros(4)})
 
 
-def test_append_event_timestamps_udf_and_expr(spark, events_df):
+def test_append_event_timestamps_udf(spark, events_df):
     marker = np.array([100, 400, 400, 2000, 5000])
     out = append_event_timestamps(events_df, marker, 50.0)
     got = out.select("row_id", "timeStamps").toPandas().sort_values("row_id")
     want = 50.0 + np.searchsorted(marker, got.row_id.to_numpy(), side="right") / 1000.0
     np.testing.assert_array_equal(got.timeStamps.to_numpy(), want)
-    # pure-expression twin agrees with the UDF
-    expr_out = (
-        events_df.withColumn("ts2", event_timestamp_expr(marker, 50.0))
-        .select("row_id", "ts2").toPandas().sort_values("row_id")
-    )
-    np.testing.assert_array_equal(expr_out.ts2.to_numpy(), want)
 
 
 def test_timed_dataframe_samples_marker_positions(spark):

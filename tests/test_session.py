@@ -78,6 +78,41 @@ def test_scan_memo_keeps_one_entry_per_scan_across_sessions(spark, tmp_path):
          (path.stat().st_size, path.stat().st_mtime_ns))]
 
 
+def test_scan_memo_concurrent_misses_prune_one_stale_key(spark, tmp_path, monkeypatch):
+    """Two threads missing on the same scan both see its stale entry. Held
+    in the prune until both arrive (or a short timeout, when a lock keeps
+    the second thread out), an unlocked memo deleted that key twice and
+    the second delete raised KeyError."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    sys.path.insert(0, str(_REPO))
+    import __spark_entry__ as entry
+
+    barrier = threading.Barrier(2, timeout=2)
+
+    class RendezvousDict(dict):
+        def __delitem__(self, key):
+            try:
+                barrier.wait()
+            except threading.BrokenBarrierError:
+                pass
+            super().__delitem__(key)
+
+    path = tmp_path / "scan.parquet"
+    path.write_bytes(b"x")
+    key = ("race-test", str(tmp_path))
+    memo = RendezvousDict()
+    memo[(spark.sparkContext.applicationId, id(spark), *key, "stale")] = None
+    monkeypatch.setattr(entry, "_SCAN_MEMO", memo)
+    built = object()
+    with ThreadPoolExecutor(2) as ex:
+        futs = [ex.submit(entry._scan_memo, spark, key, str(path), lambda: built)
+                for _ in range(2)]
+        assert [f.result() for f in futs] == [built, built]
+    assert list(memo.values()) == [built]
+
+
 def _write_zip(path: Path, *modules: str) -> None:
     with zipfile.ZipFile(path, "w") as zf:
         for name in modules:
