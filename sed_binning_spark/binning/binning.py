@@ -54,11 +54,11 @@ _DENSE_DEDUP_LIMIT = 32
 # faster than a spill round-trip (one extra Spark write job + filesystem).
 _SPILL_MIN_CELLS = 4_000_000
 
-# Below this many INPUT rows the dense-driver path skips the spill and the
-# executor sort: the raw indices are a few MB, so one direct Arrow collect,
-# sorted on the driver, beats a sort + spill write job, and the kernel's
-# sparse run-length scatter touches only the ~rows occupied cells of the
-# prod(bins) cube (the sf-scale 4-D regime: 1e5 rows x 1e8 cells).
+# Below this many INPUT rows the dense-driver path skips the spill: the raw
+# indices are a few MB, so one direct Arrow collect, sorted by the kernel,
+# beats a spill write job, and the kernel's sparse run-length scatter
+# touches only the ~rows occupied cells of the prod(bins) cube (the
+# sf-scale 4-D regime: 1e5 rows x 1e8 cells).
 _DENSE_SMALL_ROWS = 4_000_000
 
 # Phase timings (seconds) of the most recent bin_dataframe call, for
@@ -187,14 +187,15 @@ def bin_dataframe(
             occupied cells (the 100 TB plan: driver traffic bounded by
             prod(bins) regardless of row count);
             ``"driver"`` — no shuffle, no aggregation: executors hand the
-            raw flat indices to the driver as per-partition slices (sorted
-            + parallel parquet spill; one Arrow collect for small inputs or
-            without shared scratch), where one threaded cell-range kernel
-            histograms the sorted slices — bincounting dense ranges,
-            scattering run-lengths into sparse ones. The reference's dense
-            kernel + tree-sum shape (sed/binning/binning.py:374-407,
-            sed/binning/numba_bin.py:16-71), and the right plan in the dense
-            regime (occupied ~ rows), where a shuffle dedups almost nothing;
+            raw flat indices to the driver as per-partition slices (parallel
+            parquet spill, each file sorted in place by a driver thread; one
+            Arrow collect for small inputs or without shared scratch), where
+            one threaded cell-range kernel histograms the sorted slices —
+            bincounting dense ranges, scattering run-lengths into sparse
+            ones. The reference's dense kernel + tree-sum shape
+            (sed/binning/binning.py:374-407, sed/binning/numba_bin.py:16-71),
+            and the right plan in the dense regime (occupied ~ rows), where a
+            shuffle dedups almost nothing;
             ``"auto"`` — pick by a cheap row-count estimate (default).
         max_dense_cells: driver budget for the dense cube; a bin spec whose
             prod(bins) exceeds it raises with a pointer to
@@ -422,11 +423,12 @@ def _cheap_row_estimate(df: DataFrame, n_cells: int = 0) -> int | None:
     pays the memoized count job below when it passes the size/cells gate,
     and returns None under it. A count() over columnar sources /
     expression pipelines prunes every column and costs one metadata-ish
-    scan. But a plan containing Python stages
-    (mapInPandas loaders, pandas_udf transforms) cannot be pruned — a count
-    would re-run the whole extraction, doubling ingest cost — so routing
-    returns None there and the caller takes the always-safe shuffle plan
-    (callers who know better can force combine='driver'). Tiny inputs
+    scan. The count's own plan decides: Catalyst prunes a pandas_udf whose
+    outputs only feed projections (apply_dfield's chain) out of it. A count
+    plan that keeps a Python node (a filter on a UDF output, a mapInPandas
+    loader) would re-run the extraction, so routing returns None there and
+    the caller takes the always-safe shuffle plan (callers who know better
+    can force combine='driver'). Tiny inputs
     (estimated bytes < _ROUTE_PROBE_MIN_BYTES) also return None — at that
     size the probe job itself dominates — UNLESS the bin spec's cell count
     is itself large (>= _SPILL_MIN_CELLS): there the routing decision is
@@ -457,7 +459,7 @@ def _cheap_row_estimate(df: DataFrame, n_cells: int = 0) -> int | None:
         # Python stages only reliably show in the PHYSICAL plan (a
         # pandas_udf expression prints as its function name in the logical
         # plan, with no recognizable marker)
-        plan_str = qe.sparkPlan().toString()
+        plan_str = df.groupBy().count()._jdf.queryExecution().sparkPlan().toString()
     except Exception:
         return None
     python_nodes = ("MapInPandas", "MapInArrow", "PythonUDF", "FlatMapGroupsInPandas",
@@ -485,10 +487,10 @@ def _resolve_scratch_dir(spark) -> str | None:
     """Scratch directory shared by driver and executors, or None when only
     the single-socket Arrow collect is safe (non-local master without
     SPARK_GRAFT_SCRATCH_DIR). Local mode prefers RAM-backed /dev/shm:
-    every spill through here is budget-bounded (raw indices <= ~1 GB by
-    _DENSE_ROWS_BUDGET, occupied cells <= max_dense_cells), and tmpfs
-    removes disk I/O — and its noisy-neighbor variance on shared hosts —
-    from the hot path."""
+    every spill through here is uncompressed and budget-bounded (raw int32
+    indices <= ~1 GB by _DENSE_ROWS_BUDGET, occupied cells <=
+    max_dense_cells), and tmpfs removes disk I/O — and its noisy-neighbor
+    variance on shared hosts — from the hot path."""
     scratch = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
     if scratch is not None:
         return scratch
@@ -547,28 +549,28 @@ def _spill_collect_arrow(df: DataFrame):
 
 def _dense_driver_histogram(df: DataFrame, flat, n_cells: int,
                             est_rows: int | None = None) -> np.ndarray:
-    """Dense-regime histogram: executor-sorted raw indices + one driver kernel.
+    """Dense-regime histogram: raw indices + one driver kernel.
 
     In the dense regime a groupBy dedups almost nothing, so the cheapest
     correct plan is to skip shuffle AND aggregation: executors compute the
-    flat bin index (pure codegen), and the driver histograms its
-    partition-sorted slices with
-    :func:`_sorted_slices_histogram` — the flat-index accumulation of the
-    reference kernel (sed/binning/numba_bin.py:16-71) with the driver as the
-    tree root (sed/binning/binning.py:374-407). Measured at 1e8 rows x 1e8
-    cells: ~12 s total vs ~33 s for groupBy+collect and ~30 s for mapInArrow
-    partial histograms (every plan that streams 1e8 rows through the Python
-    workers pays a ~10 s Arrow-socket floor; the spill never crosses it).
-    _choose_combine bounds rows (<= 2.5e8 -> <= 1 GB of int32 indices)
-    before selecting this path.
+    flat bin index (pure codegen, no sort), and the driver histograms the
+    sorted slices with :func:`_sorted_slices_histogram` — the flat-index
+    accumulation of the reference kernel (sed/binning/numba_bin.py:16-71)
+    with the driver as the tree root (sed/binning/binning.py:374-407).
+    Measured at 1e8 rows x 1e8 cells: ~12 s total vs ~33 s for
+    groupBy+collect and ~30 s for mapInArrow partial histograms (every plan
+    that streams 1e8 rows through the Python workers pays a ~10 s
+    Arrow-socket floor; the spill never crosses it). _choose_combine bounds
+    rows (<= 2.5e8 -> <= 1 GB of int32 indices) before selecting this path.
 
     The slices come from one of two sources. With a shared scratch
     directory and more than ``_DENSE_SMALL_ROWS`` rows (or no estimate),
-    executors sort within partitions, their parallel writers spill, and
-    the driver reads one slice per file (:func:`_read_sorted_spill`).
-    Otherwise they are the chunks of one ``toArrow()`` collect — sorted by
-    the executors when there is no shared scratch (which warns), and by
-    the kernel for small inputs.
+    the executors' parallel writers spill and the driver reads and sorts
+    one slice per file (:func:`_read_spill`). Otherwise they are the
+    unsorted chunks of one ``toArrow()`` collect, which the kernel sorts —
+    small inputs, and inputs without a shared scratch (which warns). A
+    driver-side ``ndarray.sort`` of 4.2e6 int32 indices takes 0.04 s; a
+    Spark ``sortWithinPartitions`` of them took 0.35 s (4-core host).
 
     NULL (out-of-range/NaN) indices are mapped to a sentinel cell
     ``n_cells`` via one coalesce node, which the kernel never counts: a
@@ -580,15 +582,8 @@ def _dense_driver_histogram(df: DataFrame, flat, n_cells: int,
     converts to numpy as a straight buffer view.
     """
     cell_type = "int" if n_cells + 1 <= np.iinfo(np.int32).max else "bigint"
-    cell = F.coalesce(flat, F.lit(n_cells)).cast(cell_type).alias("cell")
+    sel = df.select(F.coalesce(flat, F.lit(n_cells)).cast(cell_type).alias("cell"))
     spill = est_rows is None or est_rows > _DENSE_SMALL_ROWS
-    sel = df.select(cell)
-    if spill:
-        # executor sort: the zstd spill shrinks ~10x on sorted indices and
-        # the driver skips sorting up to 2.5e8 values; a small input's
-        # chunks sort faster in the kernel than in one more Spark sort
-        # stage (measured 4e6 rows: 0.73 vs 0.29-0.45 s collect)
-        sel = sel.sortWithinPartitions("cell")
     scratch = _resolve_scratch_dir(df.sparkSession) if spill else None
     if spill and scratch is None:
         _warn_socket_fallback()
@@ -596,7 +591,7 @@ def _dense_driver_histogram(df: DataFrame, flat, n_cells: int,
     t0 = time.perf_counter()
     if scratch is not None:
         dtype = np.int32 if cell_type == "int" else np.int64
-        slices = _read_sorted_spill(sel, scratch, dtype)
+        slices = _read_spill(sel, scratch, dtype)
     else:
         col = sel.toArrow().column("cell")
         slices = [c.to_numpy(zero_copy_only=False) for c in col.chunks]
@@ -638,14 +633,16 @@ def _madv_hugepage(arr: np.ndarray) -> np.ndarray:
     return arr
 
 
-def _read_sorted_spill(sel: DataFrame, scratch: str, dtype) -> list[np.ndarray]:
+def _read_spill(sel: DataFrame, scratch: str, dtype) -> list[np.ndarray]:
     """Spill source of the dense-driver kernel: one sorted slice per file.
 
-    Executors write their within-partition-sorted cell indices as ZSTD
-    parquet: sorted indices in the dense regime are runs of tiny deltas, so
-    the spill shrinks ~10x (measured 382 -> 36 MB at 1e8 rows x 1e8 cells).
-    Driver threads then read each file into one values buffer of this
-    call; the returned slices are views of it."""
+    Executors write their unsorted cell indices as UNCOMPRESSED parquet, as
+    :func:`_spill_collect_arrow` does: random indices do not compress
+    (zstd: 0.62 s vs 0.58 s uncompressed on 4.2e6 rows). Each driver thread
+    copies one file into its own segment of this call's values buffer and
+    sorts that segment in place (``ndarray.sort`` releases the GIL), so the
+    sort makes no copy and adds no memory; the returned slices are views of
+    the buffer."""
     import pyarrow.parquet as pq
 
     t0 = time.perf_counter()
@@ -653,7 +650,7 @@ def _read_sorted_spill(sel: DataFrame, scratch: str, dtype) -> list[np.ndarray]:
     try:
         (
             sel.write.mode("overwrite")
-            .option("compression", "zstd")
+            .option("compression", "uncompressed")
             .option("parquet.enable.dictionary", "false")
             .parquet(path)
         )
@@ -665,15 +662,16 @@ def _read_sorted_spill(sel: DataFrame, scratch: str, dtype) -> list[np.ndarray]:
         metas = [pq.ParquetFile(f) for f in files]
         offs = np.zeros(len(files) + 1, dtype=np.int64)
         np.cumsum([m.metadata.num_rows for m in metas], out=offs[1:])
-        total = int(offs[-1])
-        buf = _madv_hugepage(np.empty(total, dtype=dtype))
+        buf = _madv_hugepage(np.empty(int(offs[-1]), dtype=dtype))
+        slices = [buf[offs[i]:offs[i + 1]] for i in range(len(files))]
 
         def _load(i: int) -> None:
-            o = int(offs[i])
+            o = 0
             for ch in metas[i].read(use_threads=False).column("cell").chunks:
                 a = ch.to_numpy(zero_copy_only=False)
-                buf[o:o + a.size] = a
+                slices[i][o:o + a.size] = a
                 o += a.size
+            slices[i].sort()
 
         with ThreadPoolExecutor(_driver_threads()) as ex:
             list(ex.map(_load, range(len(files))))
@@ -681,7 +679,7 @@ def _read_sorted_spill(sel: DataFrame, scratch: str, dtype) -> list[np.ndarray]:
             spill_write_s=round(t1 - t0, 3),
             spill_collect_s=round(time.perf_counter() - t0, 3),
         )
-        return [buf[offs[i]:offs[i + 1]] for i in range(len(files))]
+        return slices
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -704,9 +702,9 @@ def _sorted_slices_histogram(slices: Sequence[np.ndarray], n_cells: int) -> np.n
     """Float32 histogram over cells ``[0, n_cells)`` of sorted index slices:
     the one dense-driver kernel.
 
-    Each slice holds cell indices, normally sorted ascending by the
-    executors; values at the ``n_cells`` sentinel (NULL/out-of-range rows)
-    sort last and are never counted. Sortedness is verified with one
+    Each slice holds cell indices, sorted ascending when it comes from the
+    spill (:func:`_read_spill`); values at the ``n_cells`` sentinel
+    (NULL/out-of-range rows) sort last and are never counted. Sortedness is verified with one
     sequential pass per slice, and a slice that is not sorted is sorted
     here — never counted wrong, since the ranges below binary-search it.
 

@@ -241,10 +241,11 @@ def apply_dfield(
     (guide §4.5: heavyweight state once per task, §5: bound Python worker
     memory). Files are memoized per SparkContext by grid digest so
     repeated query builds over the same field (bench re-runs, interactive
-    re-binning) re-use one shipped file.
+    re-binning) re-use one shipped file. The file is written under the
+    driver's SparkFiles root, which Spark deletes when the context stops,
+    so it lives exactly as long as the memo that names it.
     """
     import hashlib
-    import tempfile
 
     from pyspark.sql.functions import pandas_udf
 
@@ -263,7 +264,11 @@ def apply_dfield(
     fname = memo.get(digest)
     if fname is None:
         fname = f"sed_dfield_{digest}.npy"
-        path = os.path.join(tempfile.gettempdir(), fname)
+        # a subdirectory: addFile copies the file into the root itself
+        grid_dir = os.path.join(sc._jvm.org.apache.spark.SparkFiles.getRootDirectory(),
+                                "sed_dfield")
+        os.makedirs(grid_dir, exist_ok=True)
+        path = os.path.join(grid_dir, fname)
         if not os.path.exists(path):
             tmp = f"{path}.{os.getpid()}.tmp"
             with open(tmp, "wb") as fh:

@@ -472,6 +472,41 @@ def test_routing_memo_evicts_oldest_entry(spark, tmp_path, monkeypatch):
     assert list(cache.values())[-1] == 70
 
 
+def test_routing_counts_a_pruned_python_stage(spark):
+    """Routing reads the count's own plan: Catalyst prunes apply_dfield's
+    pandas_udf out of a count over a cached frame, so the chain gets the
+    exact row count, while a filter on a UDF output and a mapInPandas leaf
+    keep their Python node in the count and still return None."""
+    from pyspark.sql import functions as F
+
+    from sed_binning_spark.binning import binning as binning_mod
+    from sed_binning_spark.calibration.momentum import apply_dfield
+
+    base = spark.range(20_000, numPartitions=4).select(
+        (F.rand(3) * 64).alias("X"), (F.rand(4) * 64).alias("Y")).cache()
+    try:
+        base.count()
+        rr, cc = np.meshgrid(np.arange(64.0), np.arange(64.0), indexing="ij")
+        chain = apply_dfield(base, np.stack([rr, cc]), detector_ranges=((0, 64), (0, 64)))
+        chain = chain.withColumn("s", F.col("Xm") + F.col("Ym"))
+        assert "ArrowEvalPython" in chain._jdf.queryExecution().executedPlan().toString()
+        binning_mod._ROUTE_COUNT_CACHE.clear()
+        assert binning_mod._cheap_row_estimate(chain, 10**8) == chain.count() == 20_000
+
+        kept = chain.where(F.col("Xm") > 1.0)
+        assert binning_mod._cheap_row_estimate(kept, 10**8) is None
+
+        def ident(batches):
+            yield from batches
+
+        leaf = spark.range(1000).mapInPandas(ident, "id long")
+        assert binning_mod._cheap_row_estimate(leaf, 10**8) is None
+        assert binning_mod._choose_combine(leaf, "auto", 10**8) == ("shuffle", None)
+    finally:
+        binning_mod._ROUTE_COUNT_CACHE.clear()
+        base.unpersist()
+
+
 def test_spill_fallback_warns_on_cluster_without_scratch(spark, monkeypatch):
     """On a non-local master with no SPARK_GRAFT_SCRATCH_DIR the spill
     collect silently degrades to the single-socket Arrow collect — it must
@@ -527,9 +562,9 @@ def test_small_rows_driver_route_matches_shuffle(spark):
 
 
 def test_driver_combine_matches_shuffle_combine(spark):
-    """The r14 pipelined sorted-spill driver histogram must produce the
-    same cube as the shuffle plan, including NULL/out-of-range rejects
-    (the sentinel cell) and values spread over every thread range."""
+    """The driver-route spill histogram must produce the same cube as the
+    shuffle plan, including NULL/out-of-range rejects (the sentinel cell)
+    and values spread over every thread range."""
     import pandas as pd
 
     rng = np.random.default_rng(17)
@@ -569,6 +604,34 @@ def test_driver_combine_without_scratch_matches_shuffle(spark, monkeypatch):
         driver = bin_dataframe(df, combine="driver", **kw)
     np.testing.assert_array_equal(shuffle.data, driver.data)
     assert float(driver.data.sum()) > 0
+
+
+def test_spill_route_sorts_slices_on_the_driver(spark, monkeypatch):
+    """The spill route runs no Spark sort: the spilled select's physical
+    plan holds no Sort node, and every slice _read_spill returns is already
+    sorted, so the kernel never takes its fallback sort. The cube equals
+    the shuffle plan's."""
+    from pyspark.sql import functions as F
+
+    from sed_binning_spark.binning import binning as binning_mod
+
+    df = spark.range(300_000, numPartitions=5).select(
+        (F.rand(51) * 24 - 2).alias("a"), (F.rand(52) * 7).alias("b"))
+    kw = dict(bins=[90, 70], axes=["a", "b"], ranges=[(0.0, 20.0), (0.0, 6.0)])
+    plans, returned = [], []
+    read_spill = binning_mod._read_spill
+
+    def spying_read(sel, scratch, dtype):
+        plans.append(sel._jdf.queryExecution().executedPlan().toString())
+        returned.extend(read_spill(sel, scratch, dtype))
+        return returned
+
+    monkeypatch.setattr(binning_mod, "_read_spill", spying_read)
+    driver = bin_dataframe(df, combine="driver", **kw)
+    assert len(plans) == 1 and "Sort [" not in plans[0], plans
+    assert sum(s.size for s in returned) == 300_000 and len(returned) > 1
+    assert all(bool(np.all(s[:-1] <= s[1:])) for s in returned)
+    np.testing.assert_array_equal(driver.data, bin_dataframe(df, combine="shuffle", **kw).data)
 
 
 def test_concurrent_driver_combines_match_serial(spark, monkeypatch):

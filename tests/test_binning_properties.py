@@ -59,7 +59,7 @@ def test_uniform_binning_classification_property(spark, case):
     assert got == {i: int(c) for i, c in enumerate(want) if c}
 
 
-@_SET
+@settings(_SET, print_blob=True)  # a failure prints its @reproduce_failure blob
 @given(
     centers=st.lists(
         st.floats(-1e4, 1e4, allow_nan=False, allow_infinity=False),

@@ -694,3 +694,46 @@ def test_dfield_lookup_udf_reads_module_grid_cache(tmp_path, monkeypatch):
     for name in names[1:]:
         momentum._dfield_grid(name)
     assert list(momentum._DFIELD_GRID_CACHE) == names[1:]
+
+
+def test_apply_dfield_grid_file_lives_under_spark_files_root(spark):
+    """apply_dfield writes its grid file under the driver's SparkFiles root,
+    which Spark deletes when the context stops, and leaves nothing in the
+    temp dir; a Python worker still loads the shipped file once through
+    its grid cache, and the lookup stays correct."""
+    import glob
+    import hashlib
+    import os
+    import tempfile
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from sed_binning_spark.calibration import momentum
+
+    pattern = os.path.join(tempfile.gettempdir(), "sed_dfield_*")
+    before = set(glob.glob(pattern))
+    dfield = np.random.default_rng(31).uniform(0.0, 7.0, (2, 8, 8))
+    df = spark.range(40).select((F.col("id") % 7 * 1.0).alias("X"),
+                                (F.col("id") % 5 * 1.0).alias("Y"))
+    out = apply_dfield(df, dfield, detector_ranges=((0, 8), (0, 8))).toPandas()
+    np.testing.assert_allclose(
+        out.Xm, momentum.map_coordinates_bilinear(dfield[0], out.X.to_numpy(), out.Y.to_numpy()),
+    )
+    assert set(glob.glob(pattern)) == before
+
+    sc = spark.sparkContext
+    fname = sc._sed_dfield_files[hashlib.sha1(dfield).hexdigest()]
+    root = sc._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    assert os.path.isfile(os.path.join(root, "sed_dfield", fname))
+
+    def probe(batches):
+        for _ in batches:
+            first = momentum._dfield_grid(fname)
+            yield pd.DataFrame({
+                "hit": [momentum._dfield_grid(fname) is first],
+                "same": [bool(np.array_equal(first, dfield))],
+            })
+
+    rows = spark.range(1, numPartitions=1).mapInPandas(probe, "hit boolean, same boolean").collect()
+    assert [(r.hit, r.same) for r in rows] == [(True, True)]
