@@ -6,19 +6,23 @@ markers, and emits a second evenly-time-spaced "timed" dataframe
 (loader.py:54-229, 267-417). Spark-first re-expression:
 
 - **Stream assembly** (S4): per-file stream arrays → one event DataFrame
-  with float32 stream columns + (file_id, row_id). Real deployments run
-  this as a one-time HDF5→Parquet conversion job over the file list; the
-  array→frame step is pure and testable with injected arrays (the HDF5
-  read uses the engine's pure-Python HDF5 reader — no h5py needed).
+  with float32 stream columns + (file_id, row_id). One driver-side plan
+  (streams, aliases, checks, schema) and one per-file NumPy kernel serve
+  both read modes: executor-side ``mapInPandas`` over the file list, or
+  driver-side over injected payloads (the HDF5 read uses the engine's
+  pure-Python HDF5 reader — no h5py needed).
 - **Timestamp synthesis**: the reference's marker fill loop
   (loader.py:325-343) assigns event j the value
   ``start + count(markers <= j)/1000`` — a step function. That IS a
-  right-side searchsorted of the event index into the (small, broadcast)
-  marker array, so the Spark form is one Arrow-batched pandas_udf over
-  row_id; no Python loop, no shuffle.
-- **Timed dataframe** (S5): row i samples the stream at event index
-  ``marker[i]-1`` (loader.py:380-393) — a broadcast equi-join of the tiny
-  (i, marker) table against row_id, plus ``timeStamps = start + i/1000``.
+  right-side searchsorted of the event index into the (small) marker
+  array: NumPy in the kernel; on an existing frame, one Arrow-batched
+  pandas_udf over row_id — no Python loop, no shuffle.
+- **Timed dataframe** (S5): row i samples every stream at event index
+  ``marker[i]-1`` (loader.py:380-393), plus ``timeStamps = start + i/1000``.
+  The same kernel gathers those rows per file in NumPy, so the loader
+  ships only marker rows and joins nothing;
+  :func:`timed_dataframe_from_markers` is the same rule on an existing
+  frame (a broadcast equi-join on row_id).
 - **Count rate / elapsed time** (A13): pure-NumPy marker derivative and
   ``len(markers)/1000`` (loader.py:440-482), driver-side per-file metadata.
 - **Run-ID resolution** (S3): ``Scan{run:04d}_*`` recursive glob,
@@ -29,7 +33,9 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-from collections.abc import Sequence
+import warnings
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +46,7 @@ from sed_binning_spark.loaders.utils import natural_sort_key
 
 FILE_COLUMN = "file_id"
 ROW_COLUMN = "row_id"
+MS_COLUMN = "ms_id"
 
 _SPARK_TYPES = {"float32": "float", "float64": "double",
                 "int32": "int", "int64": "long"}
@@ -101,8 +108,140 @@ def append_event_timestamps(
 
 
 # ---------------------------------------------------------------------------
-# stream assembly (S4: loader.py:54-140, 267-347)
+# S4/S5 assembly: one driver-side plan, one per-file kernel
+# (loader.py:54-140, 267-417)
 # ---------------------------------------------------------------------------
+class _Plan(NamedTuple):
+    streams: list[str]               # source stream names, natural-sorted
+    columns: list[str]               # their (aliased) output column names
+    data_type: str
+    time_stamp_alias: str | None     # None: no timestamp column
+    events_schema: str
+    timed_schema: str
+
+
+def _assembly_plan(sources, alias_dict, time_stamps, time_stamp_alias,
+                   data_type="float32") -> _Plan:
+    """Driver-side plan shared by both read modes; ``sources`` holds one
+    ``(label, stream names, Name aliases, ms markers)`` per file.
+
+    The first source sets the streams (natural-sorted) and the default
+    aliases, its instrument ``Name`` attributes; caller aliases override
+    them per stream (the reference's merge — hdf5_to_dataframe falls back
+    to the ``Name`` attribute). A later source missing one of the streams
+    fails here, named, rather than mid-job; one with extra streams (a
+    schema superset — e.g. a diagnostic channel enabled mid-run) is read
+    without them, with a warning.
+    """
+    label0, names0, aliases0, _ = sources[0]
+    streams = sorted(names0, key=natural_sort_key)
+    if not streams:
+        raise ValueError(f"no stream arrays in {label0}")
+    for label, names, _, marker in sources:
+        missing = sorted(set(streams) - set(names), key=natural_sort_key)
+        if missing:
+            raise ValueError(
+                f"{label} is missing streams present in {label0}: {missing}",
+            )
+        extra = sorted(set(names) - set(streams), key=natural_sort_key)
+        if extra:
+            warnings.warn(
+                f"{label} has streams absent from {label0} which will not "
+                f"be read: {extra}",
+                stacklevel=4,
+            )
+        if time_stamps and marker is None:
+            raise ValueError(
+                f"time_stamps=True requires ms markers (msMarkers), "
+                f"missing in {label}",
+            )
+    aliases = {**aliases0, **(alias_dict or {})}
+    columns = [aliases.get(s, s) for s in streams]
+    ts_alias = time_stamp_alias if time_stamps else None
+    values = ", ".join(f"`{c}` {_spark_type(data_type)}" for c in columns)
+    if ts_alias:
+        values += f", `{ts_alias}` double"
+    return _Plan(
+        streams, columns, data_type, ts_alias,
+        f"{values}, {FILE_COLUMN} int, {ROW_COLUMN} long",
+        f"{FILE_COLUMN} int, {MS_COLUMN} long, {values}",
+    )
+
+
+def _file_frames(plan: _Plan, read: Callable[[str], np.ndarray], ms_marker,
+                 start_time: float, file_id: int, label: str,
+                 events: bool = True, timed: bool = True):
+    """One file's pandas frames (hdf5_to_array, hdf5_to_timed_array, mpes
+    loader.py:267-393); ``read(stream)`` returns one source stream.
+
+    - events: ``*columns, [ts], file_id, row_id``, one row per event;
+    - timed: ``file_id, ms_id, *columns, [ts]``. Row i samples every stream
+      at event index ``marker[i]-1``, with ``ts = start + i/1000``, for each
+      i with ``0 <= marker[i]-1 < n`` — exactly the rows of the inner join
+      in :func:`timed_dataframe_from_markers`: a duplicate marker repeats a
+      row, a marker of 0 or above n gives none. None without markers.
+    """
+    import pandas as pd
+
+    cols = {
+        c: np.asarray(read(s)).astype(plan.data_type)
+        for s, c in zip(plan.streams, plan.columns)
+    }
+    lengths = sorted({len(a) for a in cols.values()})
+    if len(lengths) != 1:
+        # a truncated file can carry streams of unequal length: name it,
+        # not pandas' anonymous 'arrays must be same length'
+        raise ValueError(f"stream arrays differ in length in {label}: {lengths}")
+    n = lengths[0]
+    ts = plan.time_stamp_alias
+    ev = tm = None
+    if events:
+        ev = pd.DataFrame(cols)
+        if ts:
+            ev[ts] = event_timestamps_np(n, ms_marker, start_time)
+        ev[FILE_COLUMN] = np.int32(file_id)
+        ev[ROW_COLUMN] = np.arange(n, dtype=np.int64)
+    if timed and ms_marker is not None:
+        target = np.asarray(ms_marker, dtype=np.int64) - 1
+        ms_id = np.flatnonzero((target >= 0) & (target < n)).astype(np.int64)
+        tm = pd.DataFrame({
+            FILE_COLUMN: np.full(ms_id.size, file_id, dtype=np.int32),
+            MS_COLUMN: ms_id,
+            **{c: a[target[ms_id]] for c, a in cols.items()},
+        })
+        if ts:
+            tm[ts] = start_time + ms_id / 1000.0
+    return ev, tm
+
+
+def _payload_frames(spark, files_data, alias_dict, time_stamps, time_stamp_alias):
+    """Both frames of injected payloads: the kernel runs on the driver per
+    payload, then one ``createDataFrame`` per frame kind."""
+    import pandas as pd
+
+    if not files_data:
+        raise ValueError("files_data is empty")
+    labels = [f"files_data[{i}]" for i in range(len(files_data))]
+    plan = _assembly_plan(
+        [(lb, list(fd["streams"]), fd.get("aliases", {}), fd.get("ms_marker"))
+         for lb, fd in zip(labels, files_data)],
+        alias_dict, time_stamps, time_stamp_alias,
+    )
+    frames = [
+        _file_frames(plan, fd["streams"].__getitem__, fd.get("ms_marker"),
+                     float(fd.get("start_time", 0.0)), fid, lb)
+        for fid, (lb, fd) in enumerate(zip(labels, files_data))
+    ]
+    event_df = spark.createDataFrame(
+        pd.concat([ev for ev, _ in frames], ignore_index=True), plan.events_schema,
+    )
+    timed = [tm for _, tm in frames if tm is not None]
+    timed_df = spark.createDataFrame(
+        pd.concat(timed, ignore_index=True), plan.timed_schema,
+    ) if timed else None
+    return event_df, timed_df
+
+
 def streams_to_dataframe(
     spark: SparkSession,
     stream_data: dict[str, np.ndarray],
@@ -115,35 +254,23 @@ def streams_to_dataframe(
     data_type: str = "float32",
 ) -> DataFrame:
     """One file's ``Stream_*`` arrays → an event DataFrame (hdf5_to_array +
-    hdf5_to_dataframe, mpes loader.py:54-140,267-347).
+    hdf5_to_dataframe, mpes loader.py:54-140,267-347), through the loader's
+    plan and per-file kernel.
 
-    Columns are the aliased stream names cast to ``data_type`` (the
-    reference reads everything as float32, loader.py:270); adds
-    (file_id, row_id) and, when ``time_stamps``, the synthesized
-    per-event timestamp column (float64 epoch seconds).
+    Columns are the aliased stream names, natural-sorted by stream, cast to
+    ``data_type`` (the reference reads everything as float32,
+    loader.py:270); then, when ``time_stamps``, the synthesized per-event
+    timestamp column (float64 epoch seconds); then (file_id, row_id).
     """
-    import pandas as pd
-
-    alias_dict = alias_dict or {}
-    if not stream_data:
-        raise ValueError("stream_data must contain at least one stream array")
-    lengths = {len(v) for v in stream_data.values()}
-    if len(lengths) != 1:
-        raise ValueError(f"stream arrays differ in length: {sorted(lengths)}")
-    n = lengths.pop()
-
-    cols: dict[str, np.ndarray] = {}
-    for group, arr in stream_data.items():
-        name = alias_dict.get(group, group)
-        cols[name] = np.asarray(arr).astype(data_type)
-    if time_stamps:
-        if ms_marker is None:
-            raise ValueError("time_stamps=True requires ms_marker")
-        cols[time_stamp_alias] = event_timestamps_np(n, ms_marker, start_time)
-    pdf = pd.DataFrame(cols)
-    pdf[FILE_COLUMN] = np.int32(file_id)
-    pdf[ROW_COLUMN] = np.arange(n, dtype=np.int64)
-    return spark.createDataFrame(pdf)
+    plan = _assembly_plan(
+        [("stream_data", list(stream_data), {}, ms_marker)],
+        alias_dict, time_stamps, time_stamp_alias, data_type,
+    )
+    ev, _ = _file_frames(
+        plan, stream_data.__getitem__, ms_marker, float(start_time), file_id,
+        "stream_data", timed=False,
+    )
+    return spark.createDataFrame(ev, plan.events_schema)
 
 
 def timed_dataframe_from_markers(
@@ -160,8 +287,10 @@ def timed_dataframe_from_markers(
     column at event index ``marker[i] - 1`` (hdf5_to_timed_array, mpes
     loader.py:380-393), ``timeStamps = start + i/1000`` (loader.py:411-416).
 
-    Spark plan: broadcast the tiny (i, marker) table and equi-join on the
-    event row index — the event stream is never shuffled or sorted.
+    The frame-level form of the rule the loader applies per file in NumPy
+    (:func:`_file_frames`), for a frame that already exists: broadcast the
+    tiny (i, marker) table and equi-join on the event row index — the event
+    stream is never shuffled or sorted.
 
     Markers index rows WITHIN one source file: on a frame whose ``row_id``
     restarts per file, pass ``file_id`` to name the file (the join is then
@@ -243,6 +372,35 @@ def _file_start_time(first_ts, path: str, ms_marker) -> float:
     return float(start)
 
 
+def _required_markers(files_data: Sequence[dict], what: str) -> list:
+    for i, fd in enumerate(files_data):
+        if fd.get("ms_marker") is None:
+            raise ValueError(
+                f"files_data[{i}] has no ms_marker — {what} needs the "
+                "ms-marker stream",
+            )
+    return [fd["ms_marker"] for fd in files_data]
+
+
+def _h5_header(f, path: str) -> tuple[list[str], np.ndarray | None, float]:
+    """An open file's natural-sorted ``Stream_*`` names, its ms markers
+    (None without ``msMarkers``) and its start time: header pages and the
+    small marker dataset only, no stream data."""
+    names = {p.lstrip("/") for p in f.visit()}
+    streams = sorted(
+        (n for n in names if n.startswith("Stream_")), key=natural_sort_key,
+    )
+    mm = f.read("/msMarkers") if "msMarkers" in names else None
+    return streams, mm, _file_start_time(
+        f.attrs("/").get("FirstEventTimeStamp"), path, mm,
+    )
+
+
+def _name_aliases(f, streams) -> dict[str, str]:
+    """Each stream's instrument ``Name`` attribute, where it has one."""
+    return {s: str(a) for s in streams if (a := f.attrs("/" + s).get("Name"))}
+
+
 # ---------------------------------------------------------------------------
 # S3: run-ID resolution (loader.py:673-715)
 # ---------------------------------------------------------------------------
@@ -286,30 +444,22 @@ class MpesLoader(BaseLoader):
 
     def h5_to_streams(self, path: str) -> dict:
         """One instrument file -> stream payload dict, via the engine's
-        pure-Python HDF5 reader (no h5py needed): ``Stream_*`` datasets,
-        per-stream ``Name`` attribute aliases, ``msMarkers``, and the
-        ``FirstEventTimeStamp`` root attribute as epoch seconds (the
+        pure-Python HDF5 reader (no h5py needed): ``Stream_*`` datasets in
+        natural order, per-stream ``Name`` attribute aliases, ``msMarkers``
+        (None when absent), and the ``FirstEventTimeStamp`` root attribute
+        as epoch seconds (the
         structures the reference reads through h5py,
         sed/loader/mpes/loader.py:267-347)."""
         from sed_binning_spark.io.hdf5_read import H5File
 
-        f = H5File(path)
-        names = [p.lstrip("/") for p in f.visit()]
-        streams: dict[str, np.ndarray] = {}
-        aliases: dict[str, str] = {}
-        for name in names:
-            if name.startswith("Stream_"):
-                streams[name] = f.read("/" + name)
-                alias = f.attrs("/" + name).get("Name")
-                if alias:
-                    aliases[name] = str(alias)
-        out: dict = {"streams": streams, "aliases": aliases}
-        if "msMarkers" in names:
-            out["ms_marker"] = f.read("/msMarkers")
-        out["start_time"] = _file_start_time(
-            f.attrs("/").get("FirstEventTimeStamp"), path, out.get("ms_marker"),
-        )
-        return out
+        with H5File(path) as f:
+            streams, marker, start = _h5_header(f, path)
+            return {
+                "streams": {n: f.read("/" + n) for n in streams},
+                "aliases": _name_aliases(f, streams),
+                "ms_marker": marker,
+                "start_time": start,
+            }
 
     def _read_distributed(
         self,
@@ -317,168 +467,57 @@ class MpesLoader(BaseLoader):
         alias_dict: dict[str, str] | None,
         time_stamps: bool,
         time_stamp_alias: str,
-        data_type: str = "float32",
-    ) -> tuple[DataFrame, DataFrame | None, dict]:
+    ) -> tuple[DataFrame, DataFrame | None, list]:
         """Raw-file read at scale: the DRIVER touches only header pages
-        (mmap — stream names, aliases, ms markers, start times), while the
-        per-file stream DATA is extracted executor-side with mapInPandas
-        over the path list — one task per file, no driver materialization.
-        This is the 100 TB ingestion shape; the reference's equivalent is
-        its per-file dask.delayed graph (mpes loader.py:114-140).
+        (mmap — stream names, aliases, ms markers, start times) to plan,
+        while executors decode the stream DATA through the per-file kernel,
+        one task per file, in two ``mapInPandas`` frames: one yields the
+        event rows, the other only the timed rows (no join back onto the
+        events). No driver materialization: this is the 100 TB ingestion
+        shape; the reference's equivalent is its per-file dask.delayed
+        graph (mpes loader.py:114-140). Returns both frames and each
+        file's ms markers (None where a file has none).
         """
-        import pandas as pd
-
         from sed_binning_spark.io.hdf5_read import H5File
 
-        # driver-side metadata pass: schema from the first file, markers +
-        # start times per file (tiny datasets; data pages never faulted in)
-        probe = H5File(paths[0])
-        stream_names = sorted(
-            (p.lstrip("/") for p in probe.visit() if p.startswith("/Stream_")),
-            key=natural_sort_key,
-        )
-        if not stream_names:
-            raise ValueError(f"no Stream_* datasets in {paths[0]}")
-        # instrument Name attributes are the defaults; an explicit alias
-        # dict overrides per stream (the reference's merge semantics —
-        # hdf5_to_dataframe falls back to get_attribute(..., "Name"))
-        aliases = {n: str(probe.attrs("/" + n).get("Name", n)) for n in stream_names}
-        aliases.update(alias_dict or {})
-        out_cols = [aliases.get(n, n) for n in stream_names]
-
-        markers: list[np.ndarray | None] = []
-        starts: list[float] = []
-        elapsed = 0.0
+        sources, starts = [], []
         for p in paths:
-            f = H5File(p)
-            names = {q.lstrip("/") for q in f.visit()}
-            # the schema comes from the FIRST file: a later file MISSING
-            # one of its streams must fail here at submit time, named
-            # (executor-side it would die as a bare KeyError mid-job). A
-            # later file with EXTRA streams (a schema superset — e.g. a
-            # diagnostic channel enabled mid-run) still reads; the extras
-            # are warned about, not silently ignored.
-            file_streams = {n for n in names if n.startswith("Stream_")}
-            missing = sorted(set(stream_names) - file_streams)
-            if missing:
-                raise ValueError(
-                    f"{p} is missing streams present in {paths[0]}: {missing}",
-                )
-            extra = sorted(file_streams - set(stream_names))
-            if extra:
-                import warnings
+            with H5File(p) as f:
+                streams, mm, start = _h5_header(f, p)
+                aliases = {} if sources else _name_aliases(f, streams)
+            sources.append((p, streams, aliases, mm))
+            starts.append(start)
+        plan = _assembly_plan(sources, alias_dict, time_stamps, time_stamp_alias)
 
-                warnings.warn(
-                    f"{p} has streams absent from {paths[0]} which will "
-                    f"not be read: {extra}",
-                    stacklevel=2,
-                )
-            mm = f.read("/msMarkers") if "msMarkers" in names else None
-            if mm is None and time_stamps:
-                # fail at submit time with the file named — the executor
-                # extraction would otherwise die mid-job with a bare KeyError
-                raise ValueError(
-                    f"time_stamps=True requires an msMarkers dataset, "
-                    f"missing in {p}",
-                )
-            markers.append(mm)
-            starts.append(
-                _file_start_time(f.attrs("/").get("FirstEventTimeStamp"), p, mm),
-            )
-            if mm is not None:
-                elapsed += elapsed_time_from_markers(mm)
-
-        spark = self.spark
-        # round-robin repartition: exactly one file per task. Hashing on
-        # file_id would collide ~1/e of the partitions empty and leave
-        # straggler tasks reading 2-3 files while cores idle.
-        paths_df = spark.createDataFrame(
-            [(i, p) for i, p in enumerate(paths)], "file_id int, path string",
-        ).repartition(len(paths))
-
-        np_dtype = data_type
-        ts_flag = bool(time_stamps)
-        ts_alias = time_stamp_alias
-        starts_by_fid = dict(enumerate(starts))
-
-        def _extract(batches):
+        def _extract(batches, timed):
             for pdf in batches:
-                for fid, path in zip(pdf["file_id"], pdf["path"]):
-                    f = H5File(path)
-                    cols = {}
-                    n = None
-                    for sname, cname in zip(stream_names, out_cols):
-                        arr = f.read("/" + sname).astype(np_dtype)
-                        # the driver pre-pass validates stream PRESENCE;
-                        # a truncated file can still carry streams of
-                        # unequal length — fail naming the file, not with
-                        # pandas' anonymous 'arrays must be same length'
-                        if n is not None and len(arr) != n:
-                            raise ValueError(
-                                f"stream {sname!r} in {path} has "
-                                f"{len(arr)} rows but an earlier stream "
-                                f"has {n} (truncated file?)",
-                            )
-                        cols[cname] = arr
-                        n = len(arr)
-                    out = pd.DataFrame(cols)
-                    if ts_flag:
-                        mm = f.read("/msMarkers")
-                        out[ts_alias] = event_timestamps_np(
-                            n, mm, starts_by_fid[int(fid)],
+                for fid, path in zip(pdf[FILE_COLUMN], pdf["path"]):
+                    with H5File(path) as f:
+                        need_marker = timed or plan.time_stamp_alias
+                        mm = f.read("/msMarkers") if need_marker else None
+                        ev, tm = _file_frames(
+                            plan, lambda s: f.read("/" + s), mm, starts[fid],
+                            int(fid), path, events=not timed, timed=timed,
                         )
-                    out[FILE_COLUMN] = np.int32(fid)
-                    out[ROW_COLUMN] = np.arange(n, dtype=np.int64)
-                    yield out
+                    yield tm if timed else ev
 
-        schema = ", ".join(f"`{c}` {_spark_type(np_dtype)}" for c in out_cols)
-        if ts_flag:
-            schema += f", `{ts_alias}` double"
-        schema += f", {FILE_COLUMN} int, {ROW_COLUMN} long"
-        event_df = paths_df.mapInPandas(_extract, schema)
+        def _per_file(fids):
+            # round-robin repartition: exactly one file per task. Hashing
+            # on file_id would collide ~1/e of the partitions empty and
+            # leave straggler tasks reading 2-3 files while cores idle.
+            return self.spark.createDataFrame(
+                [(i, paths[i]) for i in fids], f"{FILE_COLUMN} int, path string",
+            ).repartition(len(fids))
 
-        # ONE broadcast marker table + ONE join for all files: a per-file
-        # timed_dataframe_from_markers union would re-run the whole
-        # mapInPandas extraction once per file (O(files^2) file reads)
-        marker_rows = []
-        for fid, (mm, start) in enumerate(zip(markers, starts)):
-            if mm is None:
-                continue
-            for i, m in enumerate(np.asarray(mm, dtype=np.int64)):
-                marker_rows.append((fid, int(i), int(m) - 1, start))
-        timed_df = None
-        if marker_rows:
-            mdf = spark.createDataFrame(
-                marker_rows,
-                schema=f"{FILE_COLUMN} int, __ms_i long, __target long, __start double",
-            )
-            keep = [c for c in event_df.columns if c not in (FILE_COLUMN, ROW_COLUMN)]
-            if ts_flag and ts_alias in keep:
-                keep.remove(ts_alias)
-            timed_df = (
-                F.broadcast(mdf)
-                .join(
-                    event_df,
-                    on=(mdf[FILE_COLUMN] == event_df[FILE_COLUMN])
-                    & (mdf["__target"] == event_df[ROW_COLUMN]),
-                    how="inner",
-                )
-                .select(mdf[FILE_COLUMN], F.col("__ms_i"), F.col("__start"), *keep)
-            )
-            if ts_flag:
-                timed_df = timed_df.withColumn(
-                    ts_alias,
-                    F.col("__start") + F.col("__ms_i").cast("double") / F.lit(1000.0),
-                )
-            timed_df = timed_df.drop("__start").withColumnRenamed(
-                "__ms_i", ROW_COLUMN.replace("row", "ms"),
-            )
-
-        self.metadata.update({
-            "file_statistics": {"num_files": len(paths)},
-            "elapsed_time": elapsed,
-        })
-        return event_df, timed_df, self.metadata
+        event_df = _per_file(range(len(paths))).mapInPandas(
+            lambda b: _extract(b, False), plan.events_schema,
+        )
+        markers = [s[3] for s in sources]
+        marked = [fid for fid, m in enumerate(markers) if m is not None]
+        timed_df = _per_file(marked).mapInPandas(
+            lambda b: _extract(b, True), plan.timed_schema,
+        ) if marked else None
+        return event_df, timed_df, markers
 
     def read_dataframe(
         self,
@@ -497,12 +536,17 @@ class MpesLoader(BaseLoader):
         """Assemble event + timed dataframes.
 
         Read modes follow the uniform contract (files/folders/runs resolve
-        instrument HDF5 paths; the byte-read then goes through
-        :meth:`h5_to_streams`). Alternatively ``files_data`` injects the
-        extracted payloads directly — one dict per file:
-        ``{"streams": {name: ndarray}, "ms_marker": ndarray | None,
-        "start_time": float}``.
+        instrument HDF5 paths, decoded executor-side). Alternatively
+        ``files_data`` injects the extracted payloads directly — one dict
+        per file, as :meth:`h5_to_streams` returns it:
+        ``{"streams": {name: ndarray}, "aliases": {name: alias},
+        "ms_marker": ndarray | None, "start_time": float}``. Both modes go
+        through the same plan and per-file kernel, so the same files give
+        identical frames: events ``*streams, [ts], file_id, row_id`` and
+        timed ``file_id, ms_id, *streams, [ts]`` (None when no file has
+        ms markers).
         """
+        alias_dict = alias_dict or self.config.get("dataframe", {}).get("aliases", {})
         if files_data is None:
             if files is None and folders is None and runs is None:
                 raise ValueError(
@@ -513,60 +557,22 @@ class MpesLoader(BaseLoader):
                 files=files, folders=folders, runs=runs, ftype=ftype,
                 metadata=metadata, **kwds,
             )
-            conf_aliases = self.config.get("dataframe", {}).get("aliases", {})
-            return self._read_distributed(
-                paths, alias_dict or conf_aliases, time_stamps, time_stamp_alias,
+            event_df, timed_df, markers = self._read_distributed(
+                paths, alias_dict, time_stamps, time_stamp_alias,
             )
-        conf = self.config.get("dataframe", {})
-        alias_dict = alias_dict or conf.get("aliases", {})
-        # injected-data path never goes through resolve_paths, which is
-        # what resets + records caller metadata on the other path
-        self.metadata = dict(metadata or {})
-
-        event_parts: list[DataFrame] = []
-        timed_parts: list[DataFrame] = []
-        elapsed = 0.0
-        for fid, fd in enumerate(files_data):
-            marker = fd.get("ms_marker")
-            start = float(fd.get("start_time", 0.0))
-            ev = streams_to_dataframe(
-                self.spark,
-                fd["streams"],
-                # per-file stream aliases (the instrument's own Name attrs),
-                # with caller/config overrides merged ON TOP per stream —
-                # the same merge semantics as the distributed read path
-                alias_dict={**fd.get("aliases", {}), **(alias_dict or {})},
-                time_stamps=time_stamps,
-                ms_marker=marker,
-                start_time=start,
-                time_stamp_alias=time_stamp_alias,
-                file_id=fid,
+        else:
+            # injected-data path never goes through resolve_paths, which is
+            # what resets + records caller metadata on the other path
+            self.metadata = dict(metadata or {})
+            event_df, timed_df = _payload_frames(
+                self.spark, files_data, alias_dict, time_stamps, time_stamp_alias,
             )
-            event_parts.append(ev)
-            if marker is not None:
-                timed = timed_dataframe_from_markers(
-                    ev,
-                    marker,
-                    start_time=start,
-                    time_stamps=time_stamps,
-                    time_stamp_alias=time_stamp_alias,
-                    file_id=fid,
-                )
-                timed_parts.append(timed.withColumn(FILE_COLUMN, F.lit(fid).cast("int")))
-                elapsed += elapsed_time_from_markers(marker)
-
-        event_df = event_parts[0]
-        for p in event_parts[1:]:
-            event_df = event_df.unionByName(p)
-        timed_df = None
-        if timed_parts:
-            timed_df = timed_parts[0]
-            for p in timed_parts[1:]:
-                timed_df = timed_df.unionByName(p)
-
+            markers = [fd.get("ms_marker") for fd in files_data]
         self.metadata.update({
-            "file_statistics": {"num_files": len(files_data)},
-            "elapsed_time": elapsed,
+            "file_statistics": {"num_files": len(markers)},
+            "elapsed_time": sum(
+                elapsed_time_from_markers(m) for m in markers if m is not None
+            ),
         })
         return event_df, timed_df, self.metadata
 
@@ -575,23 +581,13 @@ class MpesLoader(BaseLoader):
         (mpes loader.py:924-977)."""
         secs_list, rate_list = [], []
         accumulated = 0.0
-        for i, fd in enumerate(files_data):
-            if fd.get("ms_marker") is None:
-                raise ValueError(
-                    f"files_data[{i}] has no ms_marker — count rate needs "
-                    "the ms-marker stream",
-                )
-            rate, secs = count_rate_from_markers(fd["ms_marker"])
+        for marker in _required_markers(files_data, "count rate"):
+            rate, secs = count_rate_from_markers(marker)
             secs_list.append(accumulated + secs)
             rate_list.append(rate)
             accumulated += secs[-1]
         return np.concatenate(rate_list), np.concatenate(secs_list)
 
     def get_elapsed_time(self, files_data: Sequence[dict]) -> float:
-        for i, fd in enumerate(files_data):
-            if fd.get("ms_marker") is None:
-                raise ValueError(
-                    f"files_data[{i}] has no ms_marker — elapsed time needs "
-                    "the ms-marker stream",
-                )
-        return sum(elapsed_time_from_markers(fd["ms_marker"]) for fd in files_data)
+        markers = _required_markers(files_data, "elapsed time")
+        return sum(elapsed_time_from_markers(m) for m in markers)

@@ -5,6 +5,7 @@ reference's fill-loop semantics (sed/loader/mpes/loader.py:267-417)."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -133,24 +134,106 @@ def test_mpes_loader_end_to_end(spark):
     assert loader.get_elapsed_time(files_data) == 5 / 1000.0
 
 
-def test_files_data_alias_merge_matches_distributed_semantics(spark):
-    """Caller/config aliases override PER STREAM on top of the file's own
-    Name aliases — not all-or-nothing (both read paths must agree)."""
-    from sed_binning_spark.loaders.mpes import MpesLoader
+def _write_scans(tmp_path):
+    """Three instrument files: ``Name`` aliases on two of three streams
+    (Stream_10 sorts after Stream_2 only in natural order), markers with 0,
+    a duplicate, exactly n and above n, and a last file without msMarkers."""
+    from sed_binning_spark.io.hdf5_write import H5Writer
 
-    files_data = [{
-        "streams": {
-            "Stream_0": np.arange(5, dtype=np.float32),
-            "Stream_1": np.arange(5, dtype=np.float32) * 2,
-        },
-        "aliases": {"Stream_0": "X", "Stream_1": "Y"},
-    }]
-    ev, _, meta = MpesLoader(spark).read_dataframe(
-        files_data=files_data, alias_dict={"Stream_0": "X2"},
-        metadata={"scan": 42},
-    )
-    assert {"X2", "Y"} <= set(ev.columns)       # override + file alias kept
-    assert meta["scan"] == 42                   # caller metadata preserved
+    rng = np.random.default_rng(12)
+    specs = [(40, [0, 3, 3, 17, 40, 41]), (25, [1, 25, 25, 30, 30]), (30, None)]
+    paths = []
+    for i, (n, marker) in enumerate(specs):
+        w = H5Writer()
+        for stream, name in (("Stream_0", "X"), ("Stream_2", "Y"), ("Stream_10", None)):
+            w.add_dataset(f"/{stream}", rng.random(n))
+            if name:
+                w.add_attr(f"/{stream}", "Name", name)
+        if marker is not None:
+            w.add_dataset("/msMarkers", np.array(marker, dtype=np.int64))
+        w.add_attr("/", "FirstEventTimeStamp", f"2024-01-01T00:0{i}:00+00:00")
+        paths.append(str(tmp_path / f"Scan0001_{i}.h5"))
+        w.write(paths[-1])
+    return paths
+
+
+def _sorted_pdf(df, keys):
+    return df.toPandas().sort_values(keys, ignore_index=True)
+
+
+def test_read_modes_agree(spark, tmp_path):
+    """``files`` and ``files_data`` give identical frames (schema and rows),
+    with caller aliases overriding the files' Name aliases per stream; and
+    per file the timed frame is ``timed_dataframe_from_markers`` over the
+    event frame — the loader's NumPy gather is the frame-level join's rule
+    (a duplicate marker repeats a row, a marker of 0 or above n drops)."""
+    paths = _write_scans(tmp_path)
+    loader = MpesLoader(spark)
+    alias = {"Stream_0": "X2"}
+    # the markerless file only without time stamps, which need markers
+    for time_stamps, files in ((False, paths), (True, paths[:2])):
+        payloads = [loader.h5_to_streams(p) for p in files]
+        ev, timed, meta = loader.read_dataframe(
+            files=files, alias_dict=alias, time_stamps=time_stamps,
+        )
+        ev_d, timed_d, meta_d = loader.read_dataframe(
+            files_data=payloads, alias_dict=alias, time_stamps=time_stamps,
+            metadata={"scan": 42},
+        )
+        ts = ["timeStamps"] if time_stamps else []
+        assert ev.columns == ["X2", "Y", "Stream_10", *ts, "file_id", "row_id"]
+        assert timed.columns == ["file_id", "ms_id", "X2", "Y", "Stream_10", *ts]
+        for a, b, keys in ((ev, ev_d, ["file_id", "row_id"]),
+                           (timed, timed_d, ["file_id", "ms_id"])):
+            assert a.dtypes == b.dtypes
+            pd.testing.assert_frame_equal(_sorted_pdf(a, keys), _sorted_pdf(b, keys))
+        assert meta_d["scan"] == 42                 # caller metadata preserved
+        assert meta["elapsed_time"] == meta_d["elapsed_time"] == 11 / 1000.0
+
+        for fid, payload in enumerate(payloads):
+            got = timed.where(F.col("file_id") == fid).drop("file_id")
+            marker = payload.get("ms_marker")
+            if marker is None:
+                assert got.count() == 0
+                continue
+            want = timed_dataframe_from_markers(
+                ev, marker, start_time=payload["start_time"],
+                time_stamps=time_stamps, file_id=fid,
+            )
+            assert got.dtypes == want.dtypes
+            pd.testing.assert_frame_equal(
+                _sorted_pdf(got, ["ms_id"]), _sorted_pdf(want, ["ms_id"]),
+            )
+    # no file with markers: no timed frame, in either mode
+    assert loader.read_dataframe(files=paths[2:])[1] is None
+    assert loader.read_dataframe(files_data=[loader.h5_to_streams(paths[2])])[1] is None
+
+
+def test_timed_frame_plans_no_join(spark, tmp_path):
+    """Neither read mode joins the timed frame back onto the events: the
+    file-path mode's timed mapInPandas yields only the valid marker rows."""
+    paths = _write_scans(tmp_path)
+    loader = MpesLoader(spark)
+    valid = 4 + 3                  # markers in [1, n] of the two marked files
+    for kw in ({"files": paths},
+               {"files_data": [loader.h5_to_streams(p) for p in paths]}):
+        _, timed, _ = loader.read_dataframe(**kw)
+        plan = timed._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+        assert ("MapInPandas" in plan) == ("files" in kw), plan
+        assert timed.count() == valid
+
+
+def test_files_data_missing_stream_names_the_payload(spark):
+    """A payload missing a stream of the first payload fails at submit
+    time, named, as the file-path mode names the file."""
+    z = np.zeros(3)
+    files_data = [{"streams": {"Stream_0": z, "Stream_1": z}},
+                  {"streams": {"Stream_0": z}}]
+    with pytest.raises(
+        ValueError, match=r"files_data\[1\] is missing streams .*Stream_1",
+    ):
+        MpesLoader(spark).read_dataframe(files_data=files_data)
 
 
 def test_file_start_time_mtime_fallback(tmp_path):
