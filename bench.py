@@ -7,29 +7,27 @@ Prints ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default host cpu count).
 
-Timing protocol follows the reference (best-of-N on an already-loaded
-dataframe: the event table is cached and materialized before the clock
-starts, like their in-memory dask df)."""
+Every series, headline, extras and the matched-scale block alike, is timed
+by :func:`_best_of` on an already-loaded dataframe: the event table is
+cached and materialized before the clock starts, like the reference's
+in-memory dask df. Per-run detail goes to BENCH_DETAIL.json."""
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
-import numpy as np
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-BEST_OF = 3
 
 
 def _workflow_chain(ev):
     """The benchmark's 5-step calibrate chain (jitter -> k-axis ->
     correction -> energy -> delay), shared by the sf-dir and ref-scale
     blocks so the two benchmarks can never silently drift apart."""
-    import __spark_entry__ as entry_mod
+    from queries.calibration import _DELAY_CALIB, _E_FIT, _K_CALIB
     from sed_binning_spark.calibration.delay import append_delay_axis
     from sed_binning_spark.calibration.energy import append_energy_axis, apply_energy_correction
     from sed_binning_spark.calibration.momentum import append_k_axis
@@ -37,30 +35,99 @@ def _workflow_chain(ev):
 
     df = apply_jitter(ev, cols=["X", "Y", "t"], cols_jittered=["X", "Y", "t"],
                       amps=0.5, seed=42)
-    df, _ = append_k_axis(df, entry_mod._K_CALIB)
+    df, _ = append_k_axis(df, _K_CALIB)
     df, _ = apply_energy_correction(df, {
         "correction_type": "spherical", "center": (1024.0, 1024.0),
         "amplitude": 2.5, "diameter": 3000.0,
     })
-    df, _ = append_energy_axis(df, {**entry_mod._E_FIT}, tof_column="tm")
-    df, _ = append_delay_axis(df, entry_mod._DELAY_CALIB)
+    df, _ = append_energy_axis(df, {**_E_FIT}, tof_column="tm")
+    df, _ = append_delay_axis(df, _DELAY_CALIB)
     return df
 
 
-def _timeit(fn) -> float:
-    best = float("inf")
-    for _ in range(BEST_OF):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
+def _stat_counters():
+    # /proc/stat first line: cpu user nice system idle iowait irq softirq steal
+    try:
+        with open("/proc/stat") as fh:
+            vals = [int(x) for x in fh.readline().split()[1:9]]
+        return {"sys": vals[2], "iowait": vals[4], "steal": vals[7],
+                "total": sum(vals)}
+    except OSError:
+        return None
+
+
+def _run(fn, hseries: list) -> float:
+    # per-run host-health record (driver-process sys time + host-wide
+    # steal/iowait deltas) so a slow run can be attributed to the host
+    # (hypervisor fault-service stalls, CPU steal) vs the code without
+    # a narrative; index-aligned with warmups + all_runs
+    s0 = _stat_counters()
+    c0 = os.times()
+    t0 = time.perf_counter()
+    fn()
+    wall = time.perf_counter() - t0
+    c1 = os.times()
+    s1 = _stat_counters()
+    rec = {"wall": round(wall, 3), "cpu_sys": round(c1.system - c0.system, 2)}
+    if s0 and s1:
+        dt = max(1, s1["total"] - s0["total"])
+        rec["steal_pct"] = round(100 * (s1["steal"] - s0["steal"]) / dt, 2)
+        rec["iowait_pct"] = round(100 * (s1["iowait"] - s0["iowait"]) / dt, 2)
+    hseries.append(rec)
+    return wall
+
+
+def _best_of(fn) -> dict:
+    """Time ``fn`` by the one protocol of every series, tuned for a noisy
+    shared host (r6/r7 best-of-N spanned 4.6-19.5 s on binning_4d — the
+    minimum of a heavy-tailed sample is itself noisy):
+
+    - TWO discarded warm-up runs, not one: run 0 pays codegen compilation
+      and page-cache fill, run 1 still runs tier-1 JIT'd generated code
+      (C2 replaces it only after enough invocations — the r7 binning_1d
+      series 3.10, 3.35, 2.32, 1.64, 1.08, 1.08 is tier-up, not noise);
+    - then measured runs until the three fastest agree within 30%, at
+      most 20 (r9's inv_dfield spread 3.4-12.3 s over 8 runs
+      and r10's binning_4d 3.07-6.41 s: the fix is more samples, not a
+      wider gate, and a quiet host still pays only 3 measured runs).
+
+    Returns ``value`` = the MEDIAN of the fastest cluster (unlike the raw
+    minimum, an order statistic whose run-over-run variance is bounded by
+    the cluster width, so a regression between BENCH_r{N} points is
+    signal), ``runs`` = that cluster, ``converged`` = whether its spread
+    is within 1.3x (a host too noisy to converge is flagged so a consumer
+    never mistakes cluster spread for signal), ``all_runs`` = every
+    measured run, ``warmups`` = the two discards, ``health`` = one host
+    record per run (warm-ups first) and ``phases`` = the binning phase
+    breakdown of the last run, so a regression can be localized (spark
+    job vs driver combine) without rerunning."""
+    from sed_binning_spark.binning import binning as binning_mod
+
+    binning_mod.LAST_RUN_INFO.clear()  # don't attribute stale phases
+    health: list = []
+    warmups = [round(_run(fn, health), 3) for _ in range(2)]
+    series = [_run(fn, health) for _ in range(3)]
+    while len(series) < 20 and sorted(series)[2] > sorted(series)[0] * 1.30:
+        series.append(_run(fn, health))
+    cluster = sorted(series)[:3]
+    return {
+        "value": round(statistics.median(cluster), 3),
+        "runs": [round(t, 3) for t in cluster],
+        "converged": cluster[2] <= cluster[0] * 1.30,
+        "all_runs": [round(t, 3) for t in series],
+        "warmups": warmups,
+        "health": health,
+        "phases": dict(binning_mod.LAST_RUN_INFO),
+    }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from pyspark.sql import functions as F
 
-    import __spark_entry__ as entry_mod
+    from queries import REGISTRY
+    from queries._common import _events
+    from queries.embeddings import _QVEC
     from sed_binning_spark.binning.binning import bin_dataframe
     from sed_binning_spark.pipeline.dedup import exact_dedup, minhash_lsh_pairs
     from sed_binning_spark.pipeline.similarity import cosine_topk
@@ -72,7 +139,7 @@ def main() -> None:
 
     from sed_binning_spark.session import default_parallelism
 
-    ev = entry_mod._events(spark, sf_dir).cache()
+    ev = _events(spark, sf_dir).cache()
     n_events = ev.count()  # materialize before the clock starts
     # the toy-scale documents table is ONE parquet file = one scan split;
     # cache it across a few partitions like any real multi-file corpus
@@ -87,15 +154,15 @@ def main() -> None:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
     emb.count()
 
-    timings: dict[str, float] = {}
+    timings: dict[str, dict] = {}
 
     # --- binning_1d: 1000 bins on t (reference benchmark_sed.py:41-62)
-    timings["binning_1d"] = _timeit(lambda: bin_dataframe(
+    timings["binning_1d"] = _best_of(lambda: bin_dataframe(
         ev, bins=[1000], axes=["t"], ranges=[(60000.0, 120000.0)],
     ))
 
     # --- binning_4d: 100^4 bins on X,Y,t,ADC (benchmark_sed.py:65-86)
-    timings["binning_4d"] = _timeit(lambda: bin_dataframe(
+    timings["binning_4d"] = _best_of(lambda: bin_dataframe(
         ev, bins=[100, 100, 100, 100], axes=["X", "Y", "t", "ADC"],
         ranges=[(0.0, 2048.0), (0.0, 2048.0), (60000.0, 120000.0), (2000.0, 20000.0)],
     ))
@@ -106,21 +173,21 @@ def main() -> None:
     def _chain():
         return _workflow_chain(ev)
 
-    timings["workflow_1d"] = _timeit(lambda: bin_dataframe(
+    timings["workflow_1d"] = _best_of(lambda: bin_dataframe(
         _chain(), bins=[1000], axes=["energy"], ranges=[(20.0, 60.0)],
     ))
-    timings["workflow_4d"] = _timeit(lambda: bin_dataframe(
+    timings["workflow_4d"] = _best_of(lambda: bin_dataframe(
         _chain(), bins=[100, 100, 100, 100], axes=["kx", "ky", "energy", "delay"],
         ranges=[(-12.0, 12.0), (-12.0, 12.0), (20.0, 60.0), (-6.0, 6.0)],
     ))
 
     # --- pipeline operators
-    timings["dedup_exact"] = _timeit(lambda: exact_dedup(docs).count())
-    timings["minhash_lsh"] = _timeit(lambda: minhash_lsh_pairs(
+    timings["dedup_exact"] = _best_of(lambda: exact_dedup(docs).count())
+    timings["minhash_lsh"] = _best_of(lambda: minhash_lsh_pairs(
         docs, num_hashes=8, bands=4,
     ).count())
-    timings["ann_topk"] = _timeit(lambda: cosine_topk(emb, entry_mod._QVEC, k=10).collect())
-    timings["text_stats"] = _timeit(
+    timings["ann_topk"] = _best_of(lambda: cosine_topk(emb, _QVEC, k=10).collect())
+    timings["text_stats"] = _best_of(
         lambda: text_stats(docs).agg(F.sum("n_ws_tokens")).collect(),
     )
 
@@ -136,28 +203,28 @@ def main() -> None:
         F.concat_ws("\n\n", "text", F.lit("shared"), "text").alias("text"),
     )
     extras = {
-        "dedup_segments": _timeit(
+        "dedup_segments": _best_of(
             lambda: dedup_segments(para).agg(F.sum("n_removed")).collect(),
         ),
-        "dedup_substrings": _timeit(
+        "dedup_substrings": _best_of(
             lambda: dedup_substrings(docs, window=5)
             .agg(F.sum("n_removed_tokens")).collect(),
         ),
         # the Rabin-Karp throughput path of the same operator (round 9):
         # one md5 per TOKEN + O(log w) zips instead of md5 per window
-        "dedup_substrings_rolling": _timeit(
+        "dedup_substrings_rolling": _best_of(
             lambda: dedup_substrings(docs, window=5, hash_function="rolling")
             .agg(F.sum("n_removed_tokens")).collect(),
         ),
-        "unigram_logprob": _timeit(
+        "unigram_logprob": _best_of(
             lambda: unigram_logprob(docs).agg(F.sum("unigram_logprob")).collect(),
         ),
-        "seq_pack": _timeit(
+        "seq_pack": _best_of(
             lambda: pack_chunks(docs, seq_tokens=512, n_shards=32).count(),
         ),
         # the writer half — the token-moving join + reassembly shuffle that
         # dominates at scale (manifest layout alone is ids + ints only)
-        "seq_assemble": _timeit(
+        "seq_assemble": _best_of(
             lambda: pack_sequences(
                 pack_chunks(docs, seq_tokens=512, n_shards=32), docs,
             ).count(),
@@ -176,10 +243,10 @@ def main() -> None:
     def _pq_step():
         pq = pq_train(emb, m=8, codes=32, sample_size=512, iterations=10)
         coded = pq_encode(emb, pq)
-        return pq_topk(coded, pq, entry_mod._QVEC, k=10).collect()
+        return pq_topk(coded, pq, _QVEC, k=10).collect()
 
-    extras["pq_encode_search"] = _timeit(_pq_step)
-    extras["pca_fit_apply"] = _timeit(
+    extras["pq_encode_search"] = _best_of(_pq_step)
+    extras["pca_fit_apply"] = _best_of(
         lambda: pca_apply(emb, pca_fit(emb, k=16))
         .agg(F.count("embedding_pca")).collect(),
     )
@@ -194,12 +261,12 @@ def main() -> None:
     )
 
     agif = synthesize_animated_gif_media_from_text(docs, frames=3)
-    extras["frame_sample_gif"] = _timeit(
+    extras["frame_sample_gif"] = _best_of(
         lambda: sample_frames(agif).agg(F.sum("frame_ms")).collect(),
     )
 
     wavs = synthesize_wav_media_from_text(docs)
-    extras["audio_windows"] = _timeit(
+    extras["audio_windows"] = _best_of(
         lambda: sample_audio_windows(wavs, window_ms=4)
         .agg(F.sum("start_ms")).collect(),
     )
@@ -207,7 +274,7 @@ def main() -> None:
     # round-13: the same windows behind G.711 μ-law companding — the
     # telephony decode path (256-entry table expansion per payload)
     uws = synthesize_wav_media_from_text(docs, codec="ulaw")
-    extras["audio_windows_g711"] = _timeit(
+    extras["audio_windows_g711"] = _best_of(
         lambda: sample_audio_windows(uws, window_ms=4)
         .agg(F.sum("start_ms")).collect(),
     )
@@ -230,16 +297,16 @@ def main() -> None:
             F.encode(F.md5("text"), "UTF-8"),
         ).alias("payload"),
     )
-    extras["media_tags"] = _timeit(
+    extras["media_tags"] = _best_of(
         lambda: extract_media_tags(id3_media).count(),
     )
     subs = synthesize_subtitle_media_from_text(docs)
-    extras["subtitle_cues"] = _timeit(
+    extras["subtitle_cues"] = _best_of(
         lambda: extract_subtitle_cues(subs)
         .agg(F.sum("start_ms")).collect(),
     )
 
-    extras["quality_classifier"] = _timeit(
+    extras["quality_classifier"] = _best_of(
         lambda: quality_classifier_apply(
             docs,
             quality_classifier_fit(
@@ -256,16 +323,14 @@ def main() -> None:
     # through the noop sink (guide §1.4: computes every column, no sink
     # cost), so the driver's round-over-round comparison can finally see
     # them. Additions-only: headline_total still sums the same 8 queries.
-    entry_queries = entry_mod.queries()
-
     def _noop_query(name: str) -> None:
-        df = entry_queries[name](spark, sf_dir)
+        df = REGISTRY[name].build(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
 
     for _wq in ("sxp_electron_ids", "fills", "frame_sample",
                 "ann_pairs_brute", "embedding_dedup_rows"):
         spark.sparkContext.setJobDescription(f"bench extra: {_wq}")
-        extras[_wq] = _timeit(lambda q=_wq: _noop_query(q))
+        extras[_wq] = _best_of(lambda q=_wq: _noop_query(q))
     spark.sparkContext.setJobDescription(None)
 
     # --- matched-scale block: the reference's OWN synthetic workload
@@ -277,24 +342,26 @@ def main() -> None:
     if ref_n > 0:
         ref_block = _ref_scale_block(spark, ref_n)
 
-    total = sum(timings.values())
+    total = sum(r["value"] for r in timings.values())
     payload = {
         "metric": "headline_total",
         "value": round(total, 4),
         "unit": "sec",
-        "queries": {k: round(v, 4) for k, v in timings.items()},
-        "extras": {k: round(v, 4) for k, v in extras.items()},
+        "queries": {k: r["value"] for k, r in timings.items()},
+        "extras": {k: r["value"] for k, r in extras.items()},
         "sf": sf_dir,
         "n_events": n_events,
-        "events_per_sec_1d": round(n_events / timings["binning_1d"]),
+        "events_per_sec_1d": round(n_events / timings["binning_1d"]["value"]),
         "ref_scale": ref_block,
+        "series": {**timings, **extras},
     }
     # The driver captures only the last 2000 chars of stdout and parses the
     # JSON line out of that window; the full ref_scale diagnostics block
     # (all_runs/warmups/phases) grew the line past the window in rounds
     # 10-13 and the driver recorded "parsed": null every round.  Keep the
     # one stdout JSON line compact (same metric/value/unit/queries/extras
-    # keys, ref_scale reduced to its medians + convergence flags) and emit
+    # keys, ref_scale reduced to its medians + convergence flags, no
+    # per-series run detail) and emit
     # the full diagnostics to stderr and BENCH_DETAIL.json next to this
     # file, so nothing measured is lost.
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -306,6 +373,7 @@ def main() -> None:
         pass
     print("full detail: " + json.dumps(payload), file=sys.stderr)
     compact = dict(payload)
+    del compact["series"]
     if ref_block:
         compact["ref_scale"] = {
             "n_rows": ref_block["n_rows"],
@@ -321,42 +389,18 @@ def main() -> None:
 
 
 def _ref_scale_block(spark, n: int) -> dict:
-    """binning/workflow timings at the reference benchmark's scale.
-
-    Timing protocol mirrors the reference (in-memory table, clock covers
-    only the histogram computation) with a stability protocol tuned for a
-    noisy shared host (r6/r7 best-of-N spanned 4.6-19.5 s on binning_4d —
-    the minimum of a heavy-tailed sample is itself noisy):
-
-    - TWO discarded warm-up runs, not one: run 0 pays codegen compilation
-      and page-cache fill, run 1 still runs tier-1 JIT'd generated code
-      (C2 replaces it only after enough invocations — the r7 binning_1d
-      series 3.10, 3.35, 2.32, 1.64, 1.08, 1.08 is tier-up, not noise);
-    - then adaptive measurement until the three fastest measured runs
-      agree within 30% (capped at 20 measured runs — rounds 9/10 showed
-      8 was not enough for this host's noise tails), reporting the
-      MEDIAN of that fastest cluster — unlike the raw minimum, the
-      cluster median is an order statistic whose round-over-round
-      variance is bounded by the cluster width, so a regression in
-      BENCH_r{N} vs r{N-1} is signal.
+    """binning/workflow timings at the reference benchmark's scale, each
+    timed by :func:`_best_of` (in-memory table, clock covers only the
+    histogram computation).
 
     BASELINE.md targets: binning_1d 3.02 s, binning_4d 9.21 s,
     workflow_1d 17.06 s, workflow_4d 21.42 s at 1e8 rows. Emitted keys:
-    "queries" = per-query cluster median; "runs" = the 3-run fastest
-    cluster each median came from (spread ≤ 1.3x when "converged"[query]
-    is true; a host too noisy to converge within 8 runs is flagged false
-    so a consumer never mistakes cluster spread for signal);
-    "all_runs" = every measured run including the tail outliers the
-    cluster excluded; "warmups" = the two discards; "phases" = the
-    physical-plan phase breakdown of the last run per query, so
-    regressions can be localized (spark job vs driver combine) without
-    rerunning.
+    "queries" = per-query cluster median, then one dict per
+    :func:`_best_of` field ("runs", "all_runs", "warmups", "converged",
+    "phases", "health"), keyed by query.
     """
-    import statistics
     from pyspark.sql import functions as F
 
-    import __spark_entry__ as entry_mod
-    from sed_binning_spark.binning import binning as binning_mod
     from sed_binning_spark.binning.binning import bin_dataframe
 
     ev = (
@@ -371,76 +415,12 @@ def _ref_scale_block(spark, n: int) -> dict:
     )
     ev.agg(F.sum("X")).collect()  # materialize the cache fully
 
-    best = {}
-    runs = {}
-    all_runs = {}
-    warmups = {}
-    converged = {}
-    phases = {}
-    health = {}
+    recs = {}
 
-    def _stat_counters():
-        # /proc/stat first line: cpu user nice system idle iowait irq softirq steal
-        try:
-            with open("/proc/stat") as fh:
-                vals = [int(x) for x in fh.readline().split()[1:9]]
-            return {"sys": vals[2], "iowait": vals[4], "steal": vals[7],
-                    "total": sum(vals)}
-        except OSError:
-            return None
-
-    def _best_of(name, fn, max_runs=20):
-        binning_mod.LAST_RUN_INFO.clear()  # don't attribute stale phases
-        # two discarded warm-ups (codegen compile + C2 tier-up; see
-        # docstring), then measure until the 3 fastest agree within 30%
-        # or max_runs measured runs; report the median of the fastest
-        # cluster. max_runs=20 for EVERY query since round 11: r9's
-        # inv_dfield (spread 3.4-12.3 s over 8 runs) and r10's binning_4d
-        # (3.07-6.41 s) both failed to converge under the old 8-run cap
-        # on this contended host — the fix is more samples, not a wider
-        # gate, and the loop exits at the first converged cluster so a
-        # quiet host still pays only 3 measured runs.
-        health[name] = hseries = []
-        warmups[name] = [round(_run(fn, hseries), 3) for _ in range(2)]
-        series = [_run(fn, hseries) for _ in range(3)]
-        while len(series) < max_runs:
-            lo = sorted(series)[:3]
-            if lo[2] <= lo[0] * 1.30:
-                break
-            series.append(_run(fn, hseries))
-        all_runs[name] = [round(t, 3) for t in series]
-        cluster = sorted(series)[:3]
-        runs[name] = [round(t, 3) for t in cluster]
-        converged[name] = cluster[2] <= cluster[0] * 1.30
-        best[name] = round(statistics.median(cluster), 3)
-        phases[name] = dict(binning_mod.LAST_RUN_INFO)
-
-    def _run(fn, hseries=None):
-        # per-run host-health record (driver-process sys time + host-wide
-        # steal/iowait deltas) so a slow run can be attributed to the host
-        # (hypervisor fault-service stalls, CPU steal) vs the code without
-        # a narrative; index-aligned with warmups + all_runs
-        s0 = _stat_counters()
-        c0 = os.times()
-        t0 = time.perf_counter()
-        fn()
-        wall = time.perf_counter() - t0
-        if hseries is not None:
-            c1 = os.times()
-            s1 = _stat_counters()
-            rec = {"wall": round(wall, 3),
-                   "cpu_sys": round(c1.system - c0.system, 2)}
-            if s0 and s1:
-                dt = max(1, s1["total"] - s0["total"])
-                rec["steal_pct"] = round(100 * (s1["steal"] - s0["steal"]) / dt, 2)
-                rec["iowait_pct"] = round(100 * (s1["iowait"] - s0["iowait"]) / dt, 2)
-            hseries.append(rec)
-        return wall
-
-    _best_of("binning_1d", lambda: bin_dataframe(
+    recs["binning_1d"] = _best_of(lambda: bin_dataframe(
         ev, bins=[1000], axes=["t"], ranges=[(60000.0, 120000.0)],
     ))
-    _best_of("binning_4d", lambda: bin_dataframe(
+    recs["binning_4d"] = _best_of(lambda: bin_dataframe(
         ev, bins=[100, 100, 100, 100], axes=["X", "Y", "t", "ADC"],
         ranges=[(0.0, 2048.0), (0.0, 2048.0), (60000.0, 120000.0), (2000.0, 20000.0)],
     ))
@@ -448,10 +428,10 @@ def _ref_scale_block(spark, n: int) -> dict:
     def _chain():
         return _workflow_chain(ev)
 
-    _best_of("workflow_1d", lambda: bin_dataframe(
+    recs["workflow_1d"] = _best_of(lambda: bin_dataframe(
         _chain(), bins=[1000], axes=["energy"], ranges=[(20.0, 60.0)],
     ))
-    _best_of("workflow_4d", lambda: bin_dataframe(
+    recs["workflow_4d"] = _best_of(lambda: bin_dataframe(
         _chain(), bins=[100, 100, 100, 100], axes=["kx", "ky", "energy", "delay"],
         ranges=[(-12.0, 12.0), (-12.0, 12.0), (20.0, 60.0), (-6.0, 6.0)],
     ))
@@ -462,22 +442,18 @@ def _ref_scale_block(spark, n: int) -> dict:
     from sed_binning_spark.calibration.momentum_fit import transform_fields
 
     fr, fc = transform_fields((512, 512), "rotation", angle=5.0)
-    _best_of("inv_dfield", lambda: generate_inverse_dfield(
+    recs["inv_dfield"] = _best_of(lambda: generate_inverse_dfield(
         fr, fc, bin_ranges=((0, 512), (0, 512)),
         detector_ranges=((0, 2048), (0, 2048)),
     ))
 
     ev.unpersist()
+    fields = ("runs", "all_runs", "warmups", "converged", "phases", "health")
     return {
         "n_rows": n,
-        "queries": best,
-        "runs": runs,
-        "all_runs": all_runs,
-        "warmups": warmups,
-        "converged": converged,
-        "phases": phases,
-        "health": health,
-        "events_per_sec_1d": round(n / best["binning_1d"]),
+        "queries": {k: r["value"] for k, r in recs.items()},
+        **{f: {k: r[f] for k, r in recs.items()} for f in fields},
+        "events_per_sec_1d": round(n / recs["binning_1d"]["value"]),
         "baseline_ref": {"binning_1d": 3.0176, "binning_4d": 9.2103,
                          "workflow_1d": 17.0553, "workflow_4d": 21.4181,
                          "inv_dfield": 5.1961},

@@ -237,6 +237,3 @@ def resolve_alias(name: str, config: dict) -> str:
     except KeyError as exc:
         raise KeyError(f"column role {role!r} not bound in config['dataframe']") from exc
 
-
-def resolve_aliases(names, config: dict) -> list[str]:
-    return [resolve_alias(n, config) for n in names]

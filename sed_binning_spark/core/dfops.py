@@ -322,67 +322,7 @@ def forward_fill(
     of keys (e.g. ``("file_id", "split_id")``) to sub-divide giant files by
     scan split with the same handoff.
     """
-    if isinstance(columns, str):
-        columns = [columns]
-    columns = list(columns)
-    if len(columns) == 0:
-        raise ValueError("columns must be a non-empty list of column names!")
-    missing = [c for c in columns if c not in df.columns]
-    if missing:
-        raise KeyError(f"columns not in dataframe: {missing}")
-
-    keys = _fill_keys(df, file_column)
-    if keys is None:
-        # single ordered stream: plain global window (small data / tests)
-        w = Window.orderBy(row_column).rowsBetween(Window.unboundedPreceding, 0)
-        out = df
-        for c in columns:
-            out = out.withColumn(c, F.last(_nan_to_null(df, c), ignorenulls=True).over(w))
-        return out
-
-    # phase 1: parallel per-file (or per-split) fill
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(row_column)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = df
-    for c in columns:
-        out = out.withColumn(c, F.last(_nan_to_null(df, c), ignorenulls=True).over(w))
-
-    # phase 2: per-key last non-null value, then the carry across the key
-    # sequence as a running last() over the strictly-PRECEDING keys —
-    # computed IN-PLAN over the tiny one-row-per-key aggregate (the old
-    # driver collect + Python carry loop blocked query build on a Spark
-    # job and would land one row per file on the driver at 100 TB scale;
-    # the ordered window over the aggregate is one single-task stage over
-    # #files rows inside the same job). Aggregates over the RAW frame:
-    # the last non-null per key is identical either way, and aggregating
-    # `out` would execute the phase-1 sort window once extra. max_by only
-    # selects rows where the column is valid, so boundary values are
-    # never NaN and last(ignorenulls) reproduces the `is not None` carry
-    # exactly; orderBy over the keys matches the old Python tuple sort
-    # for every orderable key type (UTF8 binary order == code-point
-    # order).
-    aggs = [
-        F.max_by(c, F.when(_nan_to_null(df, c).isNotNull(), F.col(row_column)))
-        .alias(f"__ff_{c}")
-        for c in columns
-    ]
-    wseq = Window.orderBy(*keys).rowsBetween(Window.unboundedPreceding, -1)
-    bdf = df.groupBy(*keys).agg(*aggs).select(
-        *keys,
-        *[
-            F.last(f"__ff_{c}", ignorenulls=True).over(wseq).alias(f"__ff_{c}")
-            for c in columns
-        ],
-    )
-
-    # phase 3: broadcast the boundary values, coalesce into leading nulls
-    out = out.join(F.broadcast(bdf), on=keys, how="left")
-    for c in columns:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"__ff_{c}")))
-    return out.drop(*[f"__ff_{c}" for c in columns])
+    return _fill(df, columns, file_column, row_column, forward=True)
 
 
 def backward_fill(
@@ -393,6 +333,20 @@ def backward_fill(
 ) -> DataFrame:
     """Backward-fill (mirror of :func:`forward_fill`; reference
     backward_fill_lazy, sed/core/dfops.py:258-315)."""
+    return _fill(df, columns, file_column, row_column, forward=False)
+
+
+def _fill(df, columns, file_column, row_column, forward: bool) -> DataFrame:
+    """The three-phase fill plan of both directions. A backward fill is the
+    forward plan over DESCENDING row and key order.
+
+    "First non-null at-or-after the current row" is expressed as a RUNNING
+    last() over descending row order, not first() over a (currentRow,
+    unboundedFollowing) frame: Spark evaluates an unbounded-FOLLOWING frame
+    by rebuilding the aggregate from scratch for every row — O(rows²) per
+    partition, measured 42 s on a 100k-row frame where the descending
+    running frame (identical values; ties were order-nondeterministic in
+    both forms) takes the same O(n) path as the forward fill."""
     if isinstance(columns, str):
         columns = [columns]
     columns = list(columns)
@@ -402,60 +356,55 @@ def backward_fill(
     if missing:
         raise KeyError(f"columns not in dataframe: {missing}")
 
-    # "first non-null at-or-after the current row" is expressed as a
-    # RUNNING last() over DESCENDING row order, not first() over a
-    # (currentRow, unboundedFollowing) frame: Spark evaluates an
-    # unbounded-FOLLOWING frame by rebuilding the aggregate from scratch
-    # for every row — O(rows²) per partition, measured 42 s on a 100k-row
-    # frame where the descending running frame (identical values; ties
-    # were order-nondeterministic in both forms) takes the same O(n) path
-    # as forward_fill.
-    keys = _fill_keys(df, file_column)
-    if keys is None:
-        w = (
-            Window.orderBy(F.col(row_column).desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        out = df
-        for c in columns:
-            out = out.withColumn(c, F.last(_nan_to_null(df, c), ignorenulls=True).over(w))
-        return out
+    def order(c):
+        return F.col(c).asc() if forward else F.col(c).desc()
 
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(row_column).desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    keys = _fill_keys(df, file_column)
+    # phase 1: running last() per file (or per split); a single ordered
+    # stream (no key column: small data / tests) is one global window
+    w = Window.partitionBy(*keys) if keys is not None else Window
+    w = w.orderBy(order(row_column)).rowsBetween(Window.unboundedPreceding, 0)
     out = df
     for c in columns:
         out = out.withColumn(c, F.last(_nan_to_null(df, c), ignorenulls=True).over(w))
+    if keys is None:
+        return out
 
-    # boundary handoff in-plan, the mirror of forward_fill's phase 2: the
-    # per-key FIRST non-null value, carried backwards as a running last()
-    # over the strictly-preceding keys in DESCENDING key order (tuple
-    # reverse sort == orderBy every key desc). Aggregates over the RAW
-    # frame: the first non-null per key is identical either way, and
-    # aggregating `out` would execute the phase-1 sort window once extra.
+    # phase 2: per-key boundary value (LAST non-null going forward, FIRST
+    # going backward), then the carry across the key sequence as a running
+    # last() over the strictly-PRECEDING keys in fill order (tuple reverse
+    # sort == orderBy every key desc) — computed IN-PLAN over the tiny
+    # one-row-per-key aggregate (the old driver collect + Python carry loop
+    # blocked query build on a Spark job and would land one row per file on
+    # the driver at 100 TB scale; the ordered window over the aggregate is
+    # one single-task stage over #files rows inside the same job).
+    # Aggregates over the RAW frame: the boundary non-null per key is
+    # identical either way, and aggregating `out` would execute the phase-1
+    # sort window once extra. max_by/min_by only select rows where the
+    # column is valid, so boundary values are never NaN and
+    # last(ignorenulls) reproduces the `is not None` carry exactly;
+    # orderBy over the keys matches the old Python tuple sort for every
+    # orderable key type (UTF8 binary order == code-point order).
+    pick, tag = (F.max_by, "__ff_") if forward else (F.min_by, "__bf_")
     aggs = [
-        F.min_by(c, F.when(_nan_to_null(df, c).isNotNull(), F.col(row_column)))
-        .alias(f"__bf_{c}")
+        pick(c, F.when(_nan_to_null(df, c).isNotNull(), F.col(row_column)))
+        .alias(f"{tag}{c}")
         for c in columns
     ]
-    wseq = (
-        Window.orderBy(*[F.col(k).desc() for k in keys])
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    wseq = Window.orderBy(*map(order, keys)).rowsBetween(Window.unboundedPreceding, -1)
     bdf = df.groupBy(*keys).agg(*aggs).select(
         *keys,
         *[
-            F.last(f"__bf_{c}", ignorenulls=True).over(wseq).alias(f"__bf_{c}")
+            F.last(f"{tag}{c}", ignorenulls=True).over(wseq).alias(f"{tag}{c}")
             for c in columns
         ],
     )
+
+    # phase 3: broadcast the boundary values, coalesce into leading nulls
     out = out.join(F.broadcast(bdf), on=keys, how="left")
     for c in columns:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"__bf_{c}")))
-    return out.drop(*[f"__bf_{c}" for c in columns])
+        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"{tag}{c}")))
+    return out.drop(*[f"{tag}{c}" for c in columns])
 
 
 def _nan_to_null(df: DataFrame, col: str) -> Column:

@@ -31,6 +31,14 @@ def pytest_configure(config):
     _stall_out = os.fdopen(os.dup(2), "w")
 
 
+def pytest_unconfigure(config):
+    global _stall_out
+    if _stall_out is not None:
+        faulthandler.cancel_dump_traceback_later()
+        _stall_out.close()
+        _stall_out = None
+
+
 @pytest.fixture(autouse=True)
 def _stall_watchdog():
     faulthandler.dump_traceback_later(_STALL_DUMP_S, exit=False, file=_stall_out)

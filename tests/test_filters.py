@@ -111,7 +111,7 @@ def test_badwords_duckdb_parity(spark):
         r.doc_id: (r.n_badword_tokens, r.badword_frac)
         for r in badword_stats(df, BAD).collect()
     }
-    from __spark_entry__ import _toks_sql
+    from queries.text import _toks_sql
 
     toks = _toks_sql("text")
     sql = f"""

@@ -128,7 +128,7 @@ def test_duckdb_parity(spark):
         pytest.skip("driver testdata not present")
     df = spark.read.parquet(path)
     got = {r.doc_id: r.unigram_logprob for r in unigram_logprob(df).collect()}
-    from __spark_entry__ import _toks_sql
+    from queries.text import _toks_sql
 
     toks = _toks_sql("text")
     sql = f"""

@@ -352,7 +352,7 @@ def test_repetition_stats_duckdb_parity(spark, kind, n):
         r.doc_id: r[col]
         for r in repetition_stats(df, top_ns=(n,), dup_ns=(n,)).collect()
     }
-    from __spark_entry__ import _toks_sql
+    from queries.text import _toks_sql
 
     toks = _toks_sql("text")
     grams = (

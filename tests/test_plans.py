@@ -53,7 +53,7 @@ def events_sdf(spark, events_pdf):
 
 
 def _workflow_chain(df):
-    from __spark_entry__ import _DELAY_CALIB, _E_FIT, _K_CALIB
+    from queries.calibration import _DELAY_CALIB, _E_FIT, _K_CALIB
 
     df = apply_jitter(df, cols=["X", "Y", "t"], cols_jittered=["X", "Y", "t"],
                       amps=0.5, seed=42)

@@ -90,7 +90,7 @@ def test_exact_percentiles_duckdb_parity(spark):
         pytest.skip("driver testdata not present")
     df = spark.read.parquet(path)
     got = _rows(corpus_report(df, strata_column="lang", exact=True))
-    from __spark_entry__ import _WS_SQL
+    from queries.text import _WS_SQL
 
     toks = _WS_SQL
     sql = f"""

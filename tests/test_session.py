@@ -63,7 +63,7 @@ def test_scan_memo_keeps_one_entry_per_scan_across_sessions(spark, tmp_path):
     """A new session of the same application replaces the old session's
     memo entry for the same scan instead of piling up beside it."""
     sys.path.insert(0, str(_REPO))
-    import __spark_entry__ as entry
+    from queries import _common as entry
 
     path = tmp_path / "scan.parquet"
     path.write_bytes(b"x")
@@ -87,7 +87,7 @@ def test_scan_memo_concurrent_misses_prune_one_stale_key(spark, tmp_path, monkey
     from concurrent.futures import ThreadPoolExecutor
 
     sys.path.insert(0, str(_REPO))
-    import __spark_entry__ as entry
+    from queries import _common as entry
 
     barrier = threading.Barrier(2, timeout=2)
 

@@ -80,7 +80,7 @@ def test_strip_html_duckdb_parity(spark):
     got = {r.doc_id: r.text_clean for r in strip_html(df).collect()}
 
     # ONE source of truth for the SQL twin: the driver oracle's builder
-    from __spark_entry__ import _strip_html_sql
+    from queries.text import _strip_html_sql
 
     expr = _strip_html_sql("text")
     sql = (

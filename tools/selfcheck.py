@@ -1,11 +1,15 @@
 """Local replica of the driver's t2 correctness gate: run every
 ``queries()`` entry on Spark AND its ``oracle_sql()`` twin on DuckDB at
 sf0.01, compare row count, column names, and an order-insensitive value
-hash. Run: ``python tools/selfcheck.py [sf_dir] [query ...]``."""
+hash. Run: ``python tools/selfcheck.py [sf_dir] [query ...]``.
+
+Each line carries the query's Spark-side value hash, so the outputs of two
+checkouts diff line by line (``diff <(python tools/selfcheck.py) ...``)."""
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
@@ -13,7 +17,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -72,7 +76,7 @@ def main() -> int:
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"rows  {name}: {len(sdf)} rows (rows-only, no oracle) "
+            print(f"rows  {name}: {len(sdf)} rows {value_hash(sdf)} (rows-only, no oracle) "
                   f"[{time.time() - t0:.1f}s]")
             n_rows_only += 1
             continue
@@ -84,7 +88,8 @@ def main() -> int:
             continue
         ok_rows = len(sdf) == len(odf)
         ok_cols = sorted(sdf.columns) == sorted(odf.columns)
-        ok_hash = ok_rows and ok_cols and value_hash(sdf) == value_hash(odf)
+        s_hash = value_hash(sdf)
+        ok_hash = ok_rows and ok_cols and s_hash == value_hash(odf)
         status = "pass" if (ok_rows and ok_cols and ok_hash) else "FAIL"
         if status == "pass":
             n_pass += 1
@@ -97,7 +102,7 @@ def main() -> int:
             detail = f" cols {sorted(sdf.columns)} vs {sorted(odf.columns)}"
         elif not ok_hash:
             detail = " value-hash mismatch"
-        print(f"{status}  {name}: {len(sdf)} rows{detail} [{time.time() - t0:.1f}s]")
+        print(f"{status}  {name}: {len(sdf)} rows {s_hash}{detail} [{time.time() - t0:.1f}s]")
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     return 1 if n_fail else 0
 

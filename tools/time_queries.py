@@ -1,27 +1,27 @@
 """Time every declared query in isolation with the noop sink
-(guide §1.4: eager full-column compute, no sink cost, visible in SQL tab).
+(guide §1.4: eager full-column compute, no sink cost, visible in SQL tab),
+by the same protocol as every ``bench.py`` series (``bench._best_of``).
 
 Run: ``python tools/time_queries.py [sf_dir] [query ...]``
-Prints one line per query: ``<name> <best>s (runs: a, b, c)`` and a final
+Prints one line per query: ``<name> <median>s (runs: a, b, c)`` and a final
 JSON line for machine consumption.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
-
-RUNS = 3
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = set(sys.argv[2:])
 
-    import __spark_entry__ as entry_mod
+    from bench import _best_of
+    from queries import REGISTRY
     from sed_binning_spark.session import get_spark
 
     spark = get_spark(app_name="time-queries")
@@ -29,27 +29,25 @@ def main() -> int:
     sc = spark.sparkContext
 
     results: dict[str, float] = {}
-    allruns: dict[str, list[float]] = {}
-    for name, fn in entry_mod.queries().items():
+    allruns: dict[str, dict] = {}
+    for name, q in REGISTRY.items():
         if only and name not in only:
             continue
-        times = []
+        sc.setJobDescription(name)
         try:
-            for i in range(RUNS):
-                sc.setJobDescription(f"{name} run {i}")
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                times.append(time.perf_counter() - t0)
-            sc.setJobDescription(None)
+            rec = _best_of(
+                lambda: q.build(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+            )
         except Exception as exc:
             print(f"{name} ERROR {exc!r}")
             results[name] = -1.0
             continue
-        results[name] = round(min(times), 3)
-        allruns[name] = [round(t, 3) for t in times]
-        print(f"{name} {min(times):.3f}s (runs: {', '.join(f'{t:.3f}' for t in times)})",
-              flush=True)
+        finally:
+            sc.setJobDescription(None)
+        results[name] = rec["value"]
+        allruns[name] = rec
+        print(f"{name} {rec['value']:.3f}s (runs: {', '.join(f'{t:.3f}' for t in rec['runs'])}"
+              f"{'' if rec['converged'] else '; not converged'})", flush=True)
     print(json.dumps({"sf": sf_dir, "best": results, "runs": allruns}))
     return 0
 
