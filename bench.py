@@ -77,6 +77,12 @@ def _run(fn, hseries: list) -> float:
     return wall
 
 
+def _agreeing_cluster(series: list[float]) -> list[float] | None:
+    """The fastest 3 adjacent sorted runs within 30 % of each other."""
+    s = sorted(series)
+    return next((s[i:i + 3] for i in range(len(s) - 2) if s[i + 2] <= s[i] * 1.30), None)
+
+
 def _best_of(fn) -> dict:
     """Time ``fn`` by the one protocol of every series, tuned for a noisy
     shared host (r6/r7 best-of-N spanned 4.6-19.5 s on binning_4d — the
@@ -86,34 +92,39 @@ def _best_of(fn) -> dict:
       and page-cache fill, run 1 still runs tier-1 JIT'd generated code
       (C2 replaces it only after enough invocations — the r7 binning_1d
       series 3.10, 3.35, 2.32, 1.64, 1.08, 1.08 is tier-up, not noise);
-    - then measured runs until the three fastest agree within 30%, at
-      most 20 (r9's inv_dfield spread 3.4-12.3 s over 8 runs
-      and r10's binning_4d 3.07-6.41 s: the fix is more samples, not a
-      wider gate, and a quiet host still pays only 3 measured runs).
+    - then measured runs until 3 of them agree within 30%, at most 20
+      (r9's inv_dfield spread 3.4-12.3 s over 8 runs and r10's
+      binning_4d 3.07-6.41 s: the fix is more samples, not a wider gate,
+      and a quiet host still pays only 3 measured runs). The cluster is
+      the fastest window of 3 adjacent sorted runs that agree, so one
+      lone run far below the rest cannot hold the gate open to the cap.
 
-    Returns ``value`` = the MEDIAN of the fastest cluster (unlike the raw
+    Returns ``value`` = the MEDIAN of that cluster (unlike the raw
     minimum, an order statistic whose run-over-run variance is bounded by
     the cluster width, so a regression between BENCH_r{N} points is
-    signal), ``runs`` = that cluster, ``converged`` = whether its spread
-    is within 1.3x (a host too noisy to converge is flagged so a consumer
-    never mistakes cluster spread for signal), ``all_runs`` = every
-    measured run, ``warmups`` = the two discards, ``health`` = one host
-    record per run (warm-ups first) and ``phases`` = the binning phase
-    breakdown of the last run, so a regression can be localized (spark
-    job vs driver combine) without rerunning."""
+    signal), ``runs`` = that cluster, ``converged`` = whether a window
+    agreed (a host too noisy to converge is flagged, and its cluster is
+    the 3 fastest runs, so a consumer never mistakes cluster spread for
+    signal), ``all_runs`` = every measured run, lone runs included,
+    ``warmups`` = the two discards, ``health`` = one host record per run
+    (warm-ups first) and ``phases`` = the binning phase breakdown of the
+    last run, so a regression can be localized (spark job vs driver
+    combine) without rerunning."""
     from sed_binning_spark.binning import binning as binning_mod
 
     binning_mod.LAST_RUN_INFO.clear()  # don't attribute stale phases
     health: list = []
     warmups = [round(_run(fn, health), 3) for _ in range(2)]
     series = [_run(fn, health) for _ in range(3)]
-    while len(series) < 20 and sorted(series)[2] > sorted(series)[0] * 1.30:
+    while (cluster := _agreeing_cluster(series)) is None and len(series) < 20:
         series.append(_run(fn, health))
-    cluster = sorted(series)[:3]
+    converged = cluster is not None
+    if not converged:
+        cluster = sorted(series)[:3]
     return {
         "value": round(statistics.median(cluster), 3),
         "runs": [round(t, 3) for t in cluster],
-        "converged": cluster[2] <= cluster[0] * 1.30,
+        "converged": converged,
         "all_runs": [round(t, 3) for t in series],
         "warmups": warmups,
         "health": health,

@@ -17,6 +17,7 @@ API promises.
 
 from __future__ import annotations
 
+import mmap
 import os
 import shutil
 import tempfile
@@ -50,16 +51,11 @@ _IDX_PREFIX = "__bin_idx_"
 _DENSE_ROWS_BUDGET = 250_000_000
 _DENSE_DEDUP_LIMIT = 32
 
-# Below this many potential cells the plain single-socket Arrow collect is
-# faster than a spill round-trip (one extra Spark write job + filesystem).
-_SPILL_MIN_CELLS = 4_000_000
-
-# Below this many INPUT rows the dense-driver path skips the spill: the raw
-# indices are a few MB, so one direct Arrow collect, sorted by the kernel,
-# beats a spill write job, and the kernel's sparse run-length scatter
-# touches only the ~rows occupied cells of the prod(bins) cube (the
-# sf-scale 4-D regime: 1e5 rows x 1e8 cells).
-_DENSE_SMALL_ROWS = 4_000_000
+# At or below this bound on a route's result rows the hand-off (see
+# _hand_off) collects over the single Arrow result socket: a few MB of
+# rows cost less there than one extra Spark write job plus a filesystem
+# round trip. Above it the result spills.
+_SPILL_MIN_ROWS = 4_000_000
 
 # Phase timings (seconds) of the most recent bin_dataframe call, for
 # benchmark/diagnostic reporting: which physical plan ran and where the
@@ -151,7 +147,6 @@ def bin_dataframe(
     partition_column: str = "file_id",
     partition_values: Sequence[int] | None = None,
     jitter_seed: int | None = None,
-    combine: str = "auto",
     max_dense_cells: int = 200_000_000,
 ) -> Cube:
     """N-dimensional histogram of the dataframe -> dense float32 Cube.
@@ -160,6 +155,24 @@ def bin_dataframe(
     one groupBy aggregation instead of a hand-scheduled partition loop. The
     reference's hist_mode/mode/n_cores/pbar execution knobs are obsolete
     (Catalyst owns physical execution) and intentionally absent.
+
+    A cheap row estimate (:func:`_choose_combine`) picks one of two routes:
+
+    - shuffle: groupBy(flat index).count(), then the occupied cells reach
+      the driver and are scattered into the cube (the 100 TB plan: driver
+      traffic bounded by prod(bins) regardless of row count). Taken when
+      no cheap estimate exists, and always with ``return_partitions``;
+    - driver: no shuffle, no aggregation. Executors hand the raw flat
+      indices to the driver, where each part is sorted on a driver thread
+      and one threaded cell-range kernel histograms the sorted slices —
+      the reference's dense kernel + tree-sum shape
+      (sed/binning/binning.py:374-407, sed/binning/numba_bin.py:16-71),
+      and the right plan in the dense regime (occupied ~ rows), where a
+      shuffle dedups almost nothing.
+
+    Both routes hand their result to the driver through :func:`_hand_off`:
+    over the Arrow socket when the route's bound on result rows is at most
+    ``_SPILL_MIN_ROWS``, as a parallel parquet spill above it.
 
     Args:
         df: event dataframe.
@@ -182,21 +195,6 @@ def bin_dataframe(
             column-pruned and would re-decode every file once more.
         jitter_seed: seed for reproducible jitter (the reference is unseeded;
             tests pin this).
-        combine: physical strategy for the final histogram:
-            ``"shuffle"`` — groupBy(flat index).count() + Arrow collect of
-            occupied cells (the 100 TB plan: driver traffic bounded by
-            prod(bins) regardless of row count);
-            ``"driver"`` — no shuffle, no aggregation: executors hand the
-            raw flat indices to the driver as per-partition slices (parallel
-            parquet spill, each file sorted in place by a driver thread; one
-            Arrow collect for small inputs or without shared scratch), where
-            one threaded cell-range kernel histograms the sorted slices —
-            bincounting dense ranges, scattering run-lengths into sparse
-            ones. The reference's dense kernel + tree-sum shape
-            (sed/binning/binning.py:374-407, sed/binning/numba_bin.py:16-71),
-            and the right plan in the dense regime (occupied ~ rows), where a
-            shuffle dedups almost nothing;
-            ``"auto"`` — pick by a cheap row-count estimate (default).
         max_dense_cells: driver budget for the dense cube; a bin spec whose
             prod(bins) exceeds it raises with a pointer to
             :func:`bin_dataframe_sparse` instead of OOM-ing the driver.
@@ -204,8 +202,6 @@ def bin_dataframe(
     Returns:
         Cube with float32 counts and bin-center coordinate axes.
     """
-    if combine not in ("auto", "shuffle", "driver"):
-        raise ValueError(f"combine must be auto|shuffle|driver, got {combine!r}")
     bins, axes, ranges = simplify_binning_arguments(bins, axes, ranges)
 
     df = _apply_prebinning_filters(df, filters)
@@ -281,25 +277,25 @@ def bin_dataframe(
                 "bins or use bin_dataframe_sparse().",
             )
 
-    # Dense-regime short-circuit: per-partition partial histograms collected
-    # without a shuffle, summed on the driver (the reference's own physical
-    # shape). Only for the plain cube — the per-partition-stacked cube (A8)
-    # keeps the groupBy, whose output is tiny by construction.
+    # Dense-regime short-circuit: raw indices histogrammed on the driver
+    # without a shuffle (the reference's own physical shape). Only for the
+    # plain cube — the per-partition-stacked cube (A8) keeps the groupBy,
+    # whose output is tiny by construction.
     LAST_RUN_INFO.clear()
     t0 = time.perf_counter()
     if return_partitions:
         strategy, est_rows = "shuffle", None
     else:
-        strategy, est_rows = _choose_combine(df, combine, n_flat)
+        strategy, est_rows = _choose_combine(df, n_flat)
     LAST_RUN_INFO.update(strategy=strategy, route_s=round(time.perf_counter() - t0, 3))
     if strategy == "driver":
-        full = _dense_driver_histogram(df, flat, n_flat, est_rows=est_rows)
+        full = _dense_driver_histogram(df, flat, n_flat, est_rows)
         return Cube(full.reshape(tuple(shape)), coords, dims)
 
     # Shuffle path: groupBy(flat).count() — partial agg per partition, one
-    # int64 key through the shuffle, Arrow collect of occupied cells +
-    # vectorized scatter. Large cubes route around the single-socket driver
-    # collect via the parallel parquet spill (see _spill_collect_arrow).
+    # int64 key through the shuffle, then each handed-off part of occupied
+    # cells is scattered into the cube on its driver thread (groupBy keys
+    # are unique, so no two parts write the same cell).
     # Out-of-range/NaN rows carry a NULL index; they are dropped as the
     # single NULL GROUP after aggregation rather than with a pre-agg filter,
     # which would duplicate the flat-index expression tree into the filter
@@ -321,18 +317,19 @@ def bin_dataframe(
         .count()
         .where(F.col("__flat").isNotNull() | (F.col("count") < 0))
     )
-    t1 = time.perf_counter()
-    # occupied cells <= min(prod(bins), input rows): when the routing probe
-    # proved the input small, the single-socket collect is cheaper than a
-    # spill round-trip no matter how large the POTENTIAL cell space is
-    use_spill = n_flat >= _SPILL_MIN_CELLS and (
-        est_rows is None or est_rows >= _SPILL_MIN_CELLS)
-    tbl = _spill_collect_arrow(agg_df) if use_spill else agg_df.toArrow()
-    LAST_RUN_INFO["agg_collect_s"] = round(time.perf_counter() - t1, 3)
-
-    flat_idx = tbl.column("__flat").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    counts = tbl.column("count").to_numpy(zero_copy_only=False).astype(np.float32)
     if return_partitions:
+        dims.append("df_part")
+        coords = {**coords, "df_part": parts}
+        full = _madv_hugepage(np.zeros((n_flat, len(parts)), dtype=np.float32))
+    else:
+        full = _madv_hugepage(np.zeros(n_flat, dtype=np.float32))
+
+    def _scatter(tbl) -> None:
+        flat_idx = tbl.column("__flat").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+        counts = tbl.column("count").to_numpy(zero_copy_only=False).astype(np.float32)
+        if not return_partitions:
+            full[flat_idx] = counts
+            return
         part_col = tbl.column("__df_part")
         # NULL partition values reach here regardless of how the partition
         # list was obtained — every event must belong to a partition, or
@@ -354,25 +351,25 @@ def bin_dataframe(
                     f"partition_values is missing {partition_column} values "
                     f"present in the data: {unseen[:10].tolist()}",
                 )
-        dims.append("df_part")
-        coords = {**coords, "df_part": parts}
-        full = _madv_hugepage(np.zeros((n_flat, len(parts)), dtype=np.float32))
         full[flat_idx, np.searchsorted(parts, part_vals)] = counts
-        full = full.reshape(tuple(shape) + (len(parts),))
-    else:
-        full = _madv_hugepage(np.zeros(n_flat, dtype=np.float32))
-        full[flat_idx] = counts
-        full = full.reshape(tuple(shape))
 
-    return Cube(full, coords, dims)
+    # occupied cells <= min(cube cells, input rows): when the routing probe
+    # proved the input small, the socket is cheaper than a spill round trip
+    # no matter how large the POTENTIAL cell space is
+    t1 = time.perf_counter()
+    _hand_off(agg_df, full.size if est_rows is None else min(full.size, est_rows),
+              _scatter)
+    LAST_RUN_INFO["agg_collect_s"] = round(time.perf_counter() - t1, 3)
+    return Cube(full.reshape(tuple(shape) + full.shape[1:]), coords, dims)
 
 
-def _choose_combine(df: DataFrame, combine: str, n_cells: int) -> tuple[str, int | None]:
+def _choose_combine(df: DataFrame, n_cells: int) -> tuple[str, int | None]:
     """Pick the physical combine strategy for the dense cube.
 
     Returns ``(strategy, estimated_rows)``; the row estimate (None when
-    routing could not obtain one cheaply) lets the chosen path pick its
-    collect mechanics (direct Arrow vs parallel spill) without re-counting.
+    routing could not obtain one cheaply, never None on the driver route)
+    bounds the route's result rows for :func:`_hand_off` without
+    re-counting.
 
     The groupBy shuffle earns its cost by deduplication: its collect is
     bounded by prod(bins) no matter how many rows exist, so it is the only
@@ -383,8 +380,6 @@ def _choose_combine(df: DataFrame, combine: str, n_cells: int) -> tuple[str, int
     data movement. The row count used for routing is one cheap job (Catalyst
     prunes every projected column under a count).
     """
-    if combine != "auto":
-        return combine, None
     rows = _cheap_row_estimate(df, n_cells)
     if rows is None:
         return "shuffle", None
@@ -427,11 +422,11 @@ def _cheap_row_estimate(df: DataFrame, n_cells: int = 0) -> int | None:
     outputs only feed projections (apply_dfield's chain) out of it. A count
     plan that keeps a Python node (a filter on a UDF output, a mapInPandas
     loader) would re-run the extraction, so routing returns None there and
-    the caller takes the always-safe shuffle plan (callers who know better
-    can force combine='driver'). Tiny inputs
+    the caller takes the always-safe shuffle plan, whose hand-off is then
+    bounded by the cube's cell count alone. Tiny inputs
     (estimated bytes < _ROUTE_PROBE_MIN_BYTES) also return None — at that
     size the probe job itself dominates — UNLESS the bin spec's cell count
-    is itself large (>= _SPILL_MIN_CELLS): there the routing decision is
+    is itself large (>= _SPILL_MIN_ROWS): there the routing decision is
     worth one memoized pruned-count job, because a small input over a huge
     cell space belongs on the small-rows driver route (sparse scatter)
     rather than a shuffle + dense-cube pass (measured sf0.1 workflow_4d:
@@ -454,7 +449,7 @@ def _cheap_row_estimate(df: DataFrame, n_cells: int = 0) -> int | None:
         # Long.MaxValue when unknown — which safely fails this tiny-gate)
         size = stats.sizeInBytes()
         size = int(size if isinstance(size, int) else size.longValue())
-        if size < _ROUTE_PROBE_MIN_BYTES and n_cells < _SPILL_MIN_CELLS:
+        if size < _ROUTE_PROBE_MIN_BYTES and n_cells < _SPILL_MIN_ROWS:
             return None
         # Python stages only reliably show in the PHYSICAL plan (a
         # pandas_udf expression prints as its function name in the logical
@@ -500,55 +495,74 @@ def _resolve_scratch_dir(spark) -> str | None:
     return shm if os.access(shm, os.W_OK) else tempfile.gettempdir()
 
 
-def _warn_socket_fallback() -> None:
-    warnings.warn(
-        "SPARK_GRAFT_SCRATCH_DIR is not set on a non-local master: "
-        "falling back to the single-socket Arrow collect (~50 MB/s). "
-        "Point SPARK_GRAFT_SCRATCH_DIR at storage shared by driver "
-        "and executors to restore the parallel spill path.",
-        RuntimeWarning,
-        stacklevel=3,
-    )
+def _hand_off(sel: DataFrame, bound: int, take) -> list:
+    """Bring a route's result to the driver, one part at a time: returns
+    ``take(part)`` for every part, in part order.
 
-
-def _spill_collect_arrow(df: DataFrame):
-    """Collect a driver-sized result DataFrame as a pyarrow Table, routing
-    around the single Python result socket when possible.
-
-    PySpark's collect funnels every Arrow batch through one driver socket —
-    measured ~50 MB/s here, which turns a 6e7-row histogram collect into
-    >20 s. Writing the result as UNCOMPRESSED parquet with the executors'
-    parallel writers and reading it back with multithreaded pyarrow moves
+    ``bound`` caps the result's rows. At or below ``_SPILL_MIN_ROWS`` the
+    result comes over PySpark's Arrow result socket and its record batches
+    are the parts. Above it the executors' parallel writers spill it as
+    UNCOMPRESSED parquet (random indices do not compress — zstd: 0.62 s vs
+    0.58 s uncompressed on 4.2e6 rows) and each file is a part. The socket
+    funnels every batch through one driver connection — measured ~50 MB/s
+    here, which turns a 6e7-row collect into >20 s — while the spill moves
     the same bytes at filesystem speed (measured ~400 MB in ~2 s round
-    trip). This is the standard big-result Spark pattern (the job writes to
-    storage; the driver reads back only the summary), so it holds on a real
-    cluster too — provided driver and executors share the scratch
-    filesystem. That is guaranteed in local mode; on a cluster it requires
-    SPARK_GRAFT_SCRATCH_DIR to point at shared storage, so without that we
-    fall back to the plain socket collect.
-    """
-    spark = df.sparkSession
-    scratch = _resolve_scratch_dir(spark)
-    if scratch is None:
-        _warn_socket_fallback()
-        return df.toArrow()
+    trip). That is the standard big-result Spark pattern (the job writes to
+    storage; the driver reads back only the result), so it holds on a real
+    cluster too, provided driver and executors share the scratch directory
+    (:func:`_resolve_scratch_dir`). Without one the socket is the only
+    source, and this warns.
+
+    Each part goes to ``take`` on one of ``_driver_threads()`` threads
+    (numpy and pyarrow release the GIL), which reads a spill file itself,
+    so each file's Arrow table is dropped as soon as ``take`` returns.
+    ``take`` keeps what it needs: the driver route a sorted copy of the
+    part's cells, the shuffle route nothing (it scatters into the cube)."""
+    scratch = None
+    if bound > _SPILL_MIN_ROWS:
+        scratch = _resolve_scratch_dir(sel.sparkSession)
+        if scratch is None:
+            warnings.warn(
+                "SPARK_GRAFT_SCRATCH_DIR is not set on a non-local master: "
+                "falling back to the single-socket Arrow collect (~50 MB/s). "
+                "Point SPARK_GRAFT_SCRATCH_DIR at storage shared by driver "
+                "and executors to restore the parallel spill path.",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     import pyarrow.parquet as pq
 
-    path = os.path.join(scratch, f"sed-binning-spill-{uuid.uuid4().hex}")
-    try:
-        (
-            df.write.mode("overwrite")
-            .option("compression", "uncompressed")
-            .option("parquet.enable.dictionary", "false")
-            .parquet(path)
-        )
-        return pq.read_table(path)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    t0 = time.perf_counter()
+    with ThreadPoolExecutor(_driver_threads()) as ex:
+        if scratch is None:
+            batches = sel.toArrow().to_batches()
+            LAST_RUN_INFO["small_collect_s"] = round(time.perf_counter() - t0, 3)
+            return list(ex.map(take, batches))
+        path = os.path.join(scratch, f"sed-binning-spill-{uuid.uuid4().hex}")
+        try:
+            (
+                sel.write.mode("overwrite")
+                .option("compression", "uncompressed")
+                .option("parquet.enable.dictionary", "false")
+                .parquet(path)
+            )
+            t1 = time.perf_counter()
+            files = sorted(
+                os.path.join(path, f) for f in os.listdir(path)
+                if f.endswith(".parquet")
+            )
+            parts = list(ex.map(
+                lambda f: take(pq.ParquetFile(f).read(use_threads=False)), files))
+        finally:
+            shutil.rmtree(path, ignore_errors=True)
+    LAST_RUN_INFO.update(
+        spill_write_s=round(t1 - t0, 3),
+        spill_collect_s=round(time.perf_counter() - t0, 3),
+    )
+    return parts
 
 
-def _dense_driver_histogram(df: DataFrame, flat, n_cells: int,
-                            est_rows: int | None = None) -> np.ndarray:
+def _dense_driver_histogram(df: DataFrame, flat, n_cells: int, est_rows: int) -> np.ndarray:
     """Dense-regime histogram: raw indices + one driver kernel.
 
     In the dense regime a groupBy dedups almost nothing, so the cheapest
@@ -563,14 +577,12 @@ def _dense_driver_histogram(df: DataFrame, flat, n_cells: int,
     Arrow-socket floor; the spill never crosses it). _choose_combine bounds
     rows (<= 2.5e8 -> <= 1 GB of int32 indices) before selecting this path.
 
-    The slices come from one of two sources. With a shared scratch
-    directory and more than ``_DENSE_SMALL_ROWS`` rows (or no estimate),
-    the executors' parallel writers spill and the driver reads and sorts
-    one slice per file (:func:`_read_spill`). Otherwise they are the
-    unsorted chunks of one ``toArrow()`` collect, which the kernel sorts —
-    small inputs, and inputs without a shared scratch (which warns). A
-    driver-side ``ndarray.sort`` of 4.2e6 int32 indices takes 0.04 s; a
-    Spark ``sortWithinPartitions`` of them took 0.35 s (4-core host).
+    ``est_rows`` is the routing estimate, which bounds the hand-off
+    (:func:`_hand_off`). Each part it delivers is copied and sorted on its
+    driver thread, so the kernel gets sorted slices and the driver holds
+    one copy of the indices. A driver-side ``ndarray.sort`` of 4.2e6 int32
+    indices takes 0.04 s; a Spark ``sortWithinPartitions`` of them took
+    0.35 s (4-core host).
 
     NULL (out-of-range/NaN) indices are mapped to a sentinel cell
     ``n_cells`` via one coalesce node, which the kernel never counts: a
@@ -583,19 +595,7 @@ def _dense_driver_histogram(df: DataFrame, flat, n_cells: int,
     """
     cell_type = "int" if n_cells + 1 <= np.iinfo(np.int32).max else "bigint"
     sel = df.select(F.coalesce(flat, F.lit(n_cells)).cast(cell_type).alias("cell"))
-    spill = est_rows is None or est_rows > _DENSE_SMALL_ROWS
-    scratch = _resolve_scratch_dir(df.sparkSession) if spill else None
-    if spill and scratch is None:
-        _warn_socket_fallback()
-
-    t0 = time.perf_counter()
-    if scratch is not None:
-        dtype = np.int32 if cell_type == "int" else np.int64
-        slices = _read_spill(sel, scratch, dtype)
-    else:
-        col = sel.toArrow().column("cell")
-        slices = [c.to_numpy(zero_copy_only=False) for c in col.chunks]
-        LAST_RUN_INFO["small_collect_s"] = round(time.perf_counter() - t0, 3)
+    slices = _hand_off(sel, est_rows, _sorted_cells)
     t1 = time.perf_counter()
     hist = _sorted_slices_histogram(slices, n_cells)
     LAST_RUN_INFO["bincount_s"] = round(time.perf_counter() - t1, 3)
@@ -633,55 +633,24 @@ def _madv_hugepage(arr: np.ndarray) -> np.ndarray:
     return arr
 
 
-def _read_spill(sel: DataFrame, scratch: str, dtype) -> list[np.ndarray]:
-    """Spill source of the dense-driver kernel: one sorted slice per file.
+def _sorted_cells(part) -> np.ndarray:
+    """The driver route's take: a sorted private copy of a part's cells
+    (``ndarray.sort`` releases the GIL).
 
-    Executors write their unsorted cell indices as UNCOMPRESSED parquet, as
-    :func:`_spill_collect_arrow` does: random indices do not compress
-    (zstd: 0.62 s vs 0.58 s uncompressed on 4.2e6 rows). Each driver thread
-    copies one file into its own segment of this call's values buffer and
-    sorts that segment in place (``ndarray.sort`` releases the GIL), so the
-    sort makes no copy and adds no memory; the returned slices are views of
-    the buffer."""
-    import pyarrow.parquet as pq
-
-    t0 = time.perf_counter()
-    path = os.path.join(scratch, f"sed-binning-spill-{uuid.uuid4().hex}")
-    try:
-        (
-            sel.write.mode("overwrite")
-            .option("compression", "uncompressed")
-            .option("parquet.enable.dictionary", "false")
-            .parquet(path)
-        )
-        t1 = time.perf_counter()
-        files = sorted(
-            os.path.join(path, f) for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-        metas = [pq.ParquetFile(f) for f in files]
-        offs = np.zeros(len(files) + 1, dtype=np.int64)
-        np.cumsum([m.metadata.num_rows for m in metas], out=offs[1:])
-        buf = _madv_hugepage(np.empty(int(offs[-1]), dtype=dtype))
-        slices = [buf[offs[i]:offs[i + 1]] for i in range(len(files))]
-
-        def _load(i: int) -> None:
-            o = 0
-            for ch in metas[i].read(use_threads=False).column("cell").chunks:
-                a = ch.to_numpy(zero_copy_only=False)
-                slices[i][o:o + a.size] = a
-                o += a.size
-            slices[i].sort()
-
-        with ThreadPoolExecutor(_driver_threads()) as ex:
-            list(ex.map(_load, range(len(files))))
-        LAST_RUN_INFO.update(
-            spill_write_s=round(t1 - t0, 3),
-            spill_collect_s=round(time.perf_counter() - t0, 3),
-        )
-        return slices
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    The copy gets its own anonymous mapping, unmapped when the slice is
+    freed. Allocated from the driver thread's malloc arena instead, the
+    freed copies stayed resident: perfbench sed_workflow's driver peak RSS
+    rose by 11-16 MB, about one copy of bin_4d's 4.2e6 indices. A spill
+    file's table is freed before the sort, as the hand-off passes this
+    function its only reference."""
+    cells = part.column("cell").to_numpy(zero_copy_only=False)
+    if not cells.size:
+        return cells
+    out = np.frombuffer(mmap.mmap(-1, cells.nbytes), dtype=cells.dtype)
+    out[:] = cells
+    del part, cells
+    out.sort()
+    return out
 
 
 def _driver_threads() -> int:
@@ -702,8 +671,8 @@ def _sorted_slices_histogram(slices: Sequence[np.ndarray], n_cells: int) -> np.n
     """Float32 histogram over cells ``[0, n_cells)`` of sorted index slices:
     the one dense-driver kernel.
 
-    Each slice holds cell indices, sorted ascending when it comes from the
-    spill (:func:`_read_spill`); values at the ``n_cells`` sentinel
+    Each slice holds cell indices, sorted ascending by the hand-off
+    (:func:`_sorted_cells`); values at the ``n_cells`` sentinel
     (NULL/out-of-range rows) sort last and are never counted. Sortedness is verified with one
     sequential pass per slice, and a slice that is not sorted is sorted
     here — never counted wrong, since the ranges below binary-search it.

@@ -363,7 +363,7 @@ def test_routing_probe_skips_tiny_inputs(spark, tmp_path):
     the bin spec is also small: a small parquet scan (far below
     _ROUTE_PROBE_MIN_BYTES) returns None from the cheap estimate, so
     _choose_combine takes the shuffle plan without touching the data.
-    When the cell space is HUGE (>= _SPILL_MIN_CELLS), the r15 router pays
+    When the cell space is HUGE (>= _SPILL_MIN_ROWS), the r15 router pays
     exactly one memoized pruned-count job instead, because a tiny input
     over a huge cell space belongs on the small-rows driver route."""
     from sed_binning_spark.binning import binning as binning_mod
@@ -384,12 +384,12 @@ def test_routing_probe_skips_tiny_inputs(spark, tmp_path):
     try:
         # small cell space: no probe job
         assert binning_mod._cheap_row_estimate(df) is None
-        assert binning_mod._choose_combine(df, "auto", 10**4) == ("shuffle", None)
+        assert binning_mod._choose_combine(df, 10**4) == ("shuffle", None)
         assert calls == []
         # huge cell space: one probe count, memoized across repeats
         binning_mod._ROUTE_COUNT_CACHE.clear()
-        assert binning_mod._choose_combine(df, "auto", 10**8) == ("driver", 1000)
-        assert binning_mod._choose_combine(df, "auto", 10**8) == ("driver", 1000)
+        assert binning_mod._choose_combine(df, 10**8) == ("driver", 1000)
+        assert binning_mod._choose_combine(df, 10**8) == ("driver", 1000)
         assert calls == [1]
     finally:
         cls.count = orig
@@ -501,26 +501,45 @@ def test_routing_counts_a_pruned_python_stage(spark):
 
         leaf = spark.range(1000).mapInPandas(ident, "id long")
         assert binning_mod._cheap_row_estimate(leaf, 10**8) is None
-        assert binning_mod._choose_combine(leaf, "auto", 10**8) == ("shuffle", None)
+        assert binning_mod._choose_combine(leaf, 10**8) == ("shuffle", None)
     finally:
         binning_mod._ROUTE_COUNT_CACHE.clear()
         base.unpersist()
 
 
-def test_spill_fallback_warns_on_cluster_without_scratch(spark, monkeypatch):
-    """On a non-local master with no SPARK_GRAFT_SCRATCH_DIR the spill
-    collect silently degrades to the single-socket Arrow collect — it must
-    say so, naming the env var."""
-    import pyspark
+def _route(monkeypatch, strategy, rows=None):
+    """Make routing pick ``strategy`` with row estimate ``rows`` for every
+    call until the test ends, as _choose_combine does for an input it can
+    (driver) or cannot (shuffle) count."""
+    from sed_binning_spark.binning import binning as binning_mod
 
-    from sed_binning_spark.binning.binning import _spill_collect_arrow
+    monkeypatch.setattr(binning_mod, "_choose_combine",
+                        lambda df, n_cells: (strategy, rows))
 
+
+def _bin_routed(df, strategy, rows=None, **kw):
+    """bin_dataframe with routing forced for this one call."""
+    with pytest.MonkeyPatch.context() as mp:
+        _route(mp, strategy, rows)
+        return bin_dataframe(df, **kw)
+
+
+def _fake_cluster_without_scratch(spark, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
     monkeypatch.setattr(spark.sparkContext, "master", "spark://fake-cluster:7077")
+
+
+def test_spill_fallback_warns_on_cluster_without_scratch(spark, monkeypatch):
+    """On a non-local master with no SPARK_GRAFT_SCRATCH_DIR a hand-off
+    bounded above the spill threshold silently degrades to the
+    single-socket Arrow collect — it must say so, naming the env var."""
+    from sed_binning_spark.binning.binning import _SPILL_MIN_ROWS, _hand_off
+
+    _fake_cluster_without_scratch(spark, monkeypatch)
     df = spark.range(10).selectExpr("CAST(id AS INT) AS cell")
     with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_SCRATCH_DIR"):
-        tbl = _spill_collect_arrow(df)
-    assert tbl.num_rows == 10
+        rows = _hand_off(df, _SPILL_MIN_ROWS + 1, lambda part: part.num_rows)
+    assert sum(rows) == 10
 
 
 def test_small_rows_driver_route_matches_shuffle(spark):
@@ -542,7 +561,7 @@ def test_small_rows_driver_route_matches_shuffle(spark):
     df = spark.createDataFrame(pdf).repartition(5)
     kw = dict(bins=[500, 400], axes=["a", "b"],  # 200k cells >> 20k rows
               ranges=[(0.0, 20.0), (0.0, 6.0)])
-    shuffle = bin_dataframe(df, combine="shuffle", **kw)
+    shuffle = _bin_routed(df, "shuffle", **kw)
 
     # drive the small route directly through the public entry by giving the
     # router an exact estimate (cached + materialized input)
@@ -550,9 +569,9 @@ def test_small_rows_driver_route_matches_shuffle(spark):
     try:
         cached.count()
         binning_mod.LAST_RUN_INFO.clear()
-        driver = bin_dataframe(cached, combine="auto", **kw)
-        # the route must actually have taken the small-rows collect
-        # (est_rows 20003 <= _DENSE_SMALL_ROWS and rows < cells * 32)
+        driver = bin_dataframe(cached, **kw)
+        # the route must actually have taken the socket collect
+        # (est_rows 20003 <= _SPILL_MIN_ROWS and rows < cells * 32)
         assert binning_mod.LAST_RUN_INFO.get("strategy") == "driver"
         assert "small_collect_s" in binning_mod.LAST_RUN_INFO
         np.testing.assert_array_equal(shuffle.data, driver.data)
@@ -561,11 +580,13 @@ def test_small_rows_driver_route_matches_shuffle(spark):
         cached.unpersist()
 
 
-def test_driver_combine_matches_shuffle_combine(spark):
+def test_driver_combine_matches_shuffle_combine(spark, monkeypatch):
     """The driver-route spill histogram must produce the same cube as the
     shuffle plan, including NULL/out-of-range rejects (the sentinel cell)
     and values spread over every thread range."""
     import pandas as pd
+
+    from sed_binning_spark.binning import binning as binning_mod
 
     rng = np.random.default_rng(17)
     pdf = pd.DataFrame({
@@ -575,8 +596,10 @@ def test_driver_combine_matches_shuffle_combine(spark):
     df = spark.createDataFrame(pdf).repartition(7)
     kw = dict(bins=[40, 13], axes=["a", "b"],
               ranges=[(0.0, 20.0), (0.0, 6.0)])
-    shuffle = bin_dataframe(df, combine="shuffle", **kw)
-    driver = bin_dataframe(df, combine="driver", **kw)
+    shuffle = _bin_routed(df, "shuffle", **kw)
+    monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 1000)
+    driver = _bin_routed(df, "driver", 50_003, **kw)
+    assert "spill_write_s" in binning_mod.LAST_RUN_INFO
     np.testing.assert_array_equal(shuffle.data, driver.data)
     assert float(driver.data.sum()) > 0
 
@@ -588,6 +611,8 @@ def test_driver_combine_without_scratch_matches_shuffle(spark, monkeypatch):
     out-of-range rejects."""
     import pandas as pd
 
+    from sed_binning_spark.binning import binning as binning_mod
+
     rng = np.random.default_rng(29)
     pdf = pd.DataFrame({
         "a": np.concatenate([rng.uniform(-5, 25, 30_000), [np.nan, -100.0, 1e9]]),
@@ -596,21 +621,21 @@ def test_driver_combine_without_scratch_matches_shuffle(spark, monkeypatch):
     df = spark.createDataFrame(pdf).repartition(5)
     kw = dict(bins=[40, 13], axes=["a", "b"],
               ranges=[(0.0, 20.0), (0.0, 6.0)])
-    shuffle = bin_dataframe(df, combine="shuffle", **kw)
+    shuffle = _bin_routed(df, "shuffle", **kw)
 
-    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
-    monkeypatch.setattr(spark.sparkContext, "master", "spark://fake-cluster:7077")
+    monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 1000)
+    _fake_cluster_without_scratch(spark, monkeypatch)
     with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_SCRATCH_DIR"):
-        driver = bin_dataframe(df, combine="driver", **kw)
+        driver = _bin_routed(df, "driver", 30_003, **kw)
     np.testing.assert_array_equal(shuffle.data, driver.data)
     assert float(driver.data.sum()) > 0
 
 
 def test_spill_route_sorts_slices_on_the_driver(spark, monkeypatch):
     """The spill route runs no Spark sort: the spilled select's physical
-    plan holds no Sort node, and every slice _read_spill returns is already
-    sorted, so the kernel never takes its fallback sort. The cube equals
-    the shuffle plan's."""
+    plan holds no Sort node, and every slice that reaches the kernel is
+    already sorted, so the kernel never takes its fallback sort. The cube
+    equals the shuffle plan's."""
     from pyspark.sql import functions as F
 
     from sed_binning_spark.binning import binning as binning_mod
@@ -618,36 +643,45 @@ def test_spill_route_sorts_slices_on_the_driver(spark, monkeypatch):
     df = spark.range(300_000, numPartitions=5).select(
         (F.rand(51) * 24 - 2).alias("a"), (F.rand(52) * 7).alias("b"))
     kw = dict(bins=[90, 70], axes=["a", "b"], ranges=[(0.0, 20.0), (0.0, 6.0)])
-    plans, returned = [], []
-    read_spill = binning_mod._read_spill
+    want = _bin_routed(df, "shuffle", **kw).data
+    plans, kernel_input = [], []
+    hand_off = binning_mod._hand_off
+    kernel = binning_mod._sorted_slices_histogram
 
-    def spying_read(sel, scratch, dtype):
+    def spying_hand_off(sel, bound, take):
         plans.append(sel._jdf.queryExecution().executedPlan().toString())
-        returned.extend(read_spill(sel, scratch, dtype))
-        return returned
+        return hand_off(sel, bound, take)
 
-    monkeypatch.setattr(binning_mod, "_read_spill", spying_read)
-    driver = bin_dataframe(df, combine="driver", **kw)
+    def spying_kernel(slices, n_cells):
+        kernel_input.extend(slices)
+        return kernel(slices, n_cells)
+
+    monkeypatch.setattr(binning_mod, "_hand_off", spying_hand_off)
+    monkeypatch.setattr(binning_mod, "_sorted_slices_histogram", spying_kernel)
+    monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 1000)
+    driver = _bin_routed(df, "driver", 300_000, **kw)
+    assert "spill_write_s" in binning_mod.LAST_RUN_INFO
     assert len(plans) == 1 and "Sort [" not in plans[0], plans
-    assert sum(s.size for s in returned) == 300_000 and len(returned) > 1
-    assert all(bool(np.all(s[:-1] <= s[1:])) for s in returned)
-    np.testing.assert_array_equal(driver.data, bin_dataframe(df, combine="shuffle", **kw).data)
+    assert sum(s.size for s in kernel_input) == 300_000 and len(kernel_input) > 1
+    assert all(bool(np.all(s[:-1] <= s[1:])) for s in kernel_input)
+    np.testing.assert_array_equal(driver.data, want)
 
 
 def test_concurrent_driver_combines_match_serial(spark, monkeypatch):
     """Two threads binning their own frames on the driver route at the same
     time must each get the cube a serial call gives: the dense path's
-    retained buffers belong to one call at a time. A barrier at the first
-    spill-file open of each call holds both until their spill writes are
-    done, so the read-back and histogram phases overlap."""
+    buffers belong to one call at a time. A barrier at each call's listing
+    of its spill directory holds both until their spill writes are done,
+    so the read-back and histogram phases overlap."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from sed_binning_spark.binning import binning as binning_mod
+
     kw = dict(bins=[90, 70], axes=["a", "b"],
-              ranges=[(0.0, 20.0), (0.0, 6.0)], combine="driver")
+              ranges=[(0.0, 20.0), (0.0, 6.0)])
     frames = [
         spark.range(n, numPartitions=6)
         .select((F.rand(seed) * 24 - 2).alias("a"),
@@ -655,22 +689,26 @@ def test_concurrent_driver_combines_match_serial(spark, monkeypatch):
         .cache()
         for n, seed in ((500_000, 41), (400_000, 43))
     ]
+    _route(monkeypatch, "driver", 500_000)
+    monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 1000)
     try:
         for f in frames:
             f.count()
         serial = [bin_dataframe(f, **kw).data for f in frames]
         assert not np.array_equal(serial[0], serial[1])
 
-        orig = pq.ParquetFile
+        orig = binning_mod.os.listdir
         held = threading.local()
+        listed = []
 
-        def opening(*args, **kwargs):
-            if not getattr(held, "done", False):
+        def listing(path):
+            if "sed-binning-spill-" in str(path) and not getattr(held, "done", False):
                 held.done = True
+                listed.append(path)
                 barrier.wait()
-            return orig(*args, **kwargs)
+            return orig(path)
 
-        monkeypatch.setattr(pq, "ParquetFile", opening)
+        monkeypatch.setattr(binning_mod.os, "listdir", listing)
         for _ in range(2):
             barrier = threading.Barrier(2, timeout=120)
             with ThreadPoolExecutor(2) as ex:
@@ -678,9 +716,77 @@ def test_concurrent_driver_combines_match_serial(spark, monkeypatch):
                 cubes = [fut.result().data for fut in futs]
             for got, want in zip(cubes, serial):
                 np.testing.assert_array_equal(got, want)
+        assert len(listed) == 4
     finally:
         for f in frames:
             f.unpersist()
+
+
+def _routed_events(spark):
+    """Events over three files with NaN and out-of-range rows on both
+    axes, and their np.histogramdd oracle per file (int-bins semantics)."""
+    import pandas as pd
+
+    rng = np.random.default_rng(61)
+    n = 6_000
+    a = rng.uniform(-3, 23, n)
+    b = rng.uniform(-1, 7, n)
+    a[::97] = np.nan
+    b[::89] = np.nan
+    b[::83] = 1e9
+    file_id = rng.integers(0, 3, n)
+    pdf = pd.DataFrame({"a": a, "b": b, "file_id": file_id.astype("int64")})
+    kw = dict(bins=[30, 17], axes=["a", "b"], ranges=[(0.0, 20.0), (0.0, 6.0)])
+    per_file = np.stack([
+        _np_hist(pdf[(pdf.file_id == f) & pdf.a.notna() & pdf.b.notna()],
+                 kw["axes"], kw["bins"], kw["ranges"])
+        for f in range(3)
+    ], axis=-1)
+    return spark.createDataFrame(pdf).repartition(4), kw, per_file
+
+
+@pytest.mark.parametrize("source", ["socket", "spill", "no_scratch"])
+@pytest.mark.parametrize("route", ["driver", "shuffle", "shuffle_partitions"])
+def test_every_route_matches_numpy_from_every_source(spark, monkeypatch, route, source):
+    """Each route gives np.histogramdd's cube from each hand-off source:
+    the Arrow socket, the parquet spill, and the socket a cluster without
+    shared scratch falls back to (with its warning). A low spill
+    threshold sends these small frames to every source."""
+    import warnings
+
+    from sed_binning_spark.binning import binning as binning_mod
+
+    df, kw, per_file = _routed_events(spark)
+    if route == "driver":
+        _route(monkeypatch, "driver", df.count())
+    elif route == "shuffle":
+        _route(monkeypatch, "shuffle")
+    else:
+        kw["return_partitions"] = True
+    if source != "socket":
+        monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 10)
+    if source == "no_scratch":
+        _fake_cluster_without_scratch(spark, monkeypatch)
+        with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_SCRATCH_DIR"):
+            cube = bin_dataframe(df, **kw)
+    else:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            cube = bin_dataframe(df, **kw)
+        assert not [w for w in caught if "SPARK_GRAFT_SCRATCH_DIR" in str(w.message)]
+
+    info = binning_mod.LAST_RUN_INFO
+    assert info["strategy"] == route.split("_")[0]
+    assert ("spill_write_s" in info) == (source == "spill")
+    assert ("small_collect_s" in info) == (source != "spill")
+    if route == "shuffle_partitions":
+        assert cube.dims[-1] == "df_part"
+        np.testing.assert_array_equal(cube.coords["df_part"], [0, 1, 2])
+        want = per_file
+    else:
+        want = per_file.sum(axis=-1)
+    np.testing.assert_array_equal(cube.data, want.astype(np.float32))
+    assert 0 < cube.data.sum() < df.count()
 
 
 @pytest.mark.parametrize("kind", ["uniform", "log", "duplicated", "two", "1e4"])
