@@ -224,7 +224,8 @@ def _q_sink_roundtrip(spark, sf):
         ).astype(np.float32)
         if not np.array_equal(tif.reshape(want_tif.shape), want_tif):
             raise ValueError("TIFF round-trip diverged from the HDF5 round-trip")
-        nx = H5File(paths[2]).read("/entry/data/data")
+        with H5File(paths[2]) as f:
+            nx = f.read("/entry/data/data")
         if not np.array_equal(np.asarray(nx), back.data):
             raise ValueError("NeXus round-trip diverged from the HDF5 round-trip")
     finally:

@@ -313,11 +313,11 @@ def extract_bias_h5(files: Sequence[str], bias_key: str) -> np.ndarray:
 
     vals = []
     for file in files:
-        fh = H5File(file)
-        if bias_key.startswith("@"):
-            vals.append(round(float(fh.attrs("/")[bias_key[1:]]), 2))
-        else:
-            vals.append(round(float(fh.read(bias_key).ravel()[0]), 2))
+        with H5File(file) as fh:
+            if bias_key.startswith("@"):
+                vals.append(round(float(fh.attrs("/")[bias_key[1:]]), 2))
+            else:
+                vals.append(round(float(fh.read(bias_key).ravel()[0]), 2))
     return np.asarray(vals)
 
 

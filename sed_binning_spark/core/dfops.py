@@ -254,7 +254,9 @@ def add_time_stamped_data(
     """Interpolate an external (timestamp, value) series onto each event:
     ``dest = np.interp(df[ts], time_stamps, data)`` including edge clamping
     (sed/core/dfops.py:123-162). The series is small — broadcast into an
-    Arrow-batched pandas_udf."""
+    Arrow-batched pandas_udf. A NULL or NaN timestamp gives NULL for every
+    series length (``np.interp`` alone would give a one-point series'
+    value)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -266,7 +268,10 @@ def add_time_stamped_data(
         raise ValueError("time_stamps and data need to be 1-D arrays of equal length")
 
     def _interp_fn(ts):
-        return pd.Series(np.interp(ts.to_numpy(dtype=float), xs, ys))
+        t = ts.to_numpy(dtype=float)
+        out = np.interp(t, xs, ys)
+        out[np.isnan(t)] = np.nan  # NaN crosses back into Spark as NULL
+        return pd.Series(out)
 
     # explicit hints: `from __future__ import annotations` stringizes inline
     # ones, which pandas_udf's eval-type inference cannot resolve

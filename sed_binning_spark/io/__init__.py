@@ -5,8 +5,9 @@ cells); the 100 TB of events never leaves Spark.
 
 - :mod:`~sed_binning_spark.io.tiff` — K1: ImageJ-compatible float32 TIFF
   stacks (pure-NumPy baseline codec; no tifffile dependency)
-- :mod:`~sed_binning_spark.io.hdf5` — K2: HDF5 sink/source when h5py is
-  installed, plus an always-available NPZ twin with the same contract
+- :mod:`~sed_binning_spark.io.hdf5` — K2: HDF5 sink/source on the
+  engine's built-in HDF5 writer and reader, plus an NPZ twin with the
+  same contract
 - :mod:`~sed_binning_spark.io.nexus` — K3: NXmpes via pynxtools (gated)
 - :func:`save` — K4: extension dispatch (.tiff/.h5/.npz/.nxs)
 """

@@ -1,12 +1,12 @@
 """K2: HDF5 cube sink/source (reference: sed/io/hdf5.py:84-190), plus an
 always-available NPZ twin.
 
-The .h5 path needs no optional dependency: when h5py is importable it is
-used (battle-tested container output); otherwise the engine's own
-pure-Python HDF5 writer/reader (:mod:`sed_binning_spark.io.hdf5_write` /
-``hdf5_read``) produce and consume the same classic-format file layout.
-The NPZ pair implements the SAME logical contract — binned data + per-axis
-coordinate arrays + recursive metadata — as a non-HDF5 alternative.
+The .h5 path needs no optional dependency: the engine's own pure-Python
+HDF5 writer/reader (:mod:`sed_binning_spark.io.hdf5_write` /
+``hdf5_read``) produce and consume the reference's classic-format file
+layout. The NPZ pair implements the SAME logical contract — binned data +
+per-axis coordinate arrays + recursive metadata — as a non-HDF5
+alternative.
 """
 
 from __future__ import annotations
@@ -18,59 +18,43 @@ import numpy as np
 
 from sed_binning_spark.cube import Cube
 
-try:  # gated optional dependency
-    import h5py  # type: ignore
-except ImportError:  # pragma: no cover - environment-dependent
-    h5py = None
-
 
 def to_h5(data: Cube, faddr: str | Path, mode: str = "w") -> None:
     """Cube + axes + recursive metadata dict → HDF5 (to_h5,
     sed/io/hdf5.py:84-130): datasets ``binned/BinnedData``, one
-    ``binned/axes/ax{N}`` per axis, metadata group mirroring the dict."""
-    if h5py is None:
-        from sed_binning_spark.io.hdf5_write import H5Writer
+    ``binned/axes/ax{N}`` per axis, metadata group mirroring the dict.
+    The file is written whole: ``mode`` "a" works only on a new file."""
+    from sed_binning_spark.io.hdf5_write import H5Writer
 
-        if mode not in ("w", "x", "w-", "a"):
-            raise ValueError(
-                f"mode {mode!r} is not a write mode; the built-in writer "
-                "supports w / x / w- (and a on a new file)",
-            )
-        if mode in ("x", "w-") and Path(faddr).exists():
-            raise FileExistsError(f"{faddr} exists (mode={mode!r})")
-        if mode == "a" and Path(faddr).exists():
-            raise NotImplementedError(
-                "append mode needs h5py; the built-in writer only creates "
-                "files whole (mode 'w')",
-            )
-        w = H5Writer()
-        w.add_dataset("/binned/BinnedData", data.data)
-        w.add_attr("/binned/BinnedData", "typ", "float32")
-        for i, dim in enumerate(data.dims):
-            w.add_dataset(f"/binned/axes/ax{i}", np.asarray(data.coords[dim]))
-            w.add_attr(f"/binned/axes/ax{i}", "name", dim)
-        if data.attrs:
-            _write_meta_tree(w, "/metadata", data.attrs)
-        w.write(str(faddr))
-        return
-    with h5py.File(faddr, mode) as fh:
-        grp = fh.create_group("binned")
-        ds = grp.create_dataset("BinnedData", data=data.data)
-        axes_grp = grp.create_group("axes")
-        for i, dim in enumerate(data.dims):
-            ax = axes_grp.create_dataset(f"ax{i}", data=data.coords[dim])
-            ax.attrs["name"] = dim
-        ds.attrs["typ"] = "float32"
-        if data.attrs:
-            _write_meta_group(fh.create_group("metadata"), data.attrs)
+    if mode not in ("w", "x", "w-", "a"):
+        raise ValueError(
+            f"mode {mode!r} is not a write mode; the built-in writer "
+            "supports w / x / w- (and a on a new file)",
+        )
+    if mode in ("x", "w-") and Path(faddr).exists():
+        raise FileExistsError(f"{faddr} exists (mode={mode!r})")
+    if mode == "a" and Path(faddr).exists():
+        raise NotImplementedError(
+            "append mode is not supported; the built-in writer only "
+            "creates files whole (mode 'w')",
+        )
+    w = H5Writer()
+    w.add_dataset("/binned/BinnedData", data.data)
+    w.add_attr("/binned/BinnedData", "typ", "float32")
+    for i, dim in enumerate(data.dims):
+        w.add_dataset(f"/binned/axes/ax{i}", np.asarray(data.coords[dim]))
+        w.add_attr(f"/binned/axes/ax{i}", "name", dim)
+    if data.attrs:
+        _write_meta_tree(w, "/metadata", data.attrs)
+    w.write(str(faddr))
 
 
 def load_h5(faddr: str | Path, mode: str = "r") -> Cube:
-    """HDF5 → Cube (load_h5, sed/io/hdf5.py:133-190)."""
-    if h5py is None:
-        from sed_binning_spark.io.hdf5_read import H5File
+    """HDF5 → Cube (load_h5, sed/io/hdf5.py:133-190). ``mode`` is kept
+    for the reference's signature; the file is only read."""
+    from sed_binning_spark.io.hdf5_read import H5File
 
-        fh = H5File(str(faddr))
+    with H5File(str(faddr)) as fh:
         paths = set(fh.visit())
         data = fh.read("/binned/BinnedData")
         dims, coords = [], {}
@@ -97,26 +81,11 @@ def load_h5(faddr: str | Path, mode: str = "r") -> Cube:
                     node[leaf] = decoded[0] if val.ndim == 0 else decoded
                 else:
                     node[leaf] = val.item() if val.ndim == 0 else val
-        return Cube(data, coords, dims, attrs)
-    with h5py.File(faddr, mode) as fh:
-        data = fh["binned"]["BinnedData"][()]
-        dims = []
-        coords = {}
-        axes_grp = fh["binned"]["axes"]
-        for i in range(data.ndim):
-            ax = axes_grp[f"ax{i}"]
-            name = ax.attrs.get("name", f"ax{i}")
-            if isinstance(name, bytes):
-                name = name.decode()
-            dims.append(name)
-            coords[name] = ax[()]
-        attrs = _read_meta_group(fh["metadata"]) if "metadata" in fh else {}
     return Cube(data, coords, dims, attrs)
 
 
 def _write_meta_tree(writer, prefix: str, meta: dict) -> None:
-    """Recursive metadata dict -> nested groups of scalar/array datasets
-    (pure-writer twin of :func:`_write_meta_group`)."""
+    """Recursive metadata dict -> nested groups of scalar/array datasets."""
     for k, v in meta.items():
         if isinstance(v, dict):
             _write_meta_tree(writer, f"{prefix}/{k}", v)
@@ -125,36 +94,6 @@ def _write_meta_tree(writer, prefix: str, meta: dict) -> None:
                 writer.add_dataset(f"{prefix}/{k}", v)
             except (ValueError, TypeError):
                 writer.add_dataset(f"{prefix}/{k}", str(v))
-
-
-def _write_meta_group(grp, meta: dict) -> None:
-    for k, v in meta.items():
-        if isinstance(v, dict):
-            _write_meta_group(grp.create_group(str(k)), v)
-        else:
-            try:
-                grp.create_dataset(str(k), data=v)
-            except TypeError:
-                grp.create_dataset(str(k), data=str(v))
-
-
-def _read_meta_group(grp) -> dict:
-    out = {}
-    for k, v in grp.items():
-        if hasattr(v, "items"):
-            out[k] = _read_meta_group(v)
-            continue
-        val = v[()]
-        # h5py hands string datasets back as bytes — scalars AND arrays;
-        # the built-in reader decodes them — normalize both shapes so
-        # Cube.attrs content does not depend on which backend happened to
-        # read the file
-        if isinstance(val, bytes):
-            val = val.decode("utf-8", errors="replace")
-        elif isinstance(val, np.ndarray) and val.dtype.kind == "S":
-            val = [bytes(b).decode("utf-8", "replace") for b in val.ravel()]
-        out[k] = val
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -21,9 +21,10 @@ the assembly is Spark-first:
 - S8 buffer cache = write-once parquet with schema validation
   (loader.py:643-742) — Spark jobs replace the joblib process pool.
 
-The raw HDF5 → per-train DataFrame step runs on the engine's pure-Python
-HDF5 reader; everything downstream is also testable on synthetic
-per-train frames (FIXTURES.md F-3).
+The raw HDF5 → per-train frame step is
+:func:`sed_binning_spark.loaders.channels.channel_frames`, shared with
+the sxp loader, buffered or not; everything downstream is also testable
+on synthetic per-train frames (FIXTURES.md F-3).
 """
 
 from __future__ import annotations
@@ -32,54 +33,15 @@ from collections.abc import Sequence
 from functools import reduce
 from pathlib import Path
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sed_binning_spark.loaders.base import BaseLoader
-from sed_binning_spark.loaders.channels import (
-    aligned_array_pdf,
-    array_frame_schema,
-    first_reading_train_pdf,
-    read_channel,
-    train_frame_schema,
-)
+from sed_binning_spark.loaders.channels import channel_frames, union_frame_maps
+from sed_binning_spark.loaders.utils import map_files
 
 MULTI_INDEX = ("trainId", "pulseId", "electronId")
-
-
-def electron_frames_distributed(
-    spark,
-    paths: Sequence[str],
-    channels: dict[str, dict],
-) -> DataFrame:
-    """Per-electron channel extraction with one mapInPandas task per file:
-    executors read the bulky hit arrays straight from the raw bytes with
-    the built-in HDF5 reader; the driver never materializes event data.
-    Shared by the flash and sxp loaders (their channel specs differ only in
-    group_name/slice vs dataset_key/index_key addressing)."""
-    channels = {k: dict(v) for k, v in channels.items() if v["format"] == "per_electron"}
-    if not channels:
-        raise ValueError("no per_electron channels configured")
-    names = list(channels)
-
-    def _extract(batches):
-        from sed_binning_spark.io.hdf5_read import H5File
-        from sed_binning_spark.loaders.channels import aligned_array_pdf, read_channel
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                f = H5File(path)
-                chans = {n: read_channel(f, n, channels[n]) for n in names}
-                yield aligned_array_pdf(chans, "per-electron", context=path)
-
-    # round-robin: exactly one file per task (hashing on path leaves ~1/e
-    # of partitions empty and stragglers reading several files)
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string",
-    ).repartition(len(paths))
-    return paths_df.mapInPandas(_extract, array_frame_schema(names))
 
 
 def explode_per_electron(
@@ -302,10 +264,11 @@ class FlashLoader(BaseLoader):
     """S6: flash/sxp-style loader orchestration.
 
     ``read_dataframe`` assembles (electron_df, pulse_df, metadata) from
-    per-train channel frames. The HDF5 → per-train frame conversion
-    runs on the engine's pure-Python HDF5 reader
-    (:meth:`h5_to_train_frames`); tests and environments without
-    instrument files can still inject frames directly via ``train_frames``.
+    per-train channel frames, read from the raw files by
+    :func:`~sed_binning_spark.loaders.channels.channel_frames` (through
+    the parquet buffers when ``core.paths.data_parquet_dir`` is set);
+    tests and environments without instrument files can still inject
+    frames directly via ``train_frames``.
     """
 
     name = "flash"
@@ -348,9 +311,9 @@ class FlashLoader(BaseLoader):
                                     "TIME1.BUNCH_FIRST_INDEX.1/"},
     }
 
-    def _electron_frames_distributed(self, paths: list[str]) -> DataFrame:
-        channels = self.config.get("dataframe", {}).get("channels", self.DEFAULT_CHANNELS)
-        return electron_frames_distributed(self.spark, paths, channels)
+    def _channels(self) -> dict[str, dict]:
+        """The channel specs in use: ``dataframe.channels`` or the defaults."""
+        return self.config.get("dataframe", {}).get("channels", self.DEFAULT_CHANNELS)
 
     def _train_frames_buffered(
         self,
@@ -358,13 +321,15 @@ class FlashLoader(BaseLoader):
         parquet_dir: str,
         force_recreate: bool = False,
     ) -> dict[str, DataFrame]:
-        """Per-file parquet buffer cache around :meth:`h5_to_train_frames`:
-        one ``{stem}.{tag}.{key}.buffer.parquet`` per frame kind; on reuse
-        the set of buffer files defines which frame kinds exist, so the raw
-        HDF5 is never re-opened. The cache key carries a short digest of
-        the ABSOLUTE source path, not just the basename: two equally-named
-        files from different raw-data folders must not race each other's
-        overwrite or serve each other's events."""
+        """Per-file parquet buffer cache around
+        :func:`~sed_binning_spark.loaders.channels.channel_frames` (called
+        with this one file): one ``{stem}.{tag}.{key}.buffer.parquet`` per
+        frame kind; on reuse the set of buffer files defines which frame
+        kinds exist, so the raw HDF5 is never re-opened. The cache key
+        carries a short digest of the ABSOLUTE source path, not just the
+        basename: two equally-named files from different raw-data folders
+        must not race each other's overwrite or serve each other's
+        events."""
         import hashlib
 
         stem = Path(path).stem
@@ -396,7 +361,7 @@ class FlashLoader(BaseLoader):
                 return {
                     k: self.spark.read.parquet(str(buffer_paths[k])) for k in kinds
                 }
-        extracted = self.h5_to_train_frames(path)
+        extracted = channel_frames(self.spark, [path], self._channels())
         frames: dict[str, DataFrame] = {}
         for key, frame in extracted.items():
             bpath = buffer_paths[key]
@@ -410,76 +375,8 @@ class FlashLoader(BaseLoader):
         import hashlib
         import json
 
-        channels = self.config.get("dataframe", {}).get("channels", self.DEFAULT_CHANNELS)
-        blob = json.dumps(channels, sort_keys=True, default=str)
+        blob = json.dumps(self._channels(), sort_keys=True, default=str)
         return hashlib.md5(blob.encode()).hexdigest()
-
-    def h5_to_train_frames(
-        self,
-        path: str,
-        formats: Sequence[str] | None = None,
-    ) -> dict[str, DataFrame]:
-        """One raw stream file -> {"electron": ..., "pulse": ..., "aux": ...,
-        "train": ...} per-train frames via the engine's pure-Python HDF5
-        reader (the structures the reference reads through h5py,
-        sed/loader/flash/loader.py:617-742). Channel specs come from
-        ``config["dataframe"]["channels"]`` (reference config shape) with
-        the HEXTOF fixture layout as default. ``formats`` restricts which
-        channel formats are extracted (the distributed read pulls
-        per_electron data executor-side and the small per-pulse/train
-        frames driver-side)."""
-        import pandas as pd
-
-        from sed_binning_spark.io.hdf5_read import H5File
-
-        f = H5File(path)
-        channels = self.config.get("dataframe", {}).get("channels", self.DEFAULT_CHANNELS)
-        if formats is not None:
-            channels = {k: v for k, v in channels.items() if v["format"] in formats}
-
-        electron: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        pulse: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        train: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for name, ch in channels.items():
-            idx, val = read_channel(f, name, ch)
-            fmt = ch["format"]
-            if fmt == "per_electron":
-                electron[name] = (idx, val)
-            elif fmt == "per_pulse":
-                pulse[name] = (idx, val.reshape(val.shape[0], -1))
-            elif fmt == "per_train":
-                train[name] = (idx, val.reshape(val.shape[0], -1)[:, 0])
-            else:
-                raise ValueError(f"unknown channel format {fmt!r}")
-
-        frames: dict[str, DataFrame] = {}
-        if electron:
-            frames["electron"] = self.spark.createDataFrame(
-                aligned_array_pdf(electron, "per-electron", context=path),
-                schema=array_frame_schema(electron),
-            )
-        aux = pulse.pop("dldAux", None)
-        if aux is not None:
-            idx, val = aux
-            pdf = pd.DataFrame({"trainId": idx})
-            pdf["dldAux"] = list(val)
-            # repeated readbacks keep the first, like every train-indexed
-            # frame — a duplicate here would multiply joined event rows
-            pdf = pdf[~pdf["trainId"].duplicated(keep="first")]
-            frames["aux"] = self.spark.createDataFrame(
-                pdf, schema="trainId long, dldAux array<double>",
-            )
-        if pulse:
-            frames["pulse"] = self.spark.createDataFrame(
-                aligned_array_pdf(pulse, "per-pulse", context=path),
-                schema=array_frame_schema(pulse),
-            )
-        if train:
-            merged = first_reading_train_pdf(train)
-            frames["train"] = self.spark.createDataFrame(
-                merged, schema=train_frame_schema(merged.columns),
-            )
-        return frames
 
     def read_dataframe(
         self,
@@ -501,8 +398,8 @@ class FlashLoader(BaseLoader):
         """Assemble electron + pulse dataframes (flash/loader.py:744-837).
 
         Read modes follow the uniform contract (files/folders/runs resolve
-        instrument HDF5 paths; the byte-read then goes through
-        :meth:`h5_to_train_frames`, per-file frame dicts unioned per key).
+        instrument HDF5 paths, read by
+        :func:`~sed_binning_spark.loaders.channels.channel_frames`).
         Alternatively inject the extracted frames via ``train_frames``:
         {"electron": per-train df with hit arrays, "pulse": per-train df
         with per-pulse arrays (optional), "aux": per-train df with the
@@ -515,8 +412,7 @@ class FlashLoader(BaseLoader):
         else:
             if files is None and folders is None and runs is None:
                 raise ValueError(
-                    "provide files/folders/runs or inject train_frames "
-                    "(see h5_to_train_frames)",
+                    "provide files/folders/runs or inject train_frames",
                 )
             force_recreate = bool(kwds.pop("force_recreate", False))
             paths = self.resolve_paths(
@@ -530,45 +426,21 @@ class FlashLoader(BaseLoader):
             parquet_dir = (
                 self.config.get("core", {}).get("paths", {}).get("data_parquet_dir")
             )
-            # per-file conversions are independent; a small thread pool
-            # overlaps their driver-side HDF5 decode and lets concurrent
-            # Spark jobs (createDataFrame + parquet writes) pipeline through
-            # the scheduler instead of running strictly one file at a time
-            from concurrent.futures import ThreadPoolExecutor
-
-            n_workers = min(4, max(1, len(paths)))
-            from sed_binning_spark.loaders.channels import union_frame_maps
-
             if parquet_dir:
-                with ThreadPoolExecutor(n_workers) as ex:
-                    per_file = list(ex.map(
-                        lambda p: self._train_frames_buffered(
-                            p, parquet_dir, force_recreate,
-                        ),
-                        paths,
-                    ))
-                train_frames = union_frame_maps(per_file)
+                train_frames = union_frame_maps(map_files(
+                    lambda p: self._train_frames_buffered(p, parquet_dir, force_recreate),
+                    paths,
+                ))
             else:
-                # scale path: bulky per-electron hit arrays extract
-                # executor-side (one task per file); the small per-pulse /
-                # per-train frames read driver-side off header+small pages
-                with ThreadPoolExecutor(n_workers) as ex:
-                    per_file = list(ex.map(
-                        lambda p: self.h5_to_train_frames(
-                            p, formats=("per_pulse", "per_train"),
-                        ),
-                        paths,
-                    ))
-                train_frames = union_frame_maps(
-                    per_file,
-                    into={"electron": self._electron_frames_distributed(paths)},
-                )
+                train_frames = channel_frames(self.spark, paths, self._channels())
         conf = self.config.get("dataframe", {})
         if ubid_offset is None:
             ubid_offset = conf.get("ubid_offset", 0)
         if forward_fill_columns is None:
             forward_fill_columns = conf.get("forward_fill_columns")
 
+        if "electron" not in train_frames:
+            raise ValueError("no per_electron channels configured")
         frames: list[DataFrame] = []
         electron_src = train_frames["electron"]
         value_cols = [
@@ -591,9 +463,8 @@ class FlashLoader(BaseLoader):
             # channels or the built-in defaults — consulting only the
             # config would silently discard the extracted aux vector on a
             # default-config run)
-            active_channels = conf.get("channels", self.DEFAULT_CHANNELS)
             aux_channels = conf.get("aux_channels") or (
-                active_channels.get("dldAux", {}).get("dldAuxChannels", {})
+                self._channels().get("dldAux", {}).get("dldAuxChannels", {})
             )
             if not aux_channels:
                 raise ValueError(

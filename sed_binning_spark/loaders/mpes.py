@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sed_binning_spark.loaders.base import BaseLoader
-from sed_binning_spark.loaders.utils import natural_sort_key
+from sed_binning_spark.loaders.utils import natural_sort_key, one_task_per_file
 
 FILE_COLUMN = "file_id"
 ROW_COLUMN = "row_id"
@@ -502,12 +502,10 @@ class MpesLoader(BaseLoader):
                     yield tm if timed else ev
 
         def _per_file(fids):
-            # round-robin repartition: exactly one file per task. Hashing
-            # on file_id would collide ~1/e of the partitions empty and
-            # leave straggler tasks reading 2-3 files while cores idle.
-            return self.spark.createDataFrame(
-                [(i, paths[i]) for i in fids], f"{FILE_COLUMN} int, path string",
-            ).repartition(len(fids))
+            return one_task_per_file(
+                self.spark, [(i, paths[i]) for i in fids],
+                f"{FILE_COLUMN} int, path string",
+            )
 
         event_df = _per_file(range(len(paths))).mapInPandas(
             lambda b: _extract(b, False), plan.events_schema,

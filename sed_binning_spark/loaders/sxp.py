@@ -20,6 +20,9 @@ Everything is a per-row array-expression pipeline (filter/slice/transform
 over the hit arrays) feeding the shared flash assembly
 (:func:`sed_binning_spark.loaders.flash.explode_per_electron`) — one
 narrow projection + posexplode, no shuffle until the electronId window.
+The raw files are read by
+:func:`sed_binning_spark.loaders.channels.channel_frames`, the channel
+extraction the flash loader uses too.
 """
 
 from __future__ import annotations
@@ -30,7 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sed_binning_spark.loaders.base import BaseLoader
-from sed_binning_spark.loaders.flash import explode_per_electron
+from sed_binning_spark.loaders.channels import channel_frames
+from sed_binning_spark.loaders.flash import FlashLoader, explode_per_electron
 
 
 def _diff_lt(arr: Column, threshold: int) -> Column:
@@ -125,9 +129,11 @@ def chop_trains(
 class SXPLoader(BaseLoader):
     """S7 orchestration: chop + shared flash assembly.
 
-    The HDF5 channel extraction runs on the engine's pure-Python HDF5
-    reader (:meth:`h5_to_record_frames`); tests can still inject
-    per-record frames.
+    The raw files are read by
+    :func:`~sed_binning_spark.loaders.channels.channel_frames` with the
+    channel specs of ``config["dataframe"]["channels"]`` (reference config
+    shape: dataset_key/index_key), the SXP layout below by default; tests
+    can still inject per-record frames via ``record_frames``.
     """
 
     name = "sxp"
@@ -179,62 +185,6 @@ class SXPLoader(BaseLoader):
                       "dataset_key": "/INDEX/timestamp", "index_key": "/INDEX/trainId"},
     }
 
-    def h5_to_record_frames(
-        self,
-        path: str,
-        formats: Sequence[str] | None = None,
-    ) -> dict[str, DataFrame]:
-        """One RAW file -> {"electron": per-record frame, "train": ...} via
-        the engine's pure-Python HDF5 reader (the structures the reference
-        reads through h5py, sed/loader/sxp/loader.py:226-343). Channel specs
-        come from ``config["dataframe"]["channels"]`` (reference config
-        shape: dataset_key/index_key) with the SXP fixture layout as
-        default. ``formats`` restricts which channel formats extract."""
-        from sed_binning_spark.io.hdf5_read import H5File
-        from sed_binning_spark.loaders.channels import (
-            aligned_array_pdf,
-            array_frame_schema,
-            first_reading_train_pdf,
-            read_channel,
-            train_frame_schema,
-        )
-
-        f = H5File(path)
-        channels = self.config.get("dataframe", {}).get("channels", self.DEFAULT_CHANNELS)
-        if formats is not None:
-            channels = {k: v for k, v in channels.items() if v["format"] in formats}
-        electron: dict[str, tuple] = {}
-        pulse: dict[str, tuple] = {}
-        train: dict[str, tuple] = {}
-        for name, ch in channels.items():
-            idx, val = read_channel(f, name, ch)
-            if ch["format"] == "per_electron":
-                electron[name] = (idx, val)
-            elif ch["format"] == "per_pulse":
-                pulse[name] = (idx, val.reshape(val.shape[0], -1))
-            elif ch["format"] == "per_train":
-                train[name] = (idx, val.reshape(val.shape[0], -1)[:, 0])
-            else:
-                raise ValueError(f"unknown channel format {ch['format']!r}")
-
-        frames: dict[str, DataFrame] = {}
-        if electron:
-            frames["electron"] = self.spark.createDataFrame(
-                aligned_array_pdf(electron, "per-electron", context=path),
-                schema=array_frame_schema(electron),
-            )
-        if pulse:
-            frames["pulse"] = self.spark.createDataFrame(
-                aligned_array_pdf(pulse, "per-pulse", context=path),
-                schema=array_frame_schema(pulse),
-            )
-        if train:
-            merged = first_reading_train_pdf(train)
-            frames["train"] = self.spark.createDataFrame(
-                merged, schema=train_frame_schema(merged.columns),
-            )
-        return frames
-
     def read_dataframe(
         self,
         files=None,
@@ -267,34 +217,9 @@ class SXPLoader(BaseLoader):
                 files=files, folders=folders, runs=runs, ftype=ftype,
                 metadata=metadata, **kwds,
             )
-            # scale path: bulky per-record hit arrays extract executor-side;
-            # small per-train channels read driver-side off metadata pages
-            from sed_binning_spark.loaders.flash import electron_frames_distributed
-
-            channels = self.config.get("dataframe", {}).get(
-                "channels", self.DEFAULT_CHANNELS,
-            )
-            # overlap per-file driver reads like the flash path does —
-            # the HDF5 decode and per-file createDataFrame jobs pipeline
-            # through a small thread pool instead of running sequentially
-            from concurrent.futures import ThreadPoolExecutor
-
-            from sed_binning_spark.loaders.channels import union_frame_maps
-
-            with ThreadPoolExecutor(min(4, max(1, len(paths)))) as ex:
-                per_file = list(ex.map(
-                    lambda p: self.h5_to_record_frames(
-                        p, formats=("per_pulse", "per_train"),
-                    ),
-                    paths,
-                ))
-            record_frames = union_frame_maps(
-                per_file,
-                into={
-                    "electron": electron_frames_distributed(
-                        self.spark, paths, channels,
-                    ),
-                },
+            record_frames = channel_frames(
+                self.spark, paths,
+                self.config.get("dataframe", {}).get("channels", self.DEFAULT_CHANNELS),
             )
         conf = self.config.get("dataframe", {})
         if ubid_offset is None:
@@ -304,6 +229,8 @@ class SXPLoader(BaseLoader):
         if num_pulses is None:
             num_pulses = conf.get("num_pulses", 0)
 
+        if "electron" not in record_frames:
+            raise ValueError("no per_electron channels configured")
         electron_src = record_frames["electron"]
         value_cols = [
             c for c in electron_src.columns
@@ -316,8 +243,6 @@ class SXPLoader(BaseLoader):
             num_trains=num_trains,
             num_pulses=num_pulses,
         )
-        from sed_binning_spark.loaders.flash import FlashLoader
-
         frames = dict(record_frames)
         frames["electron"] = chopped
         loader = FlashLoader(self.spark, self.config)

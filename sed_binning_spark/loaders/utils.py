@@ -1,7 +1,9 @@
 """Loader utilities (reference: sed/loader/utils.py).
 
-File discovery with natural sort and slicing (S2), and the bitwise channel
-split used to demux sectorID from TOF steps (M8).
+File discovery with natural sort and slicing (S2), the per-file
+parallelism every raw-file reader shares (one file per Spark task, a few
+files at a time on the driver), and the bitwise channel split used to
+demux sectorID from TOF steps (M8).
 """
 
 from __future__ import annotations
@@ -9,7 +11,8 @@ from __future__ import annotations
 import glob
 import os
 import re
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -53,6 +56,22 @@ def gather_files(
     if f_start is not None and f_end is not None:
         files = files[slice(f_start, f_end, f_step)]
     return files
+
+
+def one_task_per_file(spark, rows: list, schema: str) -> DataFrame:
+    """One row per file, one file per task: ``createDataFrame`` then a
+    round-robin repartition to ``len(rows)`` partitions. Hashing on a key
+    would leave ~1/e of the partitions empty and straggler tasks reading
+    two or three files while cores idle."""
+    return spark.createDataFrame(rows, schema).repartition(len(rows))
+
+
+def map_files(fn: Callable, paths: Sequence[str]) -> list:
+    """``[fn(p) for p in paths]`` on up to 4 driver threads, so per-file
+    HDF5 reads and the Spark jobs they submit overlap instead of running
+    one file at a time."""
+    with ThreadPoolExecutor(min(4, max(1, len(paths)))) as ex:
+        return list(ex.map(fn, paths))
 
 
 def split_channel_bitwise(

@@ -91,10 +91,11 @@ def test_flash_loader_reads_real_instrument_file(spark):
 
 
 @needs["flash"]
-def test_flash_buffer_cache_skips_reextraction(spark, tmp_path):
+def test_flash_buffer_cache_skips_reextraction(spark, tmp_path, monkeypatch):
     """S8: first read converts the raw file to parquet buffers; the second
     read serves entirely from them (the HDF5 is never re-opened — proven by
     breaking the extractor)."""
+    from sed_binning_spark.loaders import flash
     from sed_binning_spark.loaders.flash import FlashLoader
 
     config = {"core": {"paths": {"data_parquet_dir": str(tmp_path)}}}
@@ -104,7 +105,7 @@ def test_flash_buffer_cache_skips_reextraction(spark, tmp_path):
     assert any(p.name.endswith(".buffer.parquet") for p in tmp_path.iterdir())
 
     second = FlashLoader(spark, config=config)
-    second.h5_to_train_frames = None  # any re-extraction would crash
+    monkeypatch.setattr(flash, "channel_frames", None)  # re-extraction would crash
     e2, _, _ = second.read_dataframe(files=[FLASH_FX])
     assert e2.count() == n1 == 102400
 
@@ -119,10 +120,11 @@ def test_flash_loader_accepts_reference_facility_config(spark):
     conf = yaml.safe_load(
         open("/root/reference/tests/data/loader/flash/config.yaml"),
     )
+    from sed_binning_spark.loaders.channels import channel_frames
     from sed_binning_spark.loaders.flash import FlashLoader
 
     loader = FlashLoader(spark, config={"dataframe": conf["dataframe"]})
-    frames = loader.h5_to_train_frames(FLASH_FX)
+    frames = channel_frames(spark, [FLASH_FX], conf["dataframe"]["channels"])
     assert set(frames) == {"electron", "pulse", "aux", "train"}
     assert set(frames["pulse"].columns) == {"trainId", "gmdTunnel"}
     assert set(frames["train"].columns) == {"trainId", "timeStamp", "delayStage"}
@@ -497,9 +499,10 @@ def test_extract_bias_from_real_file():
 
 
 @needs["flash"]
-def test_flash_buffer_cache_invalidated_by_config_change(spark, tmp_path):
+def test_flash_buffer_cache_invalidated_by_config_change(spark, tmp_path, monkeypatch):
     """Buffers built under a different channel config must be re-extracted,
     not silently served without the newly configured columns."""
+    from sed_binning_spark.loaders import flash
     from sed_binning_spark.loaders.flash import FlashLoader
 
     config = {"core": {"paths": {"data_parquet_dir": str(tmp_path)}}}
@@ -508,7 +511,8 @@ def test_flash_buffer_cache_invalidated_by_config_change(spark, tmp_path):
 
     # same config -> cache hit (extractor never called)
     cached = FlashLoader(spark, config=config)
-    cached.h5_to_train_frames = None
+    orig = flash.channel_frames
+    monkeypatch.setattr(flash, "channel_frames", None)
     cached.read_dataframe(files=[FLASH_FX])
 
     # changed channel spec (one channel removed) -> fingerprint mismatch
@@ -521,8 +525,10 @@ def test_flash_buffer_cache_invalidated_by_config_change(spark, tmp_path):
         "dataframe": {"channels": trimmed},
     })
     calls = []
-    orig = changed.h5_to_train_frames
-    changed.h5_to_train_frames = lambda p, **kw: calls.append(p) or orig(p, **kw)
+    monkeypatch.setattr(
+        flash, "channel_frames",
+        lambda spark, paths, ch: calls.append(paths) or orig(spark, paths, ch),
+    )
     electron, _, _ = changed.read_dataframe(files=[FLASH_FX])
     assert calls, "config change must trigger re-extraction"
     assert "dldPosX" in electron.columns

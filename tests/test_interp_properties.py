@@ -2,12 +2,10 @@
 arbitrary (timestamp, value) series — one point, repeated timestamps,
 wide or narrow spans — every event gets exactly ``np.interp`` of its
 timestamp, bit for bit: clamped to the end values below the first and
-above the last timestamp. A NULL timestamp reaches ``np.interp`` as NaN,
-and wherever ``np.interp`` returns NaN the event gets NULL: the Arrow
-crossing back from the pandas_udf turns NaN into NULL. So NaN and NULL
-timestamps give NULL, except over a one-point series, where
-``np.interp`` returns the point's value for every timestamp, NaN
-included. A JVM form of the interpolation must keep all of this."""
+above the last timestamp. NaN and NULL timestamps give NULL for every
+series length, a one-point series included (where ``np.interp`` alone
+returns the point's value for every timestamp, NaN included). A JVM
+form of the interpolation must keep all of this."""
 
 from __future__ import annotations
 
@@ -62,9 +60,10 @@ def test_add_time_stamped_data_matches_np_interp(spark, case):
 
     probe = np.array([np.nan if t is None else t for t in ts])
     want = np.interp(probe, np.array(xs, dtype=float), np.array(ys, dtype=float))
-    null = np.isnan(want)
-    assert null[np.isnan(probe)].all() == (len(xs) > 1)
-    assert got.is_null().to_numpy(zero_copy_only=False).tolist() == null.tolist()
+    got_null = got.is_null().to_numpy(zero_copy_only=False)
+    assert got_null[np.isnan(probe)].all()
+    null = np.isnan(want) | np.isnan(probe)
+    assert got_null.tolist() == null.tolist()
     got_vals = got.drop_null().to_numpy()
     np.testing.assert_array_equal(got_vals.view(np.int64), want[~null].view(np.int64))
     # clamping, spelled out: every probe outside the series takes an end value

@@ -78,9 +78,9 @@ def test_save_dispatch(tmp_path):
 
 
 def test_h5_round_trip(tmp_path):
-    """K2 .h5 round trip works with OR without h5py (the engine carries its
-    own classic-format writer/reader): data, axis names/coords, and the
-    recursive metadata tree survive."""
+    """K2 .h5 round trip on the engine's own classic-format writer and
+    reader: data, axis names/coords, and the recursive metadata tree
+    survive."""
     c = _cube((4, 4), ("X", "Y"))
     c.attrs.update({"jitter": {"amplitude": 0.5, "mode": "uniform"}, "n": 3})
     save(c, tmp_path / "a.h5")

@@ -122,8 +122,7 @@ def instrument_tree(tmp_path):
     ],
 )
 def test_instrument_run_resolution(loader_name, subdir, run, expected, instrument_tree, spark):
-    """one_run / runs modes resolve the facility naming schemes; the
-    byte-read then stops at the documented h5py gate."""
+    """one_run / runs modes resolve the facility naming schemes."""
     loader = get_loader(loader_name, spark)
     folder = str(instrument_tree / subdir)
     paths = loader.resolve_paths(runs=run, folders=folder)

@@ -120,17 +120,16 @@ def test_sxp_per_pulse_channels_extract(spark, tmp_path):
     """A per_pulse channel in the sxp config must extract into a 'pulse'
     frame, not crash with 'unknown channel format'."""
     from sed_binning_spark.io.hdf5_write import H5Writer
-    from sed_binning_spark.loaders.sxp import SXPLoader
+    from sed_binning_spark.loaders.channels import channel_frames
 
     w = H5Writer()
     w.add_dataset("/idx", np.arange(3, dtype="<i8"))
     w.add_dataset("/vals", np.arange(6, dtype="<f8").reshape(3, 2))
     p = tmp_path / "r.h5"
     w.write(str(p))
-    loader = SXPLoader(spark, config={"dataframe": {"channels": {
+    frames = channel_frames(spark, [str(p)], {
         "gmd": {"format": "per_pulse", "index_key": "/idx", "dataset_key": "/vals"},
-    }}})
-    frames = loader.h5_to_record_frames(str(p), formats=("per_pulse",))
+    })
     pdf = frames["pulse"].toPandas()
     assert list(pdf["trainId"]) == [0, 1, 2]
     assert list(pdf["gmd"][0]) == [0.0, 1.0]
