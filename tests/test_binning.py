@@ -363,7 +363,7 @@ def test_routing_probe_skips_tiny_inputs(spark, tmp_path):
     the bin spec is also small: a small parquet scan (far below
     _ROUTE_PROBE_MIN_BYTES) returns None from the cheap estimate, so
     _choose_combine takes the shuffle plan without touching the data.
-    When the cell space is HUGE (>= _SPILL_MIN_ROWS), the r15 router pays
+    When the cell space is HUGE (>= _ROUTE_PROBE_MIN_CELLS), the router pays
     exactly one memoized pruned-count job instead, because a tiny input
     over a huge cell space belongs on the small-rows driver route."""
     from sed_binning_spark.binning import binning as binning_mod
@@ -384,12 +384,13 @@ def test_routing_probe_skips_tiny_inputs(spark, tmp_path):
     try:
         # small cell space: no probe job
         assert binning_mod._cheap_row_estimate(df) is None
-        assert binning_mod._choose_combine(df, 10**4) == ("shuffle", None)
+        assert binning_mod._choose_combine(df, 10**4) == "shuffle"
         assert calls == []
         # huge cell space: one probe count, memoized across repeats
         binning_mod._ROUTE_COUNT_CACHE.clear()
-        assert binning_mod._choose_combine(df, 10**8) == ("driver", 1000)
-        assert binning_mod._choose_combine(df, 10**8) == ("driver", 1000)
+        assert binning_mod._choose_combine(df, 10**8) == "driver"
+        assert binning_mod._choose_combine(df, 10**8) == "driver"
+        assert binning_mod._cheap_row_estimate(df, 10**8) == 1000
         assert calls == [1]
     finally:
         cls.count = orig
@@ -501,54 +502,34 @@ def test_routing_counts_a_pruned_python_stage(spark):
 
         leaf = spark.range(1000).mapInPandas(ident, "id long")
         assert binning_mod._cheap_row_estimate(leaf, 10**8) is None
-        assert binning_mod._choose_combine(leaf, 10**8) == ("shuffle", None)
+        assert binning_mod._choose_combine(leaf, 10**8) == "shuffle"
     finally:
         binning_mod._ROUTE_COUNT_CACHE.clear()
         base.unpersist()
 
 
-def _route(monkeypatch, strategy, rows=None):
-    """Make routing pick ``strategy`` with row estimate ``rows`` for every
-    call until the test ends, as _choose_combine does for an input it can
-    (driver) or cannot (shuffle) count."""
+def _route(monkeypatch, strategy):
+    """Make routing pick ``strategy`` for every call until the test ends,
+    as _choose_combine does for an input it can (driver) or cannot
+    (shuffle) count."""
     from sed_binning_spark.binning import binning as binning_mod
 
-    monkeypatch.setattr(binning_mod, "_choose_combine",
-                        lambda df, n_cells: (strategy, rows))
+    monkeypatch.setattr(binning_mod, "_choose_combine", lambda df, n_cells: strategy)
 
 
-def _bin_routed(df, strategy, rows=None, **kw):
+def _bin_routed(df, strategy, **kw):
     """bin_dataframe with routing forced for this one call."""
     with pytest.MonkeyPatch.context() as mp:
-        _route(mp, strategy, rows)
+        _route(mp, strategy)
         return bin_dataframe(df, **kw)
-
-
-def _fake_cluster_without_scratch(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
-    monkeypatch.setattr(spark.sparkContext, "master", "spark://fake-cluster:7077")
-
-
-def test_spill_fallback_warns_on_cluster_without_scratch(spark, monkeypatch):
-    """On a non-local master with no SPARK_GRAFT_SCRATCH_DIR a hand-off
-    bounded above the spill threshold silently degrades to the
-    single-socket Arrow collect — it must say so, naming the env var."""
-    from sed_binning_spark.binning.binning import _SPILL_MIN_ROWS, _hand_off
-
-    _fake_cluster_without_scratch(spark, monkeypatch)
-    df = spark.range(10).selectExpr("CAST(id AS INT) AS cell")
-    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_SCRATCH_DIR"):
-        rows = _hand_off(df, _SPILL_MIN_ROWS + 1, lambda part: part.num_rows)
-    assert sum(rows) == 10
 
 
 def test_small_rows_driver_route_matches_shuffle(spark):
     """The r15 small-rows dense route (rows << prod(bins): direct Arrow
-    collect + sparse unique-scatter, no spill job, no dense accumulator)
-    must produce the same cube as the shuffle plan, including NULL /
-    out-of-range rejects. A cached input has exact rowCount stats, so the
-    auto-router both picks the driver strategy (rows < cells x dedup limit
-    is moot here — force it) and hands the estimate to the histogram."""
+    collect + sparse unique-scatter, no dense accumulator) must produce
+    the same cube as the shuffle plan, including NULL / out-of-range
+    rejects. A cached input has exact rowCount stats, so the auto-router
+    picks the driver strategy on its own."""
     import pandas as pd
 
     from sed_binning_spark.binning import binning as binning_mod
@@ -570,8 +551,8 @@ def test_small_rows_driver_route_matches_shuffle(spark):
         cached.count()
         binning_mod.LAST_RUN_INFO.clear()
         driver = bin_dataframe(cached, **kw)
-        # the route must actually have taken the socket collect
-        # (est_rows 20003 <= _SPILL_MIN_ROWS and rows < cells * 32)
+        # the router must have taken the driver route on its own
+        # (20003 rows < 200k cells * 32) and collected over the socket
         assert binning_mod.LAST_RUN_INFO.get("strategy") == "driver"
         assert "small_collect_s" in binning_mod.LAST_RUN_INFO
         np.testing.assert_array_equal(shuffle.data, driver.data)
@@ -580,8 +561,8 @@ def test_small_rows_driver_route_matches_shuffle(spark):
         cached.unpersist()
 
 
-def test_driver_combine_matches_shuffle_combine(spark, monkeypatch):
-    """The driver-route spill histogram must produce the same cube as the
+def test_driver_combine_matches_shuffle_combine(spark):
+    """The driver-route histogram must produce the same cube as the
     shuffle plan, including NULL/out-of-range rejects (the sentinel cell)
     and values spread over every thread range."""
     import pandas as pd
@@ -597,82 +578,71 @@ def test_driver_combine_matches_shuffle_combine(spark, monkeypatch):
     kw = dict(bins=[40, 13], axes=["a", "b"],
               ranges=[(0.0, 20.0), (0.0, 6.0)])
     shuffle = _bin_routed(df, "shuffle", **kw)
-    monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 1000)
-    driver = _bin_routed(df, "driver", 50_003, **kw)
-    assert "spill_write_s" in binning_mod.LAST_RUN_INFO
+    driver = _bin_routed(df, "driver", **kw)
+    assert "small_collect_s" in binning_mod.LAST_RUN_INFO
     np.testing.assert_array_equal(shuffle.data, driver.data)
     assert float(driver.data.sum()) > 0
 
 
-def test_driver_combine_without_scratch_matches_shuffle(spark, monkeypatch):
-    """On a non-local master with no SPARK_GRAFT_SCRATCH_DIR the driver
-    combine takes its single-socket Arrow source: it must say so, naming
-    the env var, and still give the shuffle plan's cube, including NULL /
-    out-of-range rejects."""
+def test_driver_route_sorts_one_slice_per_thread(spark, monkeypatch):
+    """A result that arrives as dozens of Arrow batches still reaches the
+    kernel as at most one sorted slice per driver thread, never one slice
+    per batch. The collected select's plan holds no Spark sort, the slices
+    hold every row between them, and the cube equals np.histogramdd."""
     import pandas as pd
 
     from sed_binning_spark.binning import binning as binning_mod
 
-    rng = np.random.default_rng(29)
-    pdf = pd.DataFrame({
-        "a": np.concatenate([rng.uniform(-5, 25, 30_000), [np.nan, -100.0, 1e9]]),
-        "b": np.concatenate([rng.uniform(0, 7, 30_000), [1.0, np.nan, 3.0]]),
-    })
-    df = spark.createDataFrame(pdf).repartition(5)
-    kw = dict(bins=[40, 13], axes=["a", "b"],
-              ranges=[(0.0, 20.0), (0.0, 6.0)])
-    shuffle = _bin_routed(df, "shuffle", **kw)
-
-    monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 1000)
-    _fake_cluster_without_scratch(spark, monkeypatch)
-    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_SCRATCH_DIR"):
-        driver = _bin_routed(df, "driver", 30_003, **kw)
-    np.testing.assert_array_equal(shuffle.data, driver.data)
-    assert float(driver.data.sum()) > 0
-
-
-def test_spill_route_sorts_slices_on_the_driver(spark, monkeypatch):
-    """The spill route runs no Spark sort: the spilled select's physical
-    plan holds no Sort node, and every slice that reaches the kernel is
-    already sorted, so the kernel never takes its fallback sort. The cube
-    equals the shuffle plan's."""
-    from pyspark.sql import functions as F
-
-    from sed_binning_spark.binning import binning as binning_mod
-
-    df = spark.range(300_000, numPartitions=5).select(
-        (F.rand(51) * 24 - 2).alias("a"), (F.rand(52) * 7).alias("b"))
+    rng = np.random.default_rng(71)
+    n = 50_000
+    a = rng.uniform(-3, 23, n)
+    b = rng.uniform(-1, 7, n)
+    a[::101] = np.nan
+    b[::89] = 1e9
+    pdf = pd.DataFrame({"a": a, "b": b})
     kw = dict(bins=[90, 70], axes=["a", "b"], ranges=[(0.0, 20.0), (0.0, 6.0)])
-    want = _bin_routed(df, "shuffle", **kw).data
-    plans, kernel_input = [], []
-    hand_off = binning_mod._hand_off
+    want = _np_hist(pdf[pdf.a.notna()], kw["axes"], kw["bins"], kw["ranges"])
+    df = spark.createDataFrame(pdf).repartition(5)
+
+    plans, batches, kernel_input = [], [], []
+    collect = binning_mod._collect
     kernel = binning_mod._sorted_slices_histogram
 
-    def spying_hand_off(sel, bound, take):
+    def spying_collect(sel):
         plans.append(sel._jdf.queryExecution().executedPlan().toString())
-        return hand_off(sel, bound, take)
+        tbl = collect(sel)
+        batches.append(tbl.column("cell").num_chunks)
+        return tbl
 
     def spying_kernel(slices, n_cells):
         kernel_input.extend(slices)
         return kernel(slices, n_cells)
 
-    monkeypatch.setattr(binning_mod, "_hand_off", spying_hand_off)
+    monkeypatch.setattr(binning_mod, "_collect", spying_collect)
     monkeypatch.setattr(binning_mod, "_sorted_slices_histogram", spying_kernel)
-    monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 1000)
-    driver = _bin_routed(df, "driver", 300_000, **kw)
-    assert "spill_write_s" in binning_mod.LAST_RUN_INFO
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        cube = _bin_routed(df, "driver", **kw)
+    finally:
+        spark.conf.set(key, old)
+
+    assert batches and batches[0] >= 24, batches
     assert len(plans) == 1 and "Sort [" not in plans[0], plans
-    assert sum(s.size for s in kernel_input) == 300_000 and len(kernel_input) > 1
+    assert 0 < len(kernel_input) <= min(binning_mod._driver_threads(), n)
+    assert all(s.size for s in kernel_input)
     assert all(bool(np.all(s[:-1] <= s[1:])) for s in kernel_input)
-    np.testing.assert_array_equal(driver.data, want)
+    assert sum(s.size for s in kernel_input) == n
+    np.testing.assert_array_equal(cube.data, want.astype(np.float32))
 
 
 def test_concurrent_driver_combines_match_serial(spark, monkeypatch):
     """Two threads binning their own frames on the driver route at the same
     time must each get the cube a serial call gives: the dense path's
-    buffers belong to one call at a time. A barrier at each call's listing
-    of its spill directory holds both until their spill writes are done,
-    so the read-back and histogram phases overlap."""
+    buffers belong to one call at a time. A barrier after each call's
+    socket collect holds both until both collects are done, so the
+    sort and histogram phases overlap."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
@@ -689,34 +659,44 @@ def test_concurrent_driver_combines_match_serial(spark, monkeypatch):
         .cache()
         for n, seed in ((500_000, 41), (400_000, 43))
     ]
-    _route(monkeypatch, "driver", 500_000)
-    monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 1000)
+    _route(monkeypatch, "driver")
     try:
         for f in frames:
             f.count()
         serial = [bin_dataframe(f, **kw).data for f in frames]
         assert not np.array_equal(serial[0], serial[1])
 
-        orig = binning_mod.os.listdir
+        collect = binning_mod._collect
+        kernel = binning_mod._sorted_slices_histogram
         held = threading.local()
-        listed = []
+        hits, events = [], []
 
-        def listing(path):
-            if "sed-binning-spill-" in str(path) and not getattr(held, "done", False):
+        def collecting(sel):
+            tbl = collect(sel)
+            if not getattr(held, "done", False):
                 held.done = True
-                listed.append(path)
+                hits.append(sel)
+                events.append("collected")
                 barrier.wait()
-            return orig(path)
+            return tbl
 
-        monkeypatch.setattr(binning_mod.os, "listdir", listing)
+        def histogram(slices, n_cells):
+            events.append("kernel")
+            return kernel(slices, n_cells)
+
+        monkeypatch.setattr(binning_mod, "_collect", collecting)
+        monkeypatch.setattr(binning_mod, "_sorted_slices_histogram", histogram)
         for _ in range(2):
             barrier = threading.Barrier(2, timeout=120)
+            events.clear()
             with ThreadPoolExecutor(2) as ex:
                 futs = [ex.submit(bin_dataframe, f, **kw) for f in frames]
                 cubes = [fut.result().data for fut in futs]
             for got, want in zip(cubes, serial):
                 np.testing.assert_array_equal(got, want)
-        assert len(listed) == 4
+            assert events[:2] == ["collected", "collected"], events
+            assert events.count("kernel") == 2, events
+        assert len(hits) == 4
     finally:
         for f in frames:
             f.unpersist()
@@ -745,40 +725,23 @@ def _routed_events(spark):
     return spark.createDataFrame(pdf).repartition(4), kw, per_file
 
 
-@pytest.mark.parametrize("source", ["socket", "spill", "no_scratch"])
+@pytest.mark.parametrize("source", ["socket"])
 @pytest.mark.parametrize("route", ["driver", "shuffle", "shuffle_partitions"])
 def test_every_route_matches_numpy_from_every_source(spark, monkeypatch, route, source):
-    """Each route gives np.histogramdd's cube from each hand-off source:
-    the Arrow socket, the parquet spill, and the socket a cluster without
-    shared scratch falls back to (with its warning). A low spill
-    threshold sends these small frames to every source."""
-    import warnings
-
+    """Each route gives np.histogramdd's cube from the one hand-off
+    source, the Arrow result socket."""
     from sed_binning_spark.binning import binning as binning_mod
 
     df, kw, per_file = _routed_events(spark)
-    if route == "driver":
-        _route(monkeypatch, "driver", df.count())
-    elif route == "shuffle":
-        _route(monkeypatch, "shuffle")
-    else:
+    if route == "shuffle_partitions":
         kw["return_partitions"] = True
-    if source != "socket":
-        monkeypatch.setattr(binning_mod, "_SPILL_MIN_ROWS", 10)
-    if source == "no_scratch":
-        _fake_cluster_without_scratch(spark, monkeypatch)
-        with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_SCRATCH_DIR"):
-            cube = bin_dataframe(df, **kw)
     else:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            cube = bin_dataframe(df, **kw)
-        assert not [w for w in caught if "SPARK_GRAFT_SCRATCH_DIR" in str(w.message)]
+        _route(monkeypatch, route)
+    cube = bin_dataframe(df, **kw)
 
     info = binning_mod.LAST_RUN_INFO
     assert info["strategy"] == route.split("_")[0]
-    assert ("spill_write_s" in info) == (source == "spill")
-    assert ("small_collect_s" in info) == (source != "spill")
+    assert "small_collect_s" in info
     if route == "shuffle_partitions":
         assert cube.dims[-1] == "df_part"
         np.testing.assert_array_equal(cube.coords["df_part"], [0, 1, 2])
